@@ -303,15 +303,6 @@ object Mixing {
         -- sources.map(s2 => s"cursor:$s2")
         -- sources.map(s2 => s"wrapped:$s2"))
 
-  /** Pad (or trim) a candidate pool to exactly `batch` rows by cycling the
-    * seeded-ordered pool (`pad_with_reuse`). Input needs `id`; emits
-    * (`i`, `id`) for i in [0, batch).
-    *
-    * Scale shape: when the pool covers the batch (the normal case) only the
-    * first `batch` rows in seeded order matter — `orderBy(..).limit(batch)`
-    * is a distributed per-partition top-k (TakeOrderedAndProject), no
-    * global window, no pool-sized broadcast. The cycling path only runs
-    * when the pool is SMALLER than one batch, i.e. trivially tiny. */
   /** The reference's smooth weighted-round-robin drain ORDER
     * (src/ingestion.rs:607-675), exactly: per draw, every ELIGIBLE source
     * (positive weight, non-empty buffer) gains its weight of credit; the
@@ -364,6 +355,20 @@ object Mixing {
     out.result()
   }
 
+  /** Pad (or trim) a candidate pool to exactly `batch` rows by cycling the
+    * seeded-ordered pool (`pad_with_reuse`). Input needs `id`; emits
+    * (`i`, `id`) for i in [0, batch) — no rows for an empty pool.
+    *
+    * This is the corpus-scale form, used by q45 whose candidates are a
+    * filtered documents table. The sampler's batches pad on the driver
+    * with [[padSlots]], its scalar twin, because their candidates are
+    * already-collected rows.
+    *
+    * Scale shape: when the pool covers the batch (the normal case) only the
+    * first `batch` rows in seeded order matter — `orderBy(..).limit(batch)`
+    * is a distributed per-partition top-k (TakeOrderedAndProject), no
+    * global window, no pool-sized broadcast. The cycling path only runs
+    * when the pool is SMALLER than one batch, i.e. trivially tiny. */
   def padToBatch(spark: SparkSession, cands: DataFrame, batch: Int, seed: String): DataFrame = {
     // both the count and the chosen branch evaluate the pool plan — persist
     // it for the call so a pool derived from heavy upstream work is
@@ -388,5 +393,18 @@ object Mixing {
         .join(broadcast(ranked), pmod(col("i"), lit(nc)) === col("rn"))
         .select(col("i"), ranked("id"))
     }
+  }
+
+  /** [[padToBatch]] over driver-side candidate ids: (`i`, `id`) for i in
+    * [0, batch), ids in (`Determinism.jvmHash(s"$seed:$id")`, id) order —
+    * the scalar twin of the `seeded` sort key. The first `batch` when
+    * there are enough, otherwise slot i reuses `ranked(i % nc)`; no slots
+    * when there are no candidates, as the plan's `pmod(i, 0)` is null. */
+  def padSlots(ids: Seq[Long], batch: Int, seed: String): Seq[(Long, Long)] = {
+    val ranked = ids.map(id => (Determinism.jvmHash(s"$seed:$id"), id)).sorted
+      .map(_._2).toIndexedSeq
+    val nc = ranked.size
+    if (nc == 0) Nil
+    else (0 until batch).map(i => (i.toLong, ranked(i % nc)))
   }
 }

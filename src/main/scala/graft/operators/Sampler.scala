@@ -1,21 +1,24 @@
 package graft.operators
 
 import graft.core.Determinism
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+import scala.jdk.CollectionConverters._
 
 /** One composed sampler batch: `core` is the per-draw stream BEFORE the
   * batch-local stages (rejection/dedup/pad) — keyed by the global draw
   * counter, it is invariant to how draws are grouped into batches; `rows`
-  * is the delivered batch (exactly `batch` rows, slot column `i`); `state`
+  * is the delivered batch (exactly `batch` rows, slot column `slot`); `state`
   * resumes the sequence.
   *
-  * `rows` is LAZY: the pad-to-batch stage schedules its own count action,
-  * so consumers of the core stream alone (analytics over the pre-pad
-  * draws — every composed oracle query) never pay the padding jobs. First
-  * access builds the plan once; values are identical to the former eager
-  * field (the pad is a pure function of the deduped stream + counters). */
+  * The sampler's entry points return `core` and `rows` as driver-local
+  * relations: the batch tail (rejection, seen-set dedup, pad) runs in
+  * Scala over core rows already on the driver, so collecting either runs
+  * no Spark job. `rows` is lazy — built on first access, once — so
+  * consumers of the core stream alone (every composed oracle query) skip
+  * the pad; it is a pure function of the core stream and the counters. */
 final class SamplerBatch(val core: DataFrame, mkRows: () => DataFrame,
     val state: SamplerState, statsCore: Option[DataFrame] = None) {
   lazy val rows: DataFrame = mkRows()
@@ -31,13 +34,15 @@ final class SamplerBatch(val core: DataFrame, mkRows: () => DataFrame,
     * core (`statsCore` — each pair draw derives from exactly one triplet
     * draw, so the negative-tier counters are the triplet core's); text
     * cores carry no negative lane. Semantics oracle-pinned by q142. */
-  lazy val laneStats: DataFrame = {
+  lazy val laneStats: DataFrame =
+    laneSource.groupBy(col("recipe"), col("reason"), col("lane"))
+      .agg(count(lit(1)).cast("long").as("n"))
+
+  private[operators] def laneSource: DataFrame = {
     val src = statsCore.getOrElse(core)
     require(src.columns.contains("lane"),
       "laneStats is the triplet driver's report (text cores carry no negative lane)")
-    import org.apache.spark.sql.functions.{col, count, lit}
-    src.groupBy(col("recipe"), col("reason"), col("lane"))
-      .agg(count(lit(1)).cast("long").as("n"))
+    src
   }
 }
 object SamplerBatch {
@@ -60,17 +65,16 @@ object SamplerBatch {
 final class ExtendedMetrics {
   private val acc =
     scala.collection.mutable.Map.empty[(String, String, String), Long]
-  /** Fold one drawn batch's lane report into the running totals. The
-    * lane-report collect is a full Spark job, so it runs OUTSIDE the
-    * monitor — a concurrent `totals` reader (or another `add`) must not
-    * block for the duration of a job; only the driver-side fold of the
-    * already-collected handful of rows is serialized. */
+  /** Fold one drawn batch's lane report into the running totals: one
+    * count per core row, on the driver. A sampler core is a driver-local
+    * relation, so the collect runs no Spark job; only the fold is
+    * serialized. */
   def add(b: SamplerBatch): this.type = {
-    val rows = b.laneStats.collect()
+    val rows = b.laneSource.select(col("recipe"), col("reason"), col("lane")).collect()
     synchronized {
       rows.foreach { r =>
         val k = (r.getString(0), r.getString(1), r.getString(2))
-        acc(k) = acc.getOrElse(k, 0L) + r.getLong(3)
+        acc(k) = acc.getOrElse(k, 0L) + 1L
       }
     }
     this
@@ -109,10 +113,12 @@ final class ExtendedMetrics {
   * `isin` PREDICATE over the batch's id list (≤ 2×batch longs), which
   * pushes below the chunk table's window/explode derivation to the record
   * scan — chunking cost per batch is ∝ batch size, not corpus size (a
-  * broadcast join could not push through the Generate). Everything
-  * downstream — selector windows, negative rank-pick, dedup, pad — runs
-  * on batch-bounded frames. No collect of record data; the driver holds
-  * only counters and the slot schedule.
+  * broadcast join could not push through the Generate). The selector
+  * windows and the negative rank-pick run on batch-bounded frames; the
+  * core join, rejection, dedup and pad run in Scala on the driver over
+  * the batch's core rows (ids, window indices, text hashes). No collect
+  * of record text; the driver holds counters, the slot schedule and
+  * those few×batch core rows.
   */
 object Sampler {
 
@@ -145,10 +151,37 @@ object Sampler {
     * ≤ few×batch-row frames (the slot-schedule scale the driver already
     * holds — the counters-and-schedule contract); corpus-scale frames
     * (pool, rank sidecar, chunk tables) stay executor-side checkpoints. */
-  private def localRelation(spark: SparkSession, df: DataFrame): DataFrame = {
-    import scala.jdk.CollectionConverters._
-    spark.createDataFrame(df.collect().toSeq.asJava, df.schema)
+  private def localRelation(spark: SparkSession, df: DataFrame): DataFrame =
+    localRows(spark, df.collect().toSeq, df.schema)
+
+  private def localRows(spark: SparkSession, rows: Seq[Row], schema: StructType): DataFrame =
+    spark.createDataFrame(rows.asJava, schema)
+
+  /** Seen-set dedup on the driver: per `key` columns, the row with the
+    * minimum `draw` (reference seen-set, src/sampler/mod.rs:3091-3100). */
+  private def seenFirst(rows: Seq[Row], schema: StructType, key: Seq[String]): Seq[Row] = {
+    val ix = key.map(schema.fieldIndex)
+    val d = schema.fieldIndex("draw")
+    rows.sortBy(_.getLong(d)).distinctBy(r => ix.map(r.get))
   }
+
+  /** pad_with_reuse and the slot join on the driver: [[Mixing.padSlots]]
+    * over the candidates' `key` column, each slot joined back to its
+    * candidate row. Columns: `key`, `slot`, then the other candidate
+    * columns in order. */
+  private def padded(spark: SparkSession, cands: Seq[Row], schema: StructType,
+      key: String, batch: Int, seed: String): DataFrame = {
+    val k = schema.fieldIndex(key)
+    val rest = schema.indices.filter(_ != k)
+    val byKey = cands.map(r => r.getLong(k) -> r).toMap
+    val out = Mixing.padSlots(cands.map(_.getLong(k)), batch, seed).map { case (i, id) =>
+      val r = byKey(id)
+      Row.fromSeq(r.get(k) +: i +: rest.map(r.get))
+    }
+    localRows(spark, out, StructType(
+      schema(k) +: StructField("slot", LongType, nullable = false) +: rest.map(schema(_))))
+  }
+
 
   /** The as-of neighbor pick of `Selector::TemporalOffset` (reference
     * select_temporal_neighbor, src/sampler/mod.rs:950-976): for each record
@@ -474,20 +507,17 @@ object Sampler {
       rankIndex: Option[DataFrame] = None,
       srcStats: Option[Seq[(String, Long)]] = None,
       neighborIndex: Map[Int, DataFrame] = Map.empty): SamplerBatch = {
-    val (core, deduped, st2) =
-      composed(spark, chunks, pool, recipes, st, batch, decoration, bm25Index,
-        rankIndex, srcStats, neighborIndex)
-    def rows = Mixing.padToBatch(spark,
-        deduped.select(col("draw").as("id")), batch, s"pad:${st.seed}:${st.counter("draw")}")
-      .join(deduped.withColumnRenamed("draw", "id"), Seq("id"))
-      .withColumnRenamed("id", "draw").withColumnRenamed("i", "slot")
-    SamplerBatch(core.drop("allow_same"), () => rows, st2)
+    val (schema, core, _, deduped, st2) = composed(spark, chunks, pool, recipes, st, batch,
+      decoration, bm25Index, rankIndex, srcStats, neighborIndex)
+    SamplerBatch(localRows(spark, core, schema),
+      () => padded(spark, deduped, schema, "draw", batch, s"pad:${st.seed}:${st.counter("draw")}"),
+      st2)
   }
 
-  /** The shared composed-triplet stream: returns (core, deduped, state) —
-    * `core` is the pre-rejection per-draw stream (with `allow_same`),
-    * `deduped` the post-rejection post-seen-set stream the entry points
-    * pad from. */
+  /** The shared composed-triplet stream, as driver rows: returns (schema,
+    * core, kept, deduped, state) — `core` every drawn triplet in draw
+    * order, `kept` the identical-text rejection survivors, `deduped` the
+    * seen-set survivors of those the entry points pad. */
   private def composed(spark: SparkSession, chunks: DataFrame, poolArg: DataFrame,
       recipes: Seq[TripletRecipe], st: SamplerState, batch: Int,
       decoration: Option[(graft.functions.KvpPrefixSampler, Int)] = None,
@@ -495,33 +525,11 @@ object Sampler {
       rankIndex: Option[DataFrame] = None,
       srcStats: Option[Seq[(String, Long)]] = None,
       neighborIndex: Map[Int, DataFrame] = Map.empty)
-      : (DataFrame, DataFrame, SamplerState) = {
+      : (StructType, Seq[Row], Seq[Row], Seq[Row], SamplerState) = {
     import spark.implicits._
     require(batch > 0, "batch must be > 0")
-    // diagnostic only (SPARK_GRAFT_PHASE_TIMING=1): force each composed
-    // stage and print its incremental wall; a no-op pass-through otherwise
-    val phaseTiming = sys.env.contains("SPARK_GRAFT_PHASE_TIMING")
-    var phaseT0 = System.nanoTime()
-    def lap(name: String)(df: DataFrame): DataFrame = {
-      if (phaseTiming) {
-        val n = df.count()
-        val t = System.nanoTime()
-        println(f"PHASE $name%-12s ${(t - phaseT0) / 1e9}%6.3f s (n=$n)")
-        phaseT0 = t
-      }
-      df
-    }
     val byName = recipes.map(r => r.name -> r).toMap
-    // Materialize a BATCH-BOUNDED frame as a driver-local relation: the
-    // values come from the same Spark plan (one collect — the same job an
-    // eager checkpoint would run), but downstream consumers see a
-    // LocalRelation, so broadcasting it costs no job, local projections
-    // of it collect without a job, and AQE plans joins against exact
-    // sizes. Lineage is cut exactly like localCheckpoint. Applied ONLY to
-    // ≤ few×batch-row frames (the slot schedule scale the driver already
-    // holds) — corpus-scale frames (pool, rank sidecar, chunk tables)
-    // stay executor-side checkpoints.
-    def localize(df: DataFrame): DataFrame = localRelation(spark, df)
+    def localize(df: DataFrame): DataFrame = localRelation(spark, df) // see localRelation
     // ONE pool materialization per batch: every downstream phase (epoch
     // pick, rank sidecar, temporal lanes, bm25 postings) reads the
     // checkpointed narrow pool instead of re-running the caller's
@@ -565,7 +573,7 @@ object Sampler {
       "rank index / pool schema mismatch: the index must be built from " +
         "the same pool (date column presence differs)"))
     val rankTbl = rankIndex.getOrElse(
-      lap("rankTbl")(rankSidecar(pool, srcCounts).localCheckpoint(eager = false)))
+      rankSidecar(pool, srcCounts).localCheckpoint(eager = false))
     if (rankIndex.nonEmpty && srcStats.isEmpty) {
       // persisted sidecar WITHOUT its persisted stats: the fallback tier
       // resolves its (srnk → source, rn) target against the SERVING-TIME
@@ -632,17 +640,13 @@ object Sampler {
         .select(col("draw"), lit(ep).as("epoch"), col("recipe"), col("reason"),
           col("id").as("record_id"), col("source"))
     }.reduce(_ unionByName _))
-    lap("slotRec")(slotRec)
 
-    // ---- chunk-pick metadata (driver-side; used by both the negative
-    // backends below and the selector picks) ----
+    // ---- anchor chunk-pick metadata (driver-side; the bm25 lane's query
+    // text is the anchor pick) ----
     val slotMeta = slots.map { case (draw, _, _, name) =>
-      val r = byName(name)
-      val (am, aa) = selectorDesc(r.anchor)
-      val (pm, pa) = selectorDesc(r.positive)
-      val (nm, na) = selectorDesc(r.negativeSelector)
-      (draw, am, aa, pm, pa, nm, na, r.allowSameAnchorPositive)
-    }.toDF("draw", "a_mode", "a_arg", "p_mode", "p_arg", "n_mode", "n_arg", "allow_same")
+      val (am, aa) = selectorDesc(byName(name).anchor)
+      (draw, am, aa)
+    }.toDF("draw", "a_mode", "a_arg")
     // ---- chunk-source records per slot: temporal selectors swap in the
     // as-of neighbor (reference select_chunk, src/sampler/mod.rs:1701-1704:
     // TemporalOffset resolves the neighbor record, then picks its CONTEXT
@@ -1088,8 +1092,7 @@ object Sampler {
       val dflt = strategyPick(
         if (bmNames.isEmpty) slotRec else slotRec.filter(!col("recipe").isin(bmNames: _*)),
         strategiesOf(NegativeBackend.Default))
-      lap("negRec")(localize(
-        if (bmNames.isEmpty) dflt else dflt.unionByName(bm25Lanes(qtermsTask.get()))))
+      localize(if (bmNames.isEmpty) dflt else dflt.unionByName(bm25Lanes(qtermsTask.get())))
     }
 
     // ---- n-slot pick: the only selector window that has to FOLLOW the
@@ -1105,9 +1108,7 @@ object Sampler {
       negRec.select(col("draw"), col("recipe"), col("nid").as("record_id")))
     val nIds = nRecs.select(col("record_id")).collect()
       .map(_.getLong(0)).distinct.toSeq
-    if (phaseTiming) lap("nIds")(spark.emptyDataFrame)
-    val chunksN = lap("chunksN")(
-      chunks.filter(col("record_id").isin(nIds: _*)).localCheckpoint(eager = false))
+    val chunksN = chunks.filter(col("record_id").isin(nIds: _*)).localCheckpoint(eager = false)
     val nMelt = slots.map { case (draw, _, _, name) =>
       val (nm, na) = selectorDesc(byName(name).negativeSelector)
       (draw, "n", nm, na)
@@ -1121,36 +1122,41 @@ object Sampler {
         nRecs.withColumn("slot", lit("n")).join(broadcast(nMelt), Seq("draw", "slot")))
       .select(col("draw"), Determinism.portableHash(slotText).as("n_hash"))
 
-    // the a/p pivot from the background chain; its null filter + the
-    // inner join on the n pick reproduce the former fused-pivot
-    // semantics — a draw whose ANY slot found no eligible chunk drops
-    // from the core stream
+    // ---- the batch tail, on the driver. The core join on draw: negRec
+    // and apPicks are LocalRelations (their collects run no job) and each
+    // joined frame holds ≤1 row per draw, so the joins are map lookups;
+    // the nPick collect is the tail's only job. A draw whose ANY slot
+    // found no eligible chunk drops from the core stream. nPick runs
+    // first, so its job overlaps an a/p pick still running.
+    val nBy = nPick.collect().map(r => r.getAs[Long]("draw") -> r).toMap
     val apPicks = apPicksTask.get()
-    val core = negRec
-      .join(apPicks, Seq("draw"))
-      .join(nPick, Seq("draw"))
-      .join(broadcast(slotMeta.select(col("draw"), col("allow_same"))), Seq("draw"))
-      .filter(col("a_hash").isNotNull && col("p_hash").isNotNull &&
-        col("n_hash").isNotNull)
-      .select(col("draw"), col("epoch"), col("recipe"), col("record_id"),
-        col("a_widx"), col("a_hash"), col("p_widx"), col("p_hash"),
-        col("nid"), col("n_hash"), col("reason"), col("allow_same"), col("lane"))
-    val coreL = localize(core)
-    lap("core")(coreL)
-
-    // ---- batch-local stages: rejection → seen-set dedup (pad is the
-    // entry point's job — triplet and pair batches pad different grains) --
-    val rejected = coreL.filter(col("allow_same") || col("a_hash") =!= col("p_hash"))
-    val seenW = Window.partitionBy(col("record_id"), col("a_widx"), col("p_widx"), col("nid"))
-      .orderBy(col("draw"))
-    val deduped = rejected
-      .withColumn("rk", row_number().over(seenW)).filter(col("rk") === 1)
-      .drop("rk", "allow_same")
+    val apBy = apPicks.collect().map(r => r.getAs[Long]("draw") -> r).toMap
+    val parts = Seq(negRec.schema, apPicks.schema, nPick.schema)
+    // (frame, field) of each core column, `draw` from negRec
+    val at = Seq("draw", "epoch", "recipe", "record_id", "a_widx", "a_hash", "p_widx",
+        "p_hash", "nid", "n_hash", "reason", "lane").map { c =>
+      val f = parts.indexWhere(_.fieldNames.contains(c))
+      (f, parts(f).fieldIndex(c))
+    }
+    val schema = StructType(at.map { case (f, i) => parts(f)(i) })
+    val Seq(ia, ip, in) = Seq("a_hash", "p_hash", "n_hash").map(schema.fieldIndex)
+    val core = negRec.collect().toSeq.flatMap { neg =>
+      val draw = neg.getAs[Long]("draw")
+      for (ap <- apBy.get(draw); n <- nBy.get(draw)) yield {
+        val rs = Seq(neg, ap, n)
+        Row.fromSeq(at.map { case (f, i) => rs(f).get(i) })
+      }
+    }.filter(r => !r.isNullAt(ia) && !r.isNullAt(ip) && !r.isNullAt(in))
+      .sortBy(_.getLong(0))
+    // identical-text rejection, unless the recipe allows equal a/p texts
+    val allowSame = slots.map(s => s._1 -> byName(s._4).allowSameAnchorPositive).toMap
+    val kept = core.filter(r => allowSame(r.getLong(0)) || r.get(ia) != r.get(ip))
+    val deduped = seenFirst(kept, schema, Seq("record_id", "a_widx", "p_widx", "nid"))
 
     val st2 = st.copy(epoch = e, counters = st.counters
       .updated("draw", drawBase + batch).updated("cursor", cur)
       .updated("pool_size", poolSize))
-    (coreL, deduped, st2)
+    (schema, core, kept, deduped, st2)
   }
 
   /** The composed pair batch (reference `next_pair_batch`,
@@ -1169,35 +1175,31 @@ object Sampler {
       srcStats: Option[Seq[(String, Long)]] = None,
       neighborIndex: Map[Int, DataFrame] = Map.empty): SamplerBatch = {
     val nTrip = (batch + 1) / 2
-    val (core, deduped, st2) = composed(spark, chunks, pool, recipes, st, nTrip,
+    val (trip, _, kept, deduped, st2) = composed(spark, chunks, pool, recipes, st, nTrip,
       decoration, None, rankIndex, srcStats, neighborIndex)
-    def pairsOf(df: DataFrame): DataFrame = df
-      .select(col("draw"), col("epoch"), col("recipe"), col("record_id"),
-        col("nid"), col("a_hash"), col("reason").as("strategy"),
-        explode(array(
-          struct(lit(0L).as("pidx"), lit("positive").as("label"),
-            col("p_hash").as("r_hash"), lit(null).cast("string").as("reason")),
-          struct(lit(1L).as("pidx"), lit("negative").as("label"),
-            col("n_hash").as("r_hash"), col("reason").as("reason")))).as("pr"))
-      .select(col("draw"), (col("draw") * 2 + col("pr.pidx")).as("pair_id"),
-        col("epoch"), col("recipe"), col("record_id"), col("nid"),
-        col("pr.label").as("label"), col("a_hash").as("l_hash"),
-        col("pr.r_hash").as("r_hash"), col("pr.reason").as("reason"))
-    val tripCore = core.filter(col("allow_same") || col("a_hash") =!= col("p_hash"))
-      .drop("allow_same")
-    val pairCore = pairsOf(tripCore)
-    def rows = {
-      val pairDeduped = pairsOf(deduped)
-      Mixing.padToBatch(spark,
-          pairDeduped.select(col("pair_id").as("id")), batch,
-          s"padp:${st.seed}:${st.counter("draw")}")
-        .join(pairDeduped.withColumnRenamed("pair_id", "id"), Seq("id"))
-        .withColumnRenamed("id", "pair_id").withColumnRenamed("i", "slot")
+    val Seq(iDraw, iEpoch, iRecipe, iRec, iNid, iA, iP, iN, iReason) = Seq("draw", "epoch",
+      "recipe", "record_id", "nid", "a_hash", "p_hash", "n_hash", "reason").map(trip.fieldIndex)
+    val schema = StructType(Seq(trip(iDraw),
+      StructField("pair_id", LongType, trip(iDraw).nullable), trip(iEpoch), trip(iRecipe),
+      trip(iRec), trip(iNid), StructField("label", StringType, nullable = false),
+      trip(iA).copy(name = "l_hash"), trip(iP).copy(name = "r_hash", nullable = true),
+      StructField("reason", StringType, nullable = true)))
+    // each triplet → (positive, reason NULL) at pair_id draw*2 and
+    // (negative, the strategy tag) at draw*2 + 1
+    def pairsOf(trips: Seq[Row]): Seq[Row] = trips.flatMap { r =>
+      val draw = r.getLong(iDraw)
+      Seq((0L, "positive", iP, null), (1L, "negative", iN, r.get(iReason))).map {
+        case (pidx, label, iR, reason) => Row(draw, draw * 2 + pidx, r.get(iEpoch),
+          r.get(iRecipe), r.get(iRec), r.get(iNid), label, r.get(iA), r.get(iR), reason)
+      }
     }
-    // extended metrics ride the TRIPLET core the pairs derive from (one
-    // negative dispatch per triplet draw, regardless of the 2-row pair
-    // explosion)
-    SamplerBatch(pairCore, () => rows, st2, Some(tripCore))
+    // dedup at the triplet grain, then pad the pairs; extended metrics
+    // ride the TRIPLET core the pairs derive from (one negative dispatch
+    // per triplet draw, regardless of the 2-row pair explosion)
+    SamplerBatch(localRows(spark, pairsOf(kept), schema),
+      () => padded(spark, pairsOf(deduped), schema, "pair_id", batch,
+        s"padp:${st.seed}:${st.counter("draw")}"),
+      st2, Some(localRows(spark, kept, trip)))
   }
 
   /** The composed text batch (reference `next_text_batch`,
@@ -1289,14 +1291,9 @@ object Sampler {
         col("chunk_record"), col("t_sidx"), col("t_widx"), col("t_hash")))
     // seen-set dedup by the chunk key, earliest draw wins (reference
     // chunk_key dedup, src/sampler/mod.rs:2288-2292)
-    val seenW = Window.partitionBy(col("chunk_record"), col("t_sidx"), col("t_widx"))
-      .orderBy(col("draw"))
-    val deduped = core.withColumn("rk", row_number().over(seenW)).filter(col("rk") === 1)
-      .drop("rk")
-    def rows = Mixing.padToBatch(spark,
-        deduped.select(col("draw").as("id")), batch, s"padt:${st.seed}:$drawBase")
-      .join(deduped.withColumnRenamed("draw", "id"), Seq("id"))
-      .withColumnRenamed("id", "draw").withColumnRenamed("i", "slot")
+    def rows = padded(spark,
+      seenFirst(core.collect().toSeq, core.schema, Seq("chunk_record", "t_sidx", "t_widx")),
+      core.schema, "draw", batch, s"padt:${st.seed}:$drawBase")
     val st2 = st.copy(epoch = e, counters = st.counters
       .updated("draw", drawBase + batch).updated("cursor", cur)
       .updated("pool_size", poolSize))

@@ -10,6 +10,18 @@ class StateAndRecipesSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   private val sfDir = "/root/testdata/sf0.001"
 
+  /** 12 docs over two sources: the small composed fixture of the
+    * lane-report and serving-tail tests. */
+  private def smallComposed() = {
+    import spark.implicits._
+    val docs = (1 to 12).map(i =>
+      (i.toLong, (s"head$i topic$i overview" +: (1 to 40).map(j => s"w${i}_$j")).mkString(" ")))
+      .toDF("doc_id", "text")
+    val chunks = graft.queries.RecipeQueries.chunkTable(docs)
+    val pool = (1 to 12).map(i => (i.toLong, s"s${i % 2}")).toDF("id", "source")
+    (chunks, pool)
+  }
+
   // ---- sampler-state persistence (reference: FileSplitStore semantics) ----
 
   test("resume guard: seed mismatch surfaces instead of silently winning") {
@@ -383,13 +395,7 @@ class StateAndRecipesSpec extends AnyFunSuite {
   }
 
   test("laneStats: the extended-metrics report aggregates the batch's own core rows") {
-    import spark.implicits._
-    import org.apache.spark.sql.functions._
-    val docs = (1 to 12).map(i =>
-      (i.toLong, (s"head$i topic$i overview" +: (1 to 40).map(j => s"w${i}_$j")).mkString(" ")))
-      .toDF("doc_id", "text")
-    val chunks = graft.queries.RecipeQueries.chunkTable(docs)
-    val pool = (1 to 12).map(i => (i.toLong, s"s${i % 2}")).toDF("id", "source")
+    val (chunks, pool) = smallComposed()
     val recipes = Seq(TripletRecipe("lm", Selector.RoleAnchor, Selector.RoleContext,
       NegativeStrategy.WrongArticle))
     val b = Sampler.nextBatch(spark, chunks, pool, recipes,
@@ -417,12 +423,8 @@ class StateAndRecipesSpec extends AnyFunSuite {
   }
 
   test("ExtendedMetrics accumulates lifetime totals: two resumed half-batches == one batch") {
-    import spark.implicits._
-    val docs = (1 to 12).map(i =>
-      (i.toLong, (s"head$i topic$i overview" +: (1 to 40).map(j => s"w${i}_$j")).mkString(" ")))
-      .toDF("doc_id", "text")
-    val chunks = graft.queries.RecipeQueries.chunkTable(docs)
-    val pool = (1 to 12).map(i => (i.toLong, s"s${i % 2}")).toDF("id", "source")
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val (chunks, pool) = smallComposed()
     val recipes = Seq(TripletRecipe("xm", Selector.RoleAnchor, Selector.RoleContext,
       NegativeStrategy.WrongArticle))
     // one 8-draw batch vs two resumed 4-draw batches (the q143 law
@@ -434,9 +436,77 @@ class StateAndRecipesSpec extends AnyFunSuite {
     val h1 = Sampler.nextBatch(spark, chunks, pool, recipes,
       SamplerState("xm", 0L, Map.empty), batch = 4)
     val h2 = Sampler.nextBatch(spark, chunks, pool, recipes, h1.state, batch = 4)
-    val m = new ExtendedMetrics().add(h1).add(h2)
+    // `add` folds the already-collected core rows on the driver: a
+    // listener sees no job in the group it runs under. Delivery is async,
+    // so a sentinel job queued after `add` marks the end of its events.
+    val sc = spark.sparkContext
+    val addJobs = new java.util.concurrent.atomic.AtomicInteger()
+    val sentinel = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        Option(j.properties).map(_.getProperty("spark.jobGroup.id")).orNull match {
+          case "em-add" => addJobs.incrementAndGet()
+          case "em-sentinel" => sentinel.countDown()
+          case _ => ()
+        }
+    }
+    sc.addSparkListener(listener)
+    val m = try {
+      sc.setJobGroup("em-add", "ExtendedMetrics.add")
+      val m = try new ExtendedMetrics().add(h1).add(h2) finally sc.clearJobGroup()
+      sc.setJobGroup("em-sentinel", "listener sentinel")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(sentinel.await(10, java.util.concurrent.TimeUnit.SECONDS))
+      m
+    } finally sc.removeSparkListener(listener)
+    assert(addJobs.get == 0, s"ExtendedMetrics.add started ${addJobs.get} Spark job(s)")
     assert(m.totals == oneTotals)
     assert(m.totals.values.sum == one.core.count())
+  }
+
+  test("serving draws leave the cache manager as they found it (triplet, pair, text)") {
+    // the batch tail runs on the driver: drawing and collecting `rows`
+    // caches nothing that no serving loop would ever release
+    val (chunks, pool) = smallComposed()
+    val recipes = Seq(TripletRecipe("lk", Selector.RoleAnchor, Selector.RoleContext,
+      NegativeStrategy.WrongArticle))
+    val cm = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager
+    // `numCachedEntries` is private[sql] in Scala but public in bytecode
+    def entries = cm.getClass.getMethod("numCachedEntries").invoke(cm).asInstanceOf[Int]
+    val before = entries
+    var st = SamplerState("lk", 0L, Map.empty)
+    def draw(b: SamplerBatch): Unit = {
+      assert(b.rows.collect().length == 8)
+      st = b.state
+    }
+    (1 to 3).foreach(_ => draw(Sampler.nextBatch(spark, chunks, pool, recipes, st, 8)))
+    (1 to 3).foreach(_ => draw(Sampler.nextPairBatch(spark, chunks, pool, recipes, st, 8)))
+    (1 to 3).foreach(_ => draw(Sampler.nextTextBatch(spark, chunks, pool,
+      Recipes.derivedTextRecipes(recipes), st, 8)))
+    assert(entries <= before, s"cache entries grew from $before to $entries")
+  }
+
+  test("padSlots: the driver pad equals Mixing.padToBatch at 0, 1, b-1, b and b+7 candidates") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.col
+    val batch = 16
+    for (nc <- Seq(0, 1, batch - 1, batch, batch + 7)) {
+      val seed = s"padlaw:$nc"
+      val ids = (0 until nc).map(i => 1000L + 37L * i)
+      val cands = ids.toDF("id")
+      val want = Mixing.padToBatch(spark, cands, batch, seed).collect()
+        .map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1).toSeq
+      cands.unpersist()
+      // the input order of the candidates cannot matter
+      val got = Mixing.padSlots(ids.reverse, batch, seed)
+      assert(got == want, s"nc=$nc: (i, id) pairs differ")
+      // pad order: the plan's seeded order, cycled when short
+      val ranked = cands.orderBy(graft.core.Determinism.seeded(seed, col("id")), col("id"))
+        .collect().map(_.getLong(0)).toSeq
+      assert(got == (if (nc == 0) Nil
+        else (0 until batch).map(i => (i.toLong, ranked(i % nc)))), s"nc=$nc: pad order")
+    }
   }
 
   test("composed temporal slots anchor on the neighbor's context chunk") {
