@@ -1,7 +1,7 @@
 package graft
 
 import graft.core.{Splits, Tables}
-import graft.operators.{Recipes, Sampler, SamplerState}
+import graft.operators.{PoolRankIndex, Recipes, Sampler, SamplerState}
 import graft.queries.RecipeQueries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -81,9 +81,13 @@ object Demo {
   }
 
   /** Draw `batches` batches of the requested kind, printing a compact
-    * per-slot line, and return the end state (persisted by main). */
+    * per-slot line, and return the end state (persisted by main). The
+    * pool's rank index is staged once, in memory, and serves every batch
+    * (its (id, source) columns are the pool). */
   def run(spark: SparkSession, cfg: DemoConfig, st0: SamplerState): SamplerState = {
-    val (chunks, pool) = stagePool(spark, cfg.sfDir)
+    val (chunks, pool0) = stagePool(spark, cfg.sfDir)
+    val (ranks, stats) = PoolRankIndex.stage(pool0)
+    val pool = ranks.select(col("id"), col("source"))
     val recipes = Recipes.resolve(Nil, Seq(
       operators.TripletRecipe("demo_ctx", operators.Selector.RoleAnchor,
         operators.Selector.RoleContext, operators.NegativeStrategy.WrongArticle, 2f),
@@ -92,10 +96,12 @@ object Demo {
     var st = st0
     for (b <- 1 to cfg.batches) {
       val out = cfg.mode match {
-        case "triplet" => Sampler.nextBatch(spark, chunks, pool, recipes, st, cfg.batch)
-        case "pair" => Sampler.nextPairBatch(spark, chunks, pool, recipes, st, cfg.batch)
+        case "triplet" => Sampler.nextBatch(spark, chunks, pool, recipes, st, cfg.batch,
+          rankIndex = Some(ranks), srcStats = Some(stats))
+        case "pair" => Sampler.nextPairBatch(spark, chunks, pool, recipes, st, cfg.batch,
+          rankIndex = Some(ranks), srcStats = Some(stats))
         case "text" => Sampler.nextTextBatch(spark, chunks, pool,
-          Recipes.derivedTextRecipes(recipes), st, cfg.batch)
+          Recipes.derivedTextRecipes(recipes), st, cfg.batch, srcStats = Some(stats))
         case m => sys.error(s"unknown mode: $m")
       }
       val rows = out.rows.collect()

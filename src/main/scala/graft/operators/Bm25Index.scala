@@ -13,8 +13,8 @@ import org.apache.spark.sql.functions._
   * the broadcast query vocabulary, so lookups are a bounded semi-join, not
   * a data structure walk.
   *
-  * Why a persisted table instead of per-batch derivation (the
-  * [[Sampler]] default): tokenize+aggregate is the dominant cost of a BM25
+  * Why a persisted table instead of a from-text pass per query (the
+  * [[Bm25.scores]] path): tokenize+aggregate is the dominant cost of a BM25
   * pass over a 100 TB corpus. Build once, refresh per landed shard
   * (`refresh` cost ∝ |new shard|, a plain union — no read-modify-write of
   * the standing postings, which stay immutable parquet), score many times.
@@ -95,15 +95,14 @@ object Bm25Index {
 }
 
 /** Per-source postings + per-source corpus stats for the composed
-  * sampler's pool — the cache the per-batch [[Sampler]] derivation
-  * otherwise recomputes every batch (see `Sampler.bm25Lanes`). Built from
-  * the pool's pre-tokenized `btoks`, so index-backed and per-batch scoring
-  * are bit-identical (pinned in InvariantsSpec against the golden bm25
-  * config).
+  * sampler's pool — the staged input every BM25-backend batch scores
+  * against (see `Sampler.bm25Lanes`), built once per pool refresh from the
+  * pool's pre-tokenized `btoks`. The parquet round-trip and the in-memory
+  * [[Bm25PoolIndex.fromPool]] staging serve bit-identical batches (pinned
+  * in InvariantsSpec against the golden bm25 config).
   *
-  * `srcStats` counts ALL pool docs per source (including zero-token docs),
-  * matching the per-batch derivation; it cannot be derived from postings
-  * alone, hence the second frame.
+  * `srcStats` counts ALL pool docs per source (including zero-token docs);
+  * it cannot be derived from postings alone, hence the second frame.
   *
   * `wterm` is the STAGED weighted-term table `(source, term, cand,
   * term_e6)` — [[Bm25PoolIndex.weightedTerms]] precomputed at build time.
@@ -111,26 +110,24 @@ object Bm25Index {
   * arithmetic), so staging it moves the one remaining pool-scale shuffle
   * of the BM25 negative dispatch off the batch path entirely: a batch
   * reads the persisted table filtered to its anchor sources (parquet
-  * row-group pruning) and scores. Present on every save/load round-trip;
-  * None on hand-assembled pairs (the per-batch derivation fills it in). */
+  * row-group pruning) and scores. */
 final class Bm25PoolIndex(postingsThunk: () => DataFrame,
-    srcStatsThunk: () => DataFrame, wtermThunk: () => Option[DataFrame]) {
+    srcStatsThunk: () => DataFrame, wtermThunk: () => DataFrame) {
   // LAZY relations: reading a parquet relation costs a footer/schema job
   // at analysis time, and the staged-wterm serving path never touches
   // postings/srcStats — a loaded index only pays for the relations a
   // batch actually reads
   lazy val postings: DataFrame = postingsThunk()
   lazy val srcStats: DataFrame = srcStatsThunk()
-  lazy val wterm: Option[DataFrame] = wtermThunk()
+  lazy val wterm: DataFrame = wtermThunk()
 }
 
 object Bm25PoolIndex {
 
-  def apply(postings: DataFrame, srcStats: DataFrame,
-      wterm: Option[DataFrame] = None): Bm25PoolIndex =
+  def apply(postings: DataFrame, srcStats: DataFrame, wterm: DataFrame): Bm25PoolIndex =
     new Bm25PoolIndex(() => postings, () => srcStats, () => wterm)
 
-  /** Derive both frames from a composed-sampler pool carrying
+  /** Derive the three frames from a composed-sampler pool carrying
     * `(id, source, btoks)`. Callers persist/cache the result across
     * batches; on source refresh, rebuild (pool-sized, but off the batch
     * path) or union a per-shard delta like [[Bm25Index.refresh]]. */
@@ -142,16 +139,15 @@ object Bm25PoolIndex {
       .agg(count(lit(1)).as("tf"))
     val srcStats = pool.groupBy(col("source"))
       .agg(count(lit(1)).as("n_docs"), sum(size(col("btoks"))).as("sum_dl"))
-    Bm25PoolIndex(postings, srcStats, Some(weightedTerms(postings, srcStats)))
+    Bm25PoolIndex(postings, srcStats, weightedTerms(postings, srcStats))
   }
 
   /** The weighted-term table `(source, term, cand, term_e6)` — THE
     * single definition of the composed BM25 backend's per-term score
     * (exact-integer e6 floor, graft.operators.Bm25 contract): df is a
     * keyed window over tf (one row per (cand, term) ⇒ the per-term count
-    * IS the document frequency). Both the per-batch derivation and the
-    * staged index build call this, so index-backed scoring cannot
-    * silently diverge from the in-plan path. */
+    * IS the document frequency). The index build ([[fromPool]]) is its
+    * one caller, so every staging of the index scores alike. */
   def weightedTerms(postings: DataFrame, srcStats: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     postings
@@ -169,9 +165,8 @@ object Bm25PoolIndex {
   }
 
   /** Persist / reload across sampler sessions — the long-lived
-    * deployment's cache of the per-source tf table the composed bm25
-    * backend otherwise re-derives every batch (Sampler.bm25Lanes
-    * scaladoc). Postings repartition by (source, term) on write, the
+    * deployment's staging of the composed bm25 backend's index
+    * (Sampler.bm25Lanes scaladoc). Postings repartition by (source, term) on write, the
     * keys every batch's scoring join restricts on; the staged wterm
     * table repartitions by source and sorts by (source, term) within
     * partitions so a batch's source filter prunes row groups. Same
@@ -190,8 +185,7 @@ object Bm25PoolIndex {
     idx.postings.repartition(col("source"), col("term")).write.mode("overwrite")
       .parquet(s"$tmp/postings")
     idx.srcStats.write.mode("overwrite").parquet(s"$tmp/srcstats")
-    idx.wterm.getOrElse(weightedTerms(idx.postings, idx.srcStats))
-      .repartition(col("source")).sortWithinPartitions(col("source"), col("term"))
+    idx.wterm.repartition(col("source")).sortWithinPartitions(col("source"), col("term"))
       .write.mode("overwrite").parquet(s"$tmp/wterm")
     rmTree(Paths.get(dir))
     Files.move(tmp, Paths.get(dir))
@@ -200,13 +194,13 @@ object Bm25PoolIndex {
   def load(spark: org.apache.spark.sql.SparkSession, dir: String): Bm25PoolIndex = {
     import java.nio.file.{Files, Paths}
     // each relation loads on FIRST USE (parquet footer read deferred):
-    // the staged-wterm serving path never opens postings/srcstats.
-    // wterm absent only on pre-staging generations — the per-batch
-    // derivation fills it in (values identical; just not staged)
+    // the serving path never opens postings/srcstats. A generation
+    // without the staged wterm table cannot serve: rebuild it
+    require(Files.isDirectory(Paths.get(s"$dir/wterm")),
+      s"Bm25PoolIndex at $dir has no staged wterm/ table; rebuild it")
     new Bm25PoolIndex(
       () => spark.read.parquet(s"$dir/postings"),
       () => spark.read.parquet(s"$dir/srcstats"),
-      () => if (Files.exists(Paths.get(s"$dir/wterm")))
-        Some(spark.read.parquet(s"$dir/wterm")) else None)
+      () => spark.read.parquet(s"$dir/wterm"))
   }
 }

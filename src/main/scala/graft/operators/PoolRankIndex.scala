@@ -3,20 +3,21 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** The composed sampler's pool-rank sidecar as a PERSISTED index — the
-  * last per-pool derivation that [[Sampler.composed]] otherwise re-runs
-  * every batch (the [[Bm25PoolIndex]] sibling: same lifecycle, same
+/** The composed sampler's pool-rank sidecar as a STAGED index — the
+  * input every [[Sampler]] batch serves its record and negative picks
+  * from (the [[Bm25PoolIndex]] sibling: same lifecycle, same
   * torn-publish discipline). The reference stages its negative pools
   * once per source REFRESH (src/sampler/mod.rs:994-1151) and serves
-  * every batch from that staging; this index is that staging made
-  * durable: narrow (id, source, ranks, group sizes, fallback order)
-  * columns — no text — written once per refresh, read by every batch.
+  * every batch from that staging; this index is that staging: narrow
+  * (id, source, ranks, group sizes, fallback order) columns — no text —
+  * built once per refresh, read by every batch. A long-lived deployment
+  * persists it (`save`/`load`); a one-off caller stages it in memory
+  * (`stage`).
   *
-  * Values are bit-identical to the in-plan derivation by construction
-  * (the index IS [[Sampler.rankSidecar]] persisted), so index-backed
-  * batches equal derived batches row for row — pinned by
-  * InvariantsSpec. Rebuild on ANY pool change: the ranks bake in the
-  * pool's id order and the fallback order bakes in its source set.
+  * Both stagings are [[Sampler.rankSidecar]] executed once, so they serve
+  * identical batches row for row — pinned by InvariantsSpec. Rebuild on
+  * ANY pool change: the ranks bake in the pool's id order and the
+  * fallback order bakes in its source set.
   */
 object PoolRankIndex {
 
@@ -30,6 +31,20 @@ object PoolRankIndex {
     require(srcCounts.nonEmpty, "empty pool")
     Sampler.rankSidecar(pool, srcCounts)
   }
+
+  /** Stage in memory: [[build]] materialized once (an eager local
+    * checkpoint), plus its per-source stats — the `(rankIndex, srcStats)`
+    * pair [[Sampler.nextBatch]] serves from, for a caller that does not
+    * persist the index. */
+  def stage(pool: DataFrame): (DataFrame, Seq[(String, Long)]) = {
+    val ranks = build(pool).localCheckpoint()
+    (ranks, srcStatsOf(ranks))
+  }
+
+  /** Per-source stats of a built sidecar: each source's `nsrc`. */
+  private def srcStatsOf(ranks: DataFrame): Seq[(String, Long)] =
+    ranks.select(col("source"), col("nsrc")).distinct().collect()
+      .map(r => (r.getString(0), r.getLong(1))).toSeq.sortBy(_._1)
 
   /** Persist across sampler sessions. Repartitioned by `source` on
     * write — the key every dispatch lookup restricts on. Temp-then-move
@@ -59,9 +74,7 @@ object PoolRankIndex {
     // disappears. Derived from the JUST-WRITTEN parquet (2 narrow
     // columns), so the stats are exactly the persisted generation's.
     // Written into the staging dir, so they publish atomically with it.
-    val stats = ranks.sparkSession.read.parquet(tmp.toString)
-      .select(col("source"), col("nsrc")).distinct().collect()
-      .map(r => (r.getString(0), r.getLong(1))).sortBy(_._1)
+    val stats = srcStatsOf(ranks.sparkSession.read.parquet(tmp.toString))
     val enc = java.util.Base64.getEncoder
     val lines = stats.map { case (src, n) =>
       s"${enc.encodeToString(src.getBytes("UTF-8"))} $n" }
@@ -76,19 +89,17 @@ object PoolRankIndex {
   def load(spark: SparkSession, dir: String): DataFrame =
     spark.read.parquet(dir)
 
-  /** The persisted per-source stats — None on pre-stats generations
-    * (callers fall back to the per-batch collect; values identical). */
-  def loadSrcStats(dir: String): Option[Seq[(String, Long)]] = {
+  /** The persisted per-source stats, written by `save` into the same
+    * publish as the ranks. */
+  def loadSrcStats(dir: String): Seq[(String, Long)] = {
     import java.nio.file.{Files, Paths}
     val p = Paths.get(dir).resolve(StatsFile)
-    if (!Files.isRegularFile(p)) None
-    else {
-      val dec = java.util.Base64.getDecoder
-      Some(new String(Files.readAllBytes(p), "UTF-8").split("\n").toSeq
-        .filter(_.nonEmpty).map { line =>
-          val Array(b64, n) = line.split(" ", 2)
-          (new String(dec.decode(b64), "UTF-8"), n.toLong)
-        })
-    }
+    require(Files.isRegularFile(p), s"rank index at $dir has no $StatsFile; rebuild it")
+    val dec = java.util.Base64.getDecoder
+    new String(Files.readAllBytes(p), "UTF-8").split("\n").toSeq
+      .filter(_.nonEmpty).map { line =>
+        val Array(b64, n) = line.split(" ", 2)
+        (new String(dec.decode(b64), "UTF-8"), n.toLong)
+      }
   }
 }

@@ -126,8 +126,8 @@ object Sampler {
     * [[Recipes.selectChunksBatch]]. TemporalOffset is CHUNK-level a
     * context-role pick — the reference selects the as-of neighbor record
     * and then its context chunk (src/sampler/mod.rs:1701-1704); the
-    * record-level swap is [[temporalDays]] + [[temporalNeighbors]] inside
-    * [[nextBatch]]. */
+    * record-level swap is [[temporalDays]] + the staged
+    * [[temporalNeighborsFull]] map inside [[nextBatch]]. */
   def selectorDesc(s: Selector): (String, String) = s match {
     case Selector.RoleAnchor => ("role", "anchor")
     case Selector.RoleContext => ("role", "context")
@@ -194,23 +194,18 @@ object Sampler {
     * a neighbor can never cross splits (the contract src/config.rs:131-137
     * re-checks inside the engine; here the pool IS the split).
     *
-    * Scale shape: the left side is semi-joined down to the batch's records
-    * (broadcast of a batch-bounded id frame), so per-batch cost is
-    * batch-rows × the record's source/taxonomy group — the bounded-group
+    * This is the pairwise reference form, pinned equal to the staged
+    * [[temporalNeighborsFull]] map the sampler serves from. Scale shape:
+    * the left side is semi-joined down to `forIds` (broadcast), so cost is
+    * |forIds| × the record's source/taxonomy group — the bounded-group
     * pairwise form (q61); unbounded-cardinality callers use the q60
     * union+window as-of instead. The OR-disjunction is a UNION of two
-    * DISJOINT equi-joins (never a theta join). Per batch this streams the
-    * narrow (id, source, sec[, tax]) pool projection once as the
-    * candidate side — already 40× the reference's serving shape, which
-    * probes its whole in-memory pool PER DRAW (select_temporal_neighbor,
-    * src/sampler/mod.rs:950-976) — and a refresh-staged
-    * [[temporalNeighborsFull]] map (the chunk/rank-index treatment)
-    * takes it to O(batch). The argmin key is the LEXICOGRAPHIC pair
-    * (|Δsec|, id) — a struct ordering, not the former |Δsec|·1e7 + id
-    * scalar, whose id term could outweigh a 1-second |Δ| gap once ids
-    * pass 1e7 (a latent wrong-neighbor hazard at corpus scale, and the
-    * obstacle to an O(n log n) staged build; the DuckDB twins replay the
-    * same pair via list comparison). */
+    * DISJOINT equi-joins (never a theta join). The argmin key is the
+    * LEXICOGRAPHIC pair (|Δsec|, id) — a struct ordering, not the former
+    * |Δsec|·1e7 + id scalar, whose id term could outweigh a 1-second |Δ|
+    * gap once ids pass 1e7 (a latent wrong-neighbor hazard at corpus
+    * scale, and the obstacle to an O(n log n) staged build; the DuckDB
+    * twins replay the same pair via list comparison). */
   def temporalNeighbors(pool: DataFrame, days: Int, forIds: DataFrame): DataFrame = {
     require(pool.columns.contains("sec"),
       "TemporalOffset recipes need a `sec` (epoch seconds) column in the pool")
@@ -315,84 +310,53 @@ object Sampler {
       .agg(min_by(col("nbid"), col("selkey")).as("nbid"))
   }
 
-  /** Neighbor lookup for one temporal lane: the staged map when the
-    * caller passed one for this offset (per-batch cost = an id-pruned
-    * read of the record_id-sorted index — zero pool-scale work),
-    * otherwise the in-plan batch join. `forIds` is a LocalRelation
-    * projection, so the id collect schedules no job. */
-  private def neighborsFor(pool: DataFrame, d: Int, forIds: DataFrame,
-      neighborIndex: Map[Int, DataFrame]): DataFrame =
-    neighborIndex.get(d) match {
-      case Some(ix) =>
-        val ids = forIds.select(col("record_id")).collect()
-          .map(_.getLong(0)).distinct.toSeq
-        ix.filter(col("record_id").isin(ids: _*))
-      case None => temporalNeighbors(pool, d, forIds)
-    }
+  /** Fails at the call unless every temporal offset among `days` has its
+    * staged neighbor map ([[temporalNeighborsFull]], persisted by
+    * [[graft.queries.ComposedIndexQueries.neighborIndex]]) in
+    * `neighborIndex`. */
+  private def requireNeighbors(days: Seq[Option[Int]],
+      neighborIndex: Map[Int, DataFrame]): Unit =
+    days.flatten.distinct.foreach(d => require(neighborIndex.contains(d),
+      s"TemporalOffset($d) recipes need the staged neighbor map for offset $d " +
+        s"in neighborIndex (build it with temporalNeighborsFull)"))
 
-  /** Produce the next batch of `batch` triplets.
-    *
-    * Each slot's negative RECORD is picked by its recipe's declared
-    * [[NegativeStrategy]] — the reference's per-slot strategy dispatch
-    * (reference: src/sampler/mod.rs:1329-1405 dispatch, strategy pools
-    * 994-1151):
-    *   - `WrongArticle`: same-source skip-the-anchor rank pick
-    *     (hash stream `neg:`);
-    *   - `QuestionAnswerMismatch`: the same pool shape but its own hash
-    *     stream (`negq:`) — a different record whose answer/context gets
-    *     paired against this anchor's question;
-    *   - `WrongPublicationDate`: two-level pick — a date group of the same
-    *     source OTHER than the anchor's (`negd:`), then a record inside it
-    *     (`negr:`). Requires a `date` column in `pool`.
-    * When `pool` carries a `date` column, `WrongArticle` prefers
-    * same-source same-DATE candidates (tier 1, stream `nega:`) before the
-    * plain same-source pick — the reference's date preference
-    * (src/sampler/mod.rs:996-1032). Every strategy whose primary pool is
-    * empty (singleton source, or single date group for wrong-date) falls
-    * back to the cross-source same-split two-level pick (`negs:`/`negc:`)
-    * with the recipe name suffixed `_fallback_same_split`
-    * (src/sampler/mod.rs:1097-1151, 1391-1395). Every delivered row
-    * carries the strategy's `reason` tag.
-    *
-    * @param chunks chunk table (columns of [[graft.core.RecordChunk]]):
-    *               record_id, section_idx, role, view_kind, window_index,
-    *               overlap, wtext
-    * @param pool   record pool: `id`, `source` (one row per record), plus
-    *               an optional `date` column (string) when any recipe
-    *               declares `WrongPublicationDate`
-    * @param recipes resolved recipe set (configured or source defaults —
-    *               apply [[Recipes.resolve]]/[[Recipes.withAutoInjected]]
-    *               upstream)
-    * @param st     counters: `draw` (global, never resets — drives recipe
-    *               rotation and every hash pick), `cursor` (position in the
-    *               epoch's interleave, resets on epoch advance),
-    *               `pool_size` (epoch-stable pool count, computed once and
-    *               persisted — drop it via [[SamplerState]] on source
-    *               refresh so the next batch re-counts)
-    * @param decoration optional `(sampler, maxWindowTokens)`: decorate every
-    *               picked chunk with a KVP metadata prefix under the token
-    *               budget ([[Decoration.decorateColumn]]) before hashing —
-    *               the reference decorates inside the batch loop with a
-    *               per-(record, draw) key (src/sampler/mod.rs:1470-1508);
-    *               here the key is `dec:<slot>:<record_id>:<draw>` so the
-    *               three slots roll independent prefixes, exactly like the
-    *               decorated lane ([[Triplets.tripletRowsDecorated]])
-    */
-  /** Epoch-stable pool size: count once, then serve every later batch
-    * from the persisted counter (a per-batch count() is corpus-scan work
-    * at 100 TB). Callers invalidate with `counters - "pool_size"` when
-    * the pool population changes (source refresh). */
-  private def poolSizeOf(pool: DataFrame, st: SamplerState): Long = {
-    val cached = st.counter("pool_size")
-    val n = if (cached > 0L) cached else pool.count()
-    require(n > 0, "empty record pool")
-    n
+  /** The chunk-source record per draw for one slot's selectors: `dayOf`
+    * maps each recipe name to its selector's temporal offset. Temporal
+    * recipes swap in the as-of neighbor (reference select_chunk,
+    * src/sampler/mod.rs:1701-1704: TemporalOffset resolves the neighbor
+    * record, then picks its CONTEXT chunk; no same-pool neighbor → the
+    * slot drops and pad_with_reuse fills the batch — the contract's "skip
+    * rather than contaminate", src/config.rs:131-137) through an id-pruned
+    * read of the staged, record_id-sorted neighbor map — zero pool-scale
+    * work; `base` is a LocalRelation, so the id collect schedules no job.
+    * Returns (hasTemporal, plan): the PLAN only — callers localize it
+    * (and fuse several slots into one collect when any lane is temporal);
+    * slot sets without temporal selectors return the base projection
+    * untouched. */
+  private def chunkSources(dayOf: Seq[(String, Option[Int])], base: DataFrame,
+      neighborIndex: Map[Int, DataFrame]): (Boolean, DataFrame) = {
+    // fallback rows carry the `_fallback_same_split`-suffixed recipe name
+    // (crossSplitPick) — match both forms
+    def forms(ns: Seq[String]) = ns ++ ns.map(_ + Recipes.FallbackSuffix)
+    val temporal = dayOf.collect { case (n, Some(d)) => (n, d) }
+    if (temporal.isEmpty) (false, base.select(col("draw"), col("record_id")))
+    else {
+      val plainNames = dayOf.collect { case (n, None) => n }
+      val lanes = temporal.groupBy(_._2).toSeq.sortBy(_._1).map { case (d, rs) =>
+        val forIds = base.filter(col("recipe").isin(forms(rs.map(_._1)): _*))
+          .select(col("draw"), col("record_id"))
+        val ids = forIds.select(col("record_id")).collect().map(_.getLong(0)).distinct.toSeq
+        forIds.join(neighborIndex(d).filter(col("record_id").isin(ids: _*)), Seq("record_id"))
+          .select(col("draw"), col("nbid").as("record_id"))
+      }
+      val plain =
+        if (plainNames.isEmpty) Nil
+        else Seq(base.filter(col("recipe").isin(forms(plainNames): _*))
+          .select(col("draw"), col("record_id")))
+      (true, (plain ++ lanes).reduce(_ unionByName _))
+    }
   }
 
-  /** Slot schedule: driver-side counter arithmetic only — (draw, epoch,
-    * pos, recipe) per slot, with the mid-batch epoch advance when the
-    * interleave cycle completes. `planFor` yields the (re-shuffled) ticket
-    * plan of an epoch. Returns (slots, endEpoch, endCursor). */
   /** The state a `batch`-draw [[nextBatch]] call will RETURN, computed
     * without running it: the cursor/epoch walk is pure counter
     * arithmetic over `poolSize` (the persisted per-source stats sum for
@@ -401,15 +365,15 @@ object Sampler {
     * ([[BatchPrefetcher]] `parallelism`): batch i+1's state never waits
     * on batch i's jobs, only on this arithmetic. Pinned equal to the
     * chained `nextBatch(...).state` sequence by StateAndRecipesSpec. */
-  def advanceState(st: SamplerState, batch: Int, poolSize: Long): SamplerState = {
-    val (_, e, cur) = scheduleSlots(st, batch, poolSize, _ => Seq(""))
-    st.copy(epoch = e, counters = st.counters
-      .updated("draw", st.counter("draw") + batch).updated("cursor", cur)
-      .updated("pool_size", poolSize))
-  }
+  def advanceState(st: SamplerState, batch: Int, poolSize: Long): SamplerState =
+    scheduleSlots(st, batch, poolSize, _ => Seq(""))._2
 
+  /** Slot schedule: driver-side counter arithmetic only — (draw, epoch,
+    * pos, recipe) per slot, with the mid-batch epoch advance when the
+    * interleave cycle completes. `planFor` yields the (re-shuffled) ticket
+    * plan of an epoch. Returns (slots, the state after the batch). */
   private def scheduleSlots(st: SamplerState, batch: Int, poolSize: Long,
-      planFor: Long => Seq[String]): (Seq[(Long, Long, Long, String)], Long, Long) = {
+      planFor: Long => Seq[String]): (Seq[(Long, Long, Long, String)], SamplerState) = {
     val drawBase = st.counter("draw")
     var e = st.epoch
     var cur = st.counter("cursor")
@@ -426,21 +390,56 @@ object Sampler {
       }
       i += 1
     }
-    (slotsB.result(), e, cur)
+    (slotsB.result(), st.copy(epoch = e, counters = st.counters
+      .updated("draw", drawBase + batch).updated("cursor", cur)
+      .updated("pool_size", poolSize)))
   }
 
-  /** The pool-rank sidecar's derivation (the PLAN — callers checkpoint
-    * or persist): per-source ranks (rn, nsrc), per-(source, date) ranks
-    * and date-group attrs for dated pools (rn2/dgs/drnk/dcnt), and the
-    * seeded fallback source order (srnk/scnt) folded in per row. ONE
-    * corpus pass over narrow columns — no text. [[composed]] derives it
-    * in-plan per batch (the pure-function default); a long-lived
-    * deployment builds it once per pool REFRESH through
-    * [[PoolRankIndex]] and passes the loaded table as `rankIndex`
-    * (reference pool staging, src/sampler/mod.rs:994-1151 — staged per
-    * refresh, not per batch). `srcCounts` is the caller's per-source
-    * stats collect (the epochPick identity — jvmHash ≡ the seeded
-    * column hash). */
+  /** The prologue every entry point shares: the staged per-source stats
+    * (sorted; #sources-bounded — the same table the reference keeps in
+    * memory per pool), which serve pool size, every epoch pick and the
+    * fallback source order with zero Spark jobs, then the slot schedule.
+    * The pool size is the persisted `pool_size` counter when set, else
+    * the stats' sum. Returns (srcCounts, slots, the state after the
+    * batch). */
+  private def schedule(st: SamplerState, batch: Int, srcStats: Option[Seq[(String, Long)]],
+      planFor: Long => Seq[String])
+      : (Seq[(String, Long)], Seq[(Long, Long, Long, String)], SamplerState) = {
+    require(batch > 0, "batch must be > 0")
+    require(srcStats.nonEmpty, "srcStats is required: pass the staged per-source " +
+      "stats (PoolRankIndex.stage, or ComposedIndexQueries.rankIndexAndStats)")
+    val srcCounts = srcStats.get.sortBy(_._1)
+    val cached = st.counter("pool_size")
+    val poolSize = if (cached > 0L) cached else srcCounts.map(_._2).sum
+    require(poolSize > 0, "empty record pool")
+    val (slots, st2) = scheduleSlots(st, batch, poolSize, planFor)
+    (srcCounts, slots, st2)
+  }
+
+  /** Record pick: each slot's record off its epoch's interleave
+    * ([[Mixing.epochPick]] — bounded-position pick, the dense order
+    * inverted analytically instead of a corpus-wide position column per
+    * batch), as a driver-local relation of (draw, epoch, recipe,
+    * [reason,] record_id, source). `er0` is the rank sidecar's staged
+    * epoch-0 rank, so the per-batch rank window disappears for the entire
+    * first epoch; `reasonOf` adds the triplet slots' strategy tag. */
+  private def slotRecords(spark: SparkSession, pool: DataFrame,
+      slots: Seq[(Long, Long, Long, String)], srcCounts: Seq[(String, Long)],
+      er0: Option[DataFrame], reasonOf: Option[String => String]): DataFrame = {
+    import spark.implicits._
+    localRelation(spark, slots.groupBy(_._2).toSeq.sortBy(_._1).map { case (ep, ss) =>
+      val sdf = ss.map(s => (s._1, s._3, s._4, reasonOf.map(_(s._4)).orNull))
+        .toDF("draw", "pos", "recipe", "reason")
+      val pre = if (ep == 0) er0.map(_.select(col("source"), col("er0").as("r"), col("id")))
+        else None
+      Mixing.epochPick(pool, ep, ss.map(_._3), Some(srcCounts), pre)
+        .join(broadcast(sdf), "pos")
+        .select(Seq(col("draw"), lit(ep).as("epoch"), col("recipe")) ++
+          reasonOf.map(_ => col("reason")) ++
+          Seq(col("id").as("record_id"), col("source")): _*)
+    }.reduce(_ unionByName _))
+  }
+
   /** The seeded fallback source order as (source, srnk, nsrc) — the ONE
     * derivation both the sidecar build ([[rankSidecar]]'s srnk/scnt
     * columns, persisted at refresh) and the serving-time fallback
@@ -456,6 +455,17 @@ object Sampler {
       .map { case (src, i) => (src, i.toLong, cnt(src)) }
   }
 
+  /** The pool-rank sidecar's derivation (the PLAN — callers stage it):
+    * per-source ranks (rn, nsrc), the epoch-0 interleave rank (er0),
+    * per-(source, date) ranks and date-group attrs for dated pools
+    * (rn2/dgs/drnk/dcnt), and the seeded fallback source order
+    * (srnk/scnt) folded in per row. ONE corpus pass over narrow columns —
+    * no text. Built once per pool REFRESH through [[PoolRankIndex]]
+    * (persisted with `save`, or in memory with `stage`) and served to
+    * every batch as `rankIndex` (reference pool staging,
+    * src/sampler/mod.rs:994-1151 — staged per refresh, not per batch).
+    * `srcCounts` is the per-source stats collect (the epochPick identity
+    * — jvmHash ≡ the seeded column hash). */
   def rankSidecar(pool: DataFrame, srcCounts: Seq[(String, Long)]): DataFrame = {
     val spark = pool.sparkSession
     import spark.implicits._
@@ -500,12 +510,68 @@ object Sampler {
     base.join(broadcast(sOrd), Seq("source")).select(cols0: _*)
   }
 
+  /** Produce the next batch of `batch` triplets.
+    *
+    * Each slot's negative RECORD is picked by its recipe's declared
+    * [[NegativeStrategy]] — the reference's per-slot strategy dispatch
+    * (reference: src/sampler/mod.rs:1329-1405 dispatch, strategy pools
+    * 994-1151):
+    *   - `WrongArticle`: same-source skip-the-anchor rank pick
+    *     (hash stream `neg:`);
+    *   - `QuestionAnswerMismatch`: the same pool shape but its own hash
+    *     stream (`negq:`) — a different record whose answer/context gets
+    *     paired against this anchor's question;
+    *   - `WrongPublicationDate`: two-level pick — a date group of the same
+    *     source OTHER than the anchor's (`negd:`), then a record inside it
+    *     (`negr:`). Requires a dated pool (a `date` column in `rankIndex`).
+    * In a dated pool, `WrongArticle` prefers
+    * same-source same-DATE candidates (tier 1, stream `nega:`) before the
+    * plain same-source pick — the reference's date preference
+    * (src/sampler/mod.rs:996-1032). Every strategy whose primary pool is
+    * empty (singleton source, or single date group for wrong-date) falls
+    * back to the cross-source same-split two-level pick (`negs:`/`negc:`)
+    * with the recipe name suffixed `_fallback_same_split`
+    * (src/sampler/mod.rs:1097-1151, 1391-1395). Every delivered row
+    * carries the strategy's `reason` tag.
+    *
+    * @param chunks chunk table (columns of [[graft.core.RecordChunk]]):
+    *               record_id, section_idx, role, view_kind, window_index,
+    *               overlap, wtext
+    * @param pool   record pool: `id`, `source` (one row per record) — read
+    *               only by the interleave pick of epochs after the first
+    * @param recipes resolved recipe set (configured or source defaults —
+    *               apply [[Recipes.resolve]]/[[Recipes.withAutoInjected]]
+    *               upstream)
+    * @param st     counters: `draw` (global, never resets — drives recipe
+    *               rotation and every hash pick), `cursor` (position in the
+    *               epoch's interleave, resets on epoch advance),
+    *               `pool_size` (epoch-stable pool count, computed once and
+    *               persisted — drop it via [[SamplerState]] on source
+    *               refresh so the next batch re-counts)
+    * @param decoration optional `(sampler, maxWindowTokens)`: decorate every
+    *               picked chunk with a KVP metadata prefix under the token
+    *               budget ([[Decoration.decorateColumn]]) before hashing —
+    *               the reference decorates inside the batch loop with a
+    *               per-(record, draw) key (src/sampler/mod.rs:1470-1508);
+    *               here the key is `dec:<slot>:<record_id>:<draw>` so the
+    *               three slots roll independent prefixes, exactly like the
+    *               decorated lane ([[Triplets.tripletRowsDecorated]])
+    * @param bm25Index the staged [[Bm25PoolIndex]]; required when any
+    *               recipe uses the BM25 negative backend
+    * @param rankIndex the pool's staged rank sidecar ([[PoolRankIndex]]:
+    *               `stage` in memory, or `save`/`load`); required. It
+    *               carries the `date` column WrongPublicationDate needs.
+    * @param srcStats the same staging's per-source stats; required
+    * @param neighborIndex the staged as-of neighbor map per temporal
+    *               offset ([[temporalNeighborsFull]]); required for every
+    *               offset a recipe's selectors use
+    */
   def nextBatch(spark: SparkSession, chunks: DataFrame, pool: DataFrame,
       recipes: Seq[TripletRecipe], st: SamplerState, batch: Int,
       decoration: Option[(graft.functions.KvpPrefixSampler, Int)] = None,
       bm25Index: Option[Bm25PoolIndex] = None,
-      rankIndex: Option[DataFrame] = None,
-      srcStats: Option[Seq[(String, Long)]] = None,
+      rankIndex: Option[DataFrame],
+      srcStats: Option[Seq[(String, Long)]],
       neighborIndex: Map[Int, DataFrame] = Map.empty): SamplerBatch = {
     val (schema, core, _, deduped, st2) = composed(spark, chunks, pool, recipes, st, batch,
       decoration, bm25Index, rankIndex, srcStats, neighborIndex)
@@ -518,128 +584,44 @@ object Sampler {
     * core, kept, deduped, state) — `core` every drawn triplet in draw
     * order, `kept` the identical-text rejection survivors, `deduped` the
     * seen-set survivors of those the entry points pad. */
-  private def composed(spark: SparkSession, chunks: DataFrame, poolArg: DataFrame,
+  private def composed(spark: SparkSession, chunks: DataFrame, pool: DataFrame,
       recipes: Seq[TripletRecipe], st: SamplerState, batch: Int,
-      decoration: Option[(graft.functions.KvpPrefixSampler, Int)] = None,
-      bm25Index: Option[Bm25PoolIndex] = None,
-      rankIndex: Option[DataFrame] = None,
-      srcStats: Option[Seq[(String, Long)]] = None,
-      neighborIndex: Map[Int, DataFrame] = Map.empty)
+      decoration: Option[(graft.functions.KvpPrefixSampler, Int)],
+      bm25Index: Option[Bm25PoolIndex],
+      rankIndex: Option[DataFrame],
+      srcStats: Option[Seq[(String, Long)]],
+      neighborIndex: Map[Int, DataFrame])
       : (StructType, Seq[Row], Seq[Row], Seq[Row], SamplerState) = {
     import spark.implicits._
-    require(batch > 0, "batch must be > 0")
+    require(rankIndex.nonEmpty, "rankIndex is required: pass the pool's staged " +
+      "rank sidecar (PoolRankIndex.stage, or ComposedIndexQueries.rankIndexAndStats)")
+    require(bm25Index.nonEmpty || !recipes.exists(_.negativeBackend == NegativeBackend.Bm25),
+      "BM25-backend recipes need a staged Bm25PoolIndex (bm25Index)")
+    requireNeighbors(recipes.flatMap(r =>
+      Seq(r.anchor, r.positive, r.negativeSelector).map(temporalDays)), neighborIndex)
     val byName = recipes.map(r => r.name -> r).toMap
     def localize(df: DataFrame): DataFrame = localRelation(spark, df) // see localRelation
-    // ONE pool materialization per batch: every downstream phase (epoch
-    // pick, rank sidecar, temporal lanes, bm25 postings) reads the
-    // checkpointed narrow pool instead of re-running the caller's
-    // scan+filter lineage (often a corpus tokenize) once per phase. Lazy:
-    // it lands inside the first job that touches it.
-    val pool = poolArg.localCheckpoint(eager = false)
-    // one per-source stats collect serves pool size, every epoch pick,
-    // and the fallback source order (#sources-bounded — the same table
-    // the reference keeps in memory per pool). A staged deployment passes
-    // `srcStats` — the PoolRankIndex-persisted stats (derived at index
-    // BUILD, values identical by construction) — and the per-batch pool
-    // scan disappears entirely.
-    val srcCounts: Seq[(String, Long)] = srcStats.map(_.sortBy(_._1)).getOrElse(
-      pool.groupBy(col("source"))
-        .agg(count(lit(1)).cast("long").as("n")).collect()
-        .map(r => (r.getString(0), r.getLong(1))).toSeq.sortBy(_._1))
-    val poolSize = {
-      val cached = st.counter("pool_size")
-      val n = if (cached > 0L) cached else srcCounts.map(_._2).sum
-      require(n > 0, "empty record pool")
-      n
-    }
-    val drawBase = st.counter("draw")
-    val (slots, e, cur) =
-      scheduleSlots(st, batch, poolSize, ep => Recipes.ticketOrder(recipes, st.seed, ep))
+    val (srcCounts, slots, st2) =
+      schedule(st, batch, srcStats, ep => Recipes.ticketOrder(recipes, st.seed, ep))
 
-    // ---- pool-rank sidecar (defined early; consumed by the negative
-    // dispatch below) ----
-    // ONE corpus pass ([[rankSidecar]]) builds per-source ranks and the
-    // dated-pool group attrs — checkpointed so the former seven
-    // strategy×tier lanes collapse into a single keyed plan reading a
-    // tiny materialized table instead of re-planning the corpus window
-    // subtree once per lane (the round-9 composed-sampler latency
-    // directive). A long-lived deployment passes `rankIndex` — the
-    // [[PoolRankIndex]]-persisted sidecar, derived once per pool
-    // REFRESH, not per batch (values bit-identical: the index IS this
-    // derivation persisted); the pure-function default derives it
-    // in-plan and cuts lineage.
-    val hasDate = pool.columns.contains("date")
-    rankIndex.foreach(ix => require(ix.columns.contains("date") == hasDate,
-      "rank index / pool schema mismatch: the index must be built from " +
-        "the same pool (date column presence differs)"))
-    val rankTbl = rankIndex.getOrElse(
-      rankSidecar(pool, srcCounts).localCheckpoint(eager = false))
-    if (rankIndex.nonEmpty && srcStats.isEmpty) {
-      // persisted sidecar WITHOUT its persisted stats: the fallback tier
-      // resolves its (srnk → source, rn) target against the SERVING-TIME
-      // srcCounts while the sidecar's srnk/scnt were baked at build — a
-      // pool that drifted since the index build would silently drop (or
-      // retarget) fallback draws through the inner (t_source, t_rn)
-      // join. One #sources-bounded aggregate over the sidecar fails
-      // loudly instead; staged deployments pass srcStats (the same
-      // persisted generation) and never pay this scan.
-      val idxCounts = rankTbl.groupBy(col("source"))
-        .agg(count(lit(1)).cast("long").as("n")).collect()
-        .map(r => (r.getString(0), r.getLong(1))).toSeq.sortBy(_._1)
-      require(idxCounts == srcCounts,
-        s"rank index / pool drift: per-source counts differ between the " +
-          s"persisted sidecar (${idxCounts.take(3)}…) and the serving pool " +
-          s"(${srcCounts.take(3)}…); rebuild the index or pass its srcStats")
-    }
-    // Overlap (DERIVATION path only): the sidecar depends only on `pool`,
-    // whose blocks the srcCounts collect above already materialized —
-    // force it on a background thread so its window stages run
-    // CONCURRENTLY with the slot-schedule jobs below instead of
-    // serializing inside the negative dispatch's job. Values are
-    // unaffected (the frame is deterministic and checkpoint blocks dedupe
-    // per partition); the join before the dispatch only bounds duplicated
-    // compute, never correctness. An INDEX-backed rankTbl is already a
-    // flat parquet leaf — forcing it would schedule a pool-scale read
-    // into nothing every batch, so the thread only runs when deriving.
-    val rankForce: Option[Thread] = if (rankIndex.nonEmpty) None else Some {
-      val t = new Thread(
-        () => try rankTbl.foreachPartition((_: Iterator[org.apache.spark.sql.Row]) => ())
-          catch { case _: Throwable => () },
-        "graft-rank-sidecar-force")
-      t.setDaemon(true)
-      t.start()
-      t
-    }
+    // ---- pool-rank sidecar, staged once per pool refresh
+    // ([[PoolRankIndex]]): the strategy×tier lanes read it through a
+    // single keyed plan. Its `date` column marks a dated pool. ----
+    val rankTbl = rankIndex.get
+    val hasDate = rankTbl.columns.contains("date")
 
     // ---- record pick: per-epoch interleave joined on position ----
     // Each composed frame from here on is BATCH-sized and feeds several
-    // downstream consumers; localCheckpoint() materializes it eagerly so
-    // every subsequent job plans over a tiny leaf instead of replaying
-    // (and re-optimizing, and re-describing to the SQL listener) the whole
-    // upstream tree. Without the cuts the final plan duplicates the pick
+    // downstream consumers; localize() materializes it as a driver-local
+    // relation so every subsequent job plans over a tiny leaf instead of
+    // replaying (and re-optimizing, and re-describing to the SQL listener)
+    // the whole upstream tree. Without the cuts the final plan duplicates the pick
     // subtree ~6x and a 6-batch golden run spends ~100 s/batch just
     // BUILDING plan strings (ExplainUtils on every AQE stage update).
     // Values are unaffected — every column is a pure (seed, epoch, draw)
     // function; only lineage is cut.
-    val slotRec = localize(slots.groupBy(_._2).toSeq.sortBy(_._1).map { case (ep, ss) =>
-      val sdf = ss.map(s => (s._1, s._3, s._4, byName(s._4).negative.reason))
-        .toDF("draw", "pos", "recipe", "reason")
-      // bounded-position pick: invert the dense order analytically instead
-      // of materializing a corpus-wide position column per batch. On the
-      // staged path, epoch 0's per-source seeded rank is the sidecar's
-      // persisted `er0` column — the per-batch rank window disappears
-      // for the entire first epoch (derivation-path batches keep the
-      // window: reading the lazily-checkpointed in-plan sidecar here
-      // would serialize slotRec behind its materialization)
-      val pre = if (ep == 0)
-        rankIndex.filter(_.columns.contains("er0"))
-          .map(_.select(col("source"), col("er0").as("r"), col("id")))
-      else None
-      Mixing.epochPick(pool, ep, ss.map(_._3), Some(srcCounts), pre)
-        .join(broadcast(sdf), "pos")
-        .select(col("draw"), lit(ep).as("epoch"), col("recipe"), col("reason"),
-          col("id").as("record_id"), col("source"))
-    }.reduce(_ unionByName _))
+    val slotRec = slotRecords(spark, pool, slots, srcCounts, Some(rankTbl),
+      Some(name => byName(name).negative.reason))
 
     // ---- anchor chunk-pick metadata (driver-side; the bm25 lane's query
     // text is the anchor pick) ----
@@ -647,48 +629,18 @@ object Sampler {
       val (am, aa) = selectorDesc(byName(name).anchor)
       (draw, am, aa)
     }.toDF("draw", "a_mode", "a_arg")
-    // ---- chunk-source records per slot: temporal selectors swap in the
-    // as-of neighbor (reference select_chunk, src/sampler/mod.rs:1701-1704:
-    // TemporalOffset resolves the neighbor record, then picks its CONTEXT
-    // chunk; no same-pool neighbor → the slot drops and pad_with_reuse
-    // fills the batch — the contract's "skip rather than contaminate",
-    // src/config.rs:131-137). Non-temporal slot sets return the base frame
-    // untouched, so recipe sets without temporal selectors plan exactly as
-    // before. Temporal lanes are checkpointed: their upstream is a
-    // pool-scale neighbor join that several consumers replay otherwise.
-    // (hasTemporal, plan): the chunk-source record per (draw) for one
-    // slot's selector set — the PLAN only; callers localize (and fuse
-    // several slots into one collect when any lane is temporal)
+    // ---- chunk-source records per slot ([[chunkSources]]: temporal
+    // selectors swap in the staged as-of neighbor) ----
     def chunkRecordsPlan(sel: TripletRecipe => Selector, base: DataFrame)
-        : (Boolean, DataFrame) = {
-      // fallback rows carry the `_fallback_same_split`-suffixed recipe
-      // name (crossSplitPick) — match both forms
-      def forms(ns: Seq[String]) = ns ++ ns.map(_ + Recipes.FallbackSuffix)
-      val dayOf = recipes.map(r => r.name -> temporalDays(sel(r)))
-      val temporal = dayOf.collect { case (n, Some(d)) => (n, d) }
-      if (temporal.isEmpty) (false, base.select(col("draw"), col("record_id")))
-      else {
-        val plainNames = dayOf.collect { case (n, None) => n }
-        val lanes = temporal.groupBy(_._2).toSeq.sortBy(_._1).map { case (d, rs) =>
-          val forIds = base.filter(col("recipe").isin(forms(rs.map(_._1)): _*))
-            .select(col("draw"), col("record_id"))
-          forIds.join(neighborsFor(pool, d, forIds, neighborIndex), Seq("record_id"))
-            .select(col("draw"), col("nbid").as("record_id"))
-        }
-        val plain =
-          if (plainNames.isEmpty) Nil
-          else Seq(base.filter(col("recipe").isin(forms(plainNames): _*))
-            .select(col("draw"), col("record_id")))
-        (true, (plain ++ lanes).reduce(_ unionByName _))
-      }
-    }
+        : (Boolean, DataFrame) =
+      chunkSources(recipes.map(r => r.name -> temporalDays(sel(r))), base, neighborIndex)
     def chunkRecords(sel: TripletRecipe => Selector, base: DataFrame): DataFrame = {
       val (temporal, plan) = chunkRecordsPlan(sel, base)
       if (temporal) localize(plan) else plan
     }
 
     // ---- negative record: fused strategy × tier dispatch over the
-    // rank sidecar defined (and force-started) above ----
+    // staged rank sidecar ----
     def drawKey(prefix: String) = Determinism.portableHash(
       concat(lit(s"$prefix:${st.seed}:"), col("draw").cast("string"), lit(":"),
         col("record_id").cast("string")))
@@ -741,7 +693,7 @@ object Sampler {
     def strategyPick(anchors: DataFrame, strategies: Seq[NegativeStrategy]): DataFrame = {
       if (strategies.contains(NegativeStrategy.WrongPublicationDate))
         require(hasDate,
-          "WrongPublicationDate recipes need a `date` column in the pool")
+          "WrongPublicationDate recipes need a `date` column in the pool the rank index was built from")
       val metaCols = Seq(col("id").as("record_id"), col("rn").as("a_rn"), col("nsrc"),
         col("srnk"), col("scnt")) ++
         (if (hasDate) Seq(col("date").as("a_date"), col("rn2").as("a_rn2"), col("dgs"),
@@ -829,63 +781,21 @@ object Sampler {
         .map(_.negative).distinct
     val bmNames = recipes.filter(_.negativeBackend == NegativeBackend.Bm25).map(_.name)
 
-    // ---- BM25 scoring sidecar (slot-INDEPENDENT): postings → weighted
-    // per-(source, term, cand) e6 term scores. Everything here is a pure
-    // function of the pool and the batch's source set — no dependency on
-    // which chunk each slot picked — so it is checkpointed and FORCED on a
-    // background thread right after the slot schedule: the tokenize + df
-    // window chain (the lane's most expensive stages) overlaps the rank
-    // sidecar and the a/p pick chain instead of serializing inside the
-    // negative dispatch's job. At deployment scale this table IS the
-    // persisted [[Bm25PoolIndex]] (derived per pool refresh, not per
-    // batch); the pure-function default derives it in-plan per batch.
+    // ---- BM25 scoring sidecar (slot-INDEPENDENT): the staged
+    // weighted-term table of the [[Bm25PoolIndex]] — per-(source, term,
+    // cand) e6 term scores, the whole df/idf/tf-part pass run once per
+    // pool refresh — filtered to the batch's anchor sources. No checkpoint
+    // and no background force: the staged table is a flat leaf already
+    // (parquet, or an in-memory staging), the scoring join streams it with
+    // the source filter pruning row groups; a checkpoint would only
+    // re-materialize a pool-scale table into the block store per batch
+    // (A/B'd wall-neutral locally, strictly worse at scale).
     val wtermPre: Option[DataFrame] = if (bmNames.isEmpty) None else Some {
-      require(bm25Index.nonEmpty || pool.columns.contains("btoks"),
-        "BM25-backend recipes need a `btoks` token-array column in the pool " +
-          "(or a prebuilt Bm25PoolIndex)")
       // batch-bounded source list, deduped on the driver (slotRec is a
-      // LocalRelation — no job): the restriction lands as an isin PUSHDOWN
-      // on the derived-postings path and a LocalRelation broadcast on the
-      // persisted-index path
+      // LocalRelation — no job)
       val srcList = slotRec.filter(col("recipe").isin(bmNames: _*))
         .select(col("source")).collect().map(_.getString(0)).distinct.toSeq
-      // Three tiers, bit-identical by construction (one formula —
-      // [[Bm25PoolIndex.weightedTerms]] — pinned in InvariantsSpec):
-      //   1. staged wterm in the prebuilt index: the whole df/idf/tf-part
-      //      pass ran at BUILD time; the batch path is a source-filtered
-      //      parquet read (row-group pruned) — zero pool-scale work;
-      //   2. raw prebuilt postings (pre-staging generation): weight
-      //      per batch over the persisted tf table;
-      //   3. no index: derive postings from the source-restricted pool,
-      //      then weight (the pure-function default).
-      bm25Index.flatMap(_.wterm) match {
-        case Some(w) =>
-          // no checkpoint and no background force: the staged table is a
-          // flat parquet leaf already — the scoring join streams it with
-          // the source filter pruning row groups; a checkpoint would only
-          // re-materialize a pool-scale table into the block store per
-          // batch (A/B'd wall-neutral locally, strictly worse at scale)
-          w.filter(col("source").isin(srcList: _*))
-        case None =>
-          val srcs = srcList.toDF("source")
-          val (tf, stats) = bm25Index match {
-            case Some(ix) =>
-              (ix.postings.join(broadcast(srcs), "source"),
-                ix.srcStats.join(broadcast(srcs), "source"))
-            case None =>
-              val ix = Bm25PoolIndex.fromPool(pool.filter(col("source").isin(srcList: _*)))
-              (ix.postings, ix.srcStats)
-          }
-          val w = Bm25PoolIndex.weightedTerms(tf, stats).localCheckpoint(eager = false)
-          // derivation path: force the checkpoint on a background thread
-          // so the tokenize/window chain overlaps the a/p pick jobs
-          val t = new Thread(
-            () => try w.foreachPartition((_: Iterator[org.apache.spark.sql.Row]) => ())
-              catch { case _: Throwable => () },
-            "graft-bm25-wterm-force")
-          t.setDaemon(true); t.start()
-          w
-      }
+      bm25Index.get.wterm.filter(col("source").isin(srcList: _*))
     }
 
     /** Bm25Backend lanes (reference: bm25_backend.rs:120-174): re-rank the
@@ -895,9 +805,8 @@ object Sampler {
       * reference's per-(anchor, split) cursor — and fall back to the
       * DefaultBackend pick for slots whose scored intersection is empty.
       *
-      * Scale shape: candidates/tf/stats are semi-joined to the BATCH's
-      * anchor sources, and the whole weighted-term table is the
-      * pre-forced checkpoint above. The anchor⋈candidate product passes
+      * Scale shape: the staged weighted-term table is filtered to the
+      * BATCH's anchor sources and query terms. The anchor⋈candidate product passes
       * through ONE (source, term) join (the q85 lane's shape). The
       * anchor-text pick re-runs the final a-slot's pure pick (stream
       * `sel:a:` — bit-identical text) over the a/p chain's ALREADY
@@ -920,8 +829,8 @@ object Sampler {
         if (!strategiesOf(NegativeBackend.Bm25).contains(NegativeStrategy.WrongPublicationDate))
           scoredAll
         else scoredAll
-          .join(pool.select(col("id").as("record_id"), col("date").as("a_date")), "record_id")
-          .join(pool.select(col("id").as("cand"), col("date").as("c_date")), "cand")
+          .join(rankTbl.select(col("id").as("record_id"), col("date").as("a_date")), "record_id")
+          .join(rankTbl.select(col("id").as("cand"), col("date").as("c_date")), "cand")
           .filter(col("reason") =!= wdReason || col("a_date") =!= col("c_date"))
       val scored = scoredF.groupBy(col("draw"), col("record_id"), col("cand"))
         .agg(sum(col("term_e6")).as("score_e6"))
@@ -974,9 +883,9 @@ object Sampler {
     // ---- the ENTIRE anchor + positive pick chain, run CONCURRENTLY with
     // the negative dispatch below: chunk-source records (temporal neighbor
     // swap) → batch-restricted chunk checkpoint → ONE fused a/p window
-    // pick → localized per-draw pivot. The a/p lanes read only pool +
-    // slotRec (both materialized), never the negative lane, so a second
-    // thread overlaps their pool-scale neighbor joins AND the chunk
+    // pick → localized per-draw pivot. The a/p lanes read only slotRec
+    // (materialized) and the staged neighbor maps, never the negative
+    // lane, so a second thread overlaps their neighbor reads AND the chunk
     // derivation/window stages with the dispatch's job instead of
     // serializing after it. Only the n-slot pick has to wait for the
     // negative dispatch — it runs on the main thread below over its own
@@ -1049,18 +958,17 @@ object Sampler {
     // join needs apPicks only later): one narrow window over the
     // batch-restricted chunk leaf, materialized as a LocalRelation. The
     // batch's DISTINCT TERM SET then becomes an isin PREDICATE on the
-    // weighted-term side — on the staged-index tier that pushes into the
-    // wterm parquet scan (sorted by (source, term), so row groups
-    // prune), on the derived tiers it shrinks the scoring join's input
-    // from every term the batch's sources ever used to the ~hundreds the
-    // batch actually asks about. This is the reference's per-term
+    // weighted-term side, which pushes into the wterm parquet scan
+    // (sorted by (source, term), so row groups prune) and shrinks the
+    // scoring join's input from every term the batch's sources ever used
+    // to the ~hundreds the batch actually asks about. This is the reference's per-term
     // postings probe (bm25_backend.rs:120-174 probes its HashMap per
     // query term) re-expressed as scan pruning; term weights are
-    // per-(source,term) constants fixed at build/derive time, so
+    // per-(source,term) constants fixed at build time, so
     // dropping never-joined terms cannot move a score. Formerly this
     // collect ran serially inside the negative dispatch; moving it here
-    // overlaps it with the slot schedule / sidecar work on the main
-    // thread — values untouched (the qterms frame is a pure function of
+    // overlaps it with the default dispatch on the main thread — values
+    // untouched (the qterms frame is a pure function of
     // the prep outputs).
     val qtermsTask = new java.util.concurrent.FutureTask(() => {
       val (aRecsAll, _, chunksAP) = apPrepTask.get()
@@ -1086,9 +994,6 @@ object Sampler {
     }
 
     val negRec = {
-      // bound duplicated compute: let the background sidecar force finish
-      // before the dispatch job reads it (values identical either way)
-      rankForce.foreach(_.join())
       val dflt = strategyPick(
         if (bmNames.isEmpty) slotRec else slotRec.filter(!col("recipe").isin(bmNames: _*)),
         strategiesOf(NegativeBackend.Default))
@@ -1152,10 +1057,6 @@ object Sampler {
     val allowSame = slots.map(s => s._1 -> byName(s._4).allowSameAnchorPositive).toMap
     val kept = core.filter(r => allowSame(r.getLong(0)) || r.get(ia) != r.get(ip))
     val deduped = seenFirst(kept, schema, Seq("record_id", "a_widx", "p_widx", "nid"))
-
-    val st2 = st.copy(epoch = e, counters = st.counters
-      .updated("draw", drawBase + batch).updated("cursor", cur)
-      .updated("pool_size", poolSize))
     (schema, core, kept, deduped, st2)
   }
 
@@ -1167,16 +1068,18 @@ object Sampler {
     * counters as [[nextBatch]] (shared cursor/epoch/draw: the entry points
     * continue one global sequence, and resume covers them all). `core` is
     * the post-rejection pair stream keyed by (draw, pair index);
-    * `rows` pads to exactly `batch` pairs. */
+    * `rows` pads to exactly `batch` pairs. Takes the same staged indexes
+    * as [[nextBatch]]. */
   def nextPairBatch(spark: SparkSession, chunks: DataFrame, pool: DataFrame,
       recipes: Seq[TripletRecipe], st: SamplerState, batch: Int,
       decoration: Option[(graft.functions.KvpPrefixSampler, Int)] = None,
-      rankIndex: Option[DataFrame] = None,
-      srcStats: Option[Seq[(String, Long)]] = None,
+      bm25Index: Option[Bm25PoolIndex] = None,
+      rankIndex: Option[DataFrame],
+      srcStats: Option[Seq[(String, Long)]],
       neighborIndex: Map[Int, DataFrame] = Map.empty): SamplerBatch = {
     val nTrip = (batch + 1) / 2
     val (trip, _, kept, deduped, st2) = composed(spark, chunks, pool, recipes, st, nTrip,
-      decoration, None, rankIndex, srcStats, neighborIndex)
+      decoration, bm25Index, rankIndex, srcStats, neighborIndex)
     val Seq(iDraw, iEpoch, iRecipe, iRec, iNid, iA, iP, iN, iReason) = Seq("draw", "epoch",
       "recipe", "record_id", "nid", "a_hash", "p_hash", "n_hash", "reason").map(trip.fieldIndex)
     val schema = StructType(Seq(trip(iDraw),
@@ -1209,63 +1112,31 @@ object Sampler {
     * order and counters as the triplet entry points; one selector chunk
     * pick per draw (hash stream `sel:t:`), seen-set dedup by the chunk key
     * (record, section, window) keeping the earliest draw, pad to `batch`.
-    * Temporal selectors swap in the as-of neighbor exactly like
-    * [[nextBatch]]'s anchor lane. No negative dispatch ⇒ no rank sidecar
-    * is derived here, so there is no `rankIndex` parameter: a staged
-    * deployment serves the POOL from the persisted [[PoolRankIndex]]
-    * (its (id, source) columns) and passes it as `poolArg`. */
-  def nextTextBatch(spark: SparkSession, chunks: DataFrame, poolArg: DataFrame,
+    * Temporal selectors swap in the staged as-of neighbor exactly like
+    * [[nextBatch]]'s anchor lane. No negative dispatch ⇒ no rank sidecar,
+    * so there is no `rankIndex` parameter; `srcStats` (required) is the
+    * pool's staged per-source stats, and a staged deployment serves the
+    * POOL from the persisted [[PoolRankIndex]]'s (id, source) columns. */
+  def nextTextBatch(spark: SparkSession, chunks: DataFrame, pool: DataFrame,
       textRecipes: Seq[TextRecipe], st: SamplerState, batch: Int,
       decoration: Option[(graft.functions.KvpPrefixSampler, Int)] = None,
-      srcStats: Option[Seq[(String, Long)]] = None,
+      srcStats: Option[Seq[(String, Long)]],
       neighborIndex: Map[Int, DataFrame] = Map.empty): SamplerBatch = {
     import spark.implicits._
-    require(batch > 0, "batch must be > 0")
+    val dayOf = textRecipes.map(r => r.name -> temporalDays(r.selector))
+    requireNeighbors(dayOf.map(_._2), neighborIndex)
     val byName = textRecipes.map(r => r.name -> r).toMap
-    def localize(df: DataFrame): DataFrame = localRelation(spark, df)
-    val pool = poolArg.localCheckpoint(eager = false) // one materialization (see composed)
-    val srcCounts: Seq[(String, Long)] = srcStats.map(_.sortBy(_._1)).getOrElse(
-      pool.groupBy(col("source"))
-        .agg(count(lit(1)).cast("long").as("n")).collect()
-        .map(r => (r.getString(0), r.getLong(1))).toSeq.sortBy(_._1))
-    val poolSize = {
-      val cached = st.counter("pool_size")
-      val n = if (cached > 0L) cached else srcCounts.map(_._2).sum
-      require(n > 0, "empty record pool")
-      n
-    }
-    val drawBase = st.counter("draw")
-    val (slots, e, cur) = scheduleSlots(st, batch, poolSize,
+    val (srcCounts, slots, st2) = schedule(st, batch, srcStats,
       ep => Recipes.textTicketOrder(textRecipes, st.seed, ep))
-    val slotRec = localize(slots.groupBy(_._2).toSeq.sortBy(_._1).map { case (ep, ss) =>
-      val sdf = ss.map(s => (s._1, s._3, s._4)).toDF("draw", "pos", "recipe")
-      Mixing.epochPick(pool, ep, ss.map(_._3), Some(srcCounts)).join(broadcast(sdf), "pos")
-        .select(col("draw"), lit(ep).as("epoch"), col("recipe"),
-          col("id").as("record_id"), col("source"))
-    }.reduce(_ unionByName _))
+    val slotRec = slotRecords(spark, pool, slots, srcCounts, None, None)
     val slotMeta = slots.map { case (draw, _, _, name) =>
       val (m, a) = selectorDesc(byName(name).selector)
       (draw, m, a)
     }.toDF("draw", "mode", "arg")
     // temporal selectors: the chunk-source record is the as-of neighbor
     val tRecs = {
-      val dayOf = textRecipes.map(r => r.name -> temporalDays(r.selector))
-      val temporal = dayOf.collect { case (n, Some(d)) => (n, d) }
-      if (temporal.isEmpty) slotRec.select(col("draw"), col("record_id"))
-      else {
-        val plainNames = dayOf.collect { case (n, None) => n }
-        val lanes = temporal.groupBy(_._2).toSeq.sortBy(_._1).map { case (d, rs) =>
-          val forIds = slotRec.filter(col("recipe").isin(rs.map(_._1): _*))
-            .select(col("draw"), col("record_id"))
-          forIds.join(neighborsFor(pool, d, forIds, neighborIndex), Seq("record_id"))
-            .select(col("draw"), col("nbid").as("record_id"))
-        }
-        val plain =
-          if (plainNames.isEmpty) Nil
-          else Seq(slotRec.filter(col("recipe").isin(plainNames: _*))
-            .select(col("draw"), col("record_id")))
-        localize((plain ++ lanes).reduce(_ unionByName _))
-      }
+      val (temporal, plan) = chunkSources(dayOf, slotRec, neighborIndex)
+      if (temporal) localRelation(spark, plan) else plan
     }
     val ids = tRecs.select(col("record_id")).collect().map(_.getLong(0)).distinct.toSeq
     val chunksR = chunks.filter(col("record_id").isin(ids: _*)).localCheckpoint(eager = false)
@@ -1285,7 +1156,7 @@ object Sampler {
         col("section_idx").cast("long").as("t_sidx"),
         col("window_index").cast("long").as("t_widx"),
         Determinism.portableHash(tText).as("t_hash"))
-    val core = localize(slotRec
+    val core = localRelation(spark, slotRec
       .join(pick, Seq("draw"))
       .select(col("draw"), col("epoch"), col("recipe"), col("record_id"),
         col("chunk_record"), col("t_sidx"), col("t_widx"), col("t_hash")))
@@ -1293,10 +1164,7 @@ object Sampler {
     // chunk_key dedup, src/sampler/mod.rs:2288-2292)
     def rows = padded(spark,
       seenFirst(core.collect().toSeq, core.schema, Seq("chunk_record", "t_sidx", "t_widx")),
-      core.schema, "draw", batch, s"padt:${st.seed}:$drawBase")
-    val st2 = st.copy(epoch = e, counters = st.counters
-      .updated("draw", drawBase + batch).updated("cursor", cur)
-      .updated("pool_size", poolSize))
+      core.schema, "draw", batch, s"padt:${st.seed}:${st.counter("draw")}")
     SamplerBatch(core, () => rows, st2)
   }
 }

@@ -31,8 +31,9 @@ import java.nio.file.{Files, Path, Paths}
   *
   * Values are bit-identical to the in-plan derivation by construction
   * (the index IS the derivation persisted — PoolRankIndex/Bm25PoolIndex
-  * scaladoc, pinned by InvariantsSpec), so index-backed batches equal
-  * derived batches row for row and the lanes' oracles need no change.
+  * scaladoc, pinned by InvariantsSpec), so parquet-backed batches equal
+  * in-memory staged batches row for row and the lanes' oracles replay
+  * the derivation.
   */
 object ComposedIndexQueries extends QueryModule {
 
@@ -174,11 +175,11 @@ object ComposedIndexQueries extends QueryModule {
   def rankIndex(s: SparkSession, dir: String, tag: String, pool: DataFrame): DataFrame =
     rankIndexAndStats(s, dir, tag, pool)._1
 
-  /** [[rankIndex]] plus the persisted per-source stats — the serving
-    * lanes hand the stats to [[graft.operators.Sampler.nextBatch]] so the
-    * per-batch pool-scan collect disappears (zero Spark jobs: the stats
-    * are a driver-side metadata file written at build). None only on a
-    * pre-v3 cache, where the sampler falls back to the collect. */
+  /** [[rankIndex]] plus the persisted per-source stats — the pair the
+    * serving lanes hand to [[graft.operators.Sampler.nextBatch]] (zero
+    * Spark jobs for the stats: a driver-side metadata file written at
+    * build). Always `Some`: every cache at the current [[DefVersion]]
+    * carries the stats, and loading one without them fails. */
   def rankIndexAndStats(s: SparkSession, dir: String, tag: String,
       pool: DataFrame): (DataFrame, Option[Seq[(String, Long)]]) = {
     val path = cacheDir(dir).resolve(s"rank_$tag")
@@ -187,7 +188,7 @@ object ComposedIndexQueries extends QueryModule {
       PoolRankIndex.save(PoolRankIndex.build(pool), path.toString)
     }
     loaded(s, path, fp)(
-      (PoolRankIndex.load(s, path.toString), PoolRankIndex.loadSrcStats(path.toString)))
+      (PoolRankIndex.load(s, path.toString), Some(PoolRankIndex.loadSrcStats(path.toString))))
   }
 
   /** The persisted CHUNK TABLE for a composed corpus slice — the last

@@ -67,13 +67,13 @@ class ClusterGoldenSpec extends AnyFunSuite with GoldenHarness {
     // rank-index-backed and bm25-index-backed runs (parquet sidecars read
     // by executor JVMs) against the same committed pins
     val (bRank, _, _) = runGolden(batch = 8, nBatches = 45, parts = 4,
-      seed = "gm:default", cols = goldenCols :+ "reason", useRankIndex = true)
+      seed = "gm:default", cols = goldenCols :+ "reason", persistIndex = true)
     assert(seqDigest(bRank) == MatrixPins("default"),
       "rank-index-backed sequence diverged on local-cluster")
     val bmCfg = goldenMatrix.collect { case ("bm25", r, _, _) => r }.head
     val (bBm, _, _) = runGolden(batch = 8, nBatches = 45, parts = 4,
       recipes = bmCfg, seed = "gm:bm25", cols = goldenCols :+ "reason",
-      useBm25Index = true, persistIndex = true)
+      persistIndex = true)
     assert(seqDigest(bBm) == MatrixPins("bm25"),
       "bm25-index-backed sequence diverged on local-cluster")
   }

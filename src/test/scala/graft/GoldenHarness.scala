@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{Recipes, Sampler, SamplerState}
+import graft.operators.{Bm25PoolIndex, PoolRankIndex, Recipes, Sampler, SamplerState}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
@@ -82,40 +82,43 @@ trait GoldenHarness {
       seed: String = "gseq", dated: Boolean = false,
       cols: Seq[String] = goldenCols,
       decoration: Option[(graft.functions.KvpPrefixSampler, Int)] = None,
-      useBm25Index: Boolean = false,
-      persistIndex: Boolean = false,
-      useRankIndex: Boolean = false) = {
-    val timed = recipes.exists(r =>
-      Seq(r.anchor, r.positive, r.negativeSelector)
-        .exists(Sampler.temporalDays(_).isDefined))
+      persistIndex: Boolean = false) = {
+    val days = recipes.flatMap(r => Seq(r.anchor, r.positive, r.negativeSelector))
+      .flatMap(Sampler.temporalDays).distinct
     val lexical = recipes.exists(
       _.negativeBackend == graft.operators.NegativeBackend.Bm25)
-    val (chunks0, pool0) = goldenCorpus(dated, timed, lexical)
+    val (chunks0, pool0) = goldenCorpus(dated, days.nonEmpty, lexical)
     val chunks = chunks0.repartition(parts).cache()
     val pool = pool0.repartition(parts).cache()
-    // the cross-batch postings cache: built ONCE (checkpointed), reused by
-    // every nextBatch call — the Bm25PoolIndex contract
-    val poolIdx = if (!useBm25Index) None else {
-      val ix = graft.operators.Bm25PoolIndex.fromPool(pool)
-      if (persistIndex) {
-        // the long-lived deployment path: postings round-trip parquet
-        val dir = java.nio.file.Files.createTempDirectory("graft_poolix")
-          .toString + "/ix"
-        graft.operators.Bm25PoolIndex.save(ix, dir)
-        Some(graft.operators.Bm25PoolIndex.load(spark, dir))
-      } else Some(graft.operators.Bm25PoolIndex(
-        ix.postings.localCheckpoint(), ix.srcStats.localCheckpoint()))
+    // every index the recipes need is staged ONCE per pool and reused by
+    // every nextBatch call: in memory, or (persistIndex) round-tripped
+    // through parquet like a long-lived deployment
+    def ixDir(tag: String) =
+      java.nio.file.Files.createTempDirectory(tag).toString + "/ix"
+    val (rankIdx, stats) =
+      if (!persistIndex) PoolRankIndex.stage(pool)
+      else {
+        val dir = ixDir("graft_rankix")
+        PoolRankIndex.save(PoolRankIndex.build(pool), dir)
+        (PoolRankIndex.load(spark, dir), PoolRankIndex.loadSrcStats(dir))
+      }
+    val bm25Idx = if (!lexical) None else Some {
+      val ix = Bm25PoolIndex.fromPool(pool)
+      if (!persistIndex) Bm25PoolIndex(ix.postings, ix.srcStats, ix.wterm.localCheckpoint())
+      else {
+        val dir = ixDir("graft_poolix")
+        Bm25PoolIndex.save(ix, dir)
+        Bm25PoolIndex.load(spark, dir)
+      }
     }
-    // the persisted pool-rank sidecar: built ONCE per pool refresh,
-    // round-tripped through parquet, reused by every nextBatch call —
-    // the PoolRankIndex contract (values ≡ the in-plan derivation)
-    val rankIdx = if (!useRankIndex) None else {
-      val dir = java.nio.file.Files.createTempDirectory("graft_rankix")
-        .toString + "/ix"
-      graft.operators.PoolRankIndex.save(
-        graft.operators.PoolRankIndex.build(pool), dir)
-      Some(graft.operators.PoolRankIndex.load(spark, dir))
-    }
+    val neighbors = days.map { d =>
+      val nb = Sampler.temporalNeighborsFull(pool, d)
+      d -> (if (!persistIndex) nb.localCheckpoint() else {
+        val dir = ixDir("graft_nbrix")
+        nb.write.parquet(dir)
+        spark.read.parquet(dir)
+      })
+    }.toMap
     var st = SamplerState(seed, 0L, Map.empty)
     val batches = Seq.newBuilder[Array[org.apache.spark.sql.Row]]
     val core = Seq.newBuilder[Seq[Any]]
@@ -127,7 +130,7 @@ trait GoldenHarness {
         st = SamplerState.load(p).get
       }
       val out = Sampler.nextBatch(spark, chunks, pool, recipes, st, batch,
-        decoration, poolIdx, rankIdx)
+        decoration, bm25Idx, Some(rankIdx), Some(stats), neighbors)
       batches += out.rows.select(cols.head, cols.tail: _*).collect()
       core ++= out.core.collect().map(_.toSeq)
       st = out.state

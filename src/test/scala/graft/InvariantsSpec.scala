@@ -1,7 +1,7 @@
 package graft
 
 import graft.core.{Determinism, Tables}
-import graft.operators.{Recipes, Sampler, SamplerState, TripletConfig, Triplets}
+import graft.operators.{PoolRankIndex, Recipes, Sampler, SamplerState, TripletConfig, Triplets}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -232,24 +232,25 @@ class InvariantsSpec extends AnyFunSuite with GoldenHarness {
       "bm25 pin indistinguishable from the default backend")
   }
 
-  test("persisted pool-rank index: index-backed batches == per-batch derivation") {
+  test("persisted pool-rank index: parquet-backed batches == in-memory staged batches") {
     // the PoolRankIndex contract (the Bm25PoolIndex sibling): a sidecar
-    // built once per pool refresh, round-tripped through parquet, must
-    // deliver bit-identical sequences to the in-plan derivation — across
-    // the dated mixed-strategy config (all three strategies, date tiers,
-    // the singleton-source fallback) and the default config
+    // built once per pool refresh and round-tripped through parquet must
+    // deliver bit-identical sequences to the same derivation staged in
+    // memory (PoolRankIndex.stage) — across the dated mixed-strategy config
+    // (all three strategies, date tiers, the singleton-source fallback)
+    // and the default config
     for ((cname, recipes, dated, dec) <- goldenMatrix.filter(c =>
         c._1 == "default" || c._1 == "mixed_strategy")) {
-      val (bDerived, cDerived, _) = runGolden(batch = 8, nBatches = 6, parts = 4,
+      val (bStaged, cStaged, _) = runGolden(batch = 8, nBatches = 6, parts = 4,
         recipes = recipes, seed = s"rix:$cname", dated = dated,
         cols = goldenCols :+ "reason", decoration = dec)
-      val (bIndexed, cIndexed, _) = runGolden(batch = 8, nBatches = 6, parts = 4,
+      val (bPersisted, cPersisted, _) = runGolden(batch = 8, nBatches = 6, parts = 4,
         recipes = recipes, seed = s"rix:$cname", dated = dated,
-        cols = goldenCols :+ "reason", decoration = dec, useRankIndex = true)
-      assert(seqDigest(bIndexed) == seqDigest(bDerived),
-        s"$cname: index-backed sequence diverged")
-      assert(cIndexed.map(_.toString).sorted == cDerived.map(_.toString).sorted,
-        s"$cname: index-backed core stream diverged")
+        cols = goldenCols :+ "reason", decoration = dec, persistIndex = true)
+      assert(seqDigest(bPersisted) == seqDigest(bStaged),
+        s"$cname: parquet-backed sequence diverged")
+      assert(cPersisted.map(_.toString).sorted == cStaged.map(_.toString).sorted,
+        s"$cname: parquet-backed core stream diverged")
     }
   }
 
@@ -279,9 +280,11 @@ class InvariantsSpec extends AnyFunSuite with GoldenHarness {
         NegativeStrategy.WrongArticle, weight = 0.5f),
       TripletRecipe("sparse_transcript", Selector.RoleAnchor, Selector.Paragraph(2),
         NegativeStrategy.WrongArticle, weight = 0.5f))
+    val (ranks, stats) = PoolRankIndex.stage(pool)
     var st = SamplerState("sparse", 0L, Map.empty)
     val rows = (0 until 4).flatMap { _ =>
-      val out = Sampler.nextBatch(spark, chunks, pool, recipes, st, 8)
+      val out = Sampler.nextBatch(spark, chunks, pool, recipes, st, 8,
+        rankIndex = Some(ranks), srcStats = Some(stats))
       val got = out.rows.select("recipe", "record_id").collect()
       assert(got.length == 8, "pad_with_reuse must keep the batch exact")
       st = out.state
@@ -315,12 +318,14 @@ class InvariantsSpec extends AnyFunSuite with GoldenHarness {
       "diversity_triplet", graft.operators.Selector.RoleAnchor,
       graft.operators.Selector.RoleContext,
       graft.operators.NegativeStrategy.WrongArticle, weight = 1.0f))
+    val (ranks, stats) = PoolRankIndex.stage(pool)
     Seq("div:a", "div:b").foreach { seed =>
       var st = SamplerState(seed, 0L, Map.empty)
       val anchors = scala.collection.mutable.ArrayBuffer[Long]()
       val negatives = scala.collection.mutable.ArrayBuffer[Long]()
       (0 until 30).foreach { _ =>
-        val out = Sampler.nextBatch(spark, chunks, pool, recipes, st, 8)
+        val out = Sampler.nextBatch(spark, chunks, pool, recipes, st, 8,
+          rankIndex = Some(ranks), srcStats = Some(stats))
         val rows = out.rows.select("record_id", "nid").collect()
         anchors ++= rows.map(_.getLong(0)); negatives ++= rows.map(_.getLong(1))
         st = out.state
@@ -336,25 +341,19 @@ class InvariantsSpec extends AnyFunSuite with GoldenHarness {
     chunks.unpersist(); pool.unpersist()
   }
 
-  test("prebuilt Bm25PoolIndex: index-backed composed batches == per-batch derivation") {
-    // the cache the per-batch derivation recomputes (Bm25PoolIndex
-    // scaladoc): same recipes, same seed, postings built once and carried
-    // across 10 batches — the delivered sequence must be bit-identical to
-    // the pure per-batch path (which the golden bm25 pin already covers)
+  test("persisted Bm25PoolIndex: parquet-backed batches == in-memory fromPool batches") {
+    // the index staged in memory (Bm25PoolIndex.fromPool) and the same
+    // index saved to parquet and loaded back must deliver the same
+    // sequence — tf/df/stats and the staged wterm table survive the
+    // round-trip bit-exactly — and both equal the golden bm25 pin
     val bmCfg = goldenMatrix.collect { case ("bm25", r, _, _) => r }.head
-    val (noIdx, _, _) = runGolden(batch = 8, nBatches = 10, parts = 4,
+    val (staged, _, _) = runGolden(batch = 8, nBatches = 10, parts = 4,
       recipes = bmCfg, seed = "gm:bm25", cols = goldenCols :+ "reason")
-    val (withIdx, _, _) = runGolden(batch = 8, nBatches = 10, parts = 4,
-      recipes = bmCfg, seed = "gm:bm25", cols = goldenCols :+ "reason",
-      useBm25Index = true)
-    assert(seqDigest(noIdx) == seqDigest(withIdx),
-      "index-backed bm25 lane diverged from the per-batch derivation")
-    // and the PERSISTED index (save → parquet → load) delivers the same
-    // sequence — tf/df/stats survive the round-trip bit-exactly
     val (persisted, _, _) = runGolden(batch = 8, nBatches = 10, parts = 4,
       recipes = bmCfg, seed = "gm:bm25", cols = goldenCols :+ "reason",
-      useBm25Index = true, persistIndex = true)
-    assert(seqDigest(noIdx) == seqDigest(persisted),
+      persistIndex = true)
+    assert(seqDigest(staged) == MatrixPins10("bm25"), "in-memory bm25 index drifted from the pin")
+    assert(seqDigest(persisted) == seqDigest(staged),
       "persisted bm25 pool index diverged after the parquet round-trip")
   }
 
@@ -373,13 +372,18 @@ class InvariantsSpec extends AnyFunSuite with GoldenHarness {
       "label", "l_hash", "r_hash", "reason")
     val textCols = Seq("slot", "draw", "recipe", "record_id", "chunk_record",
       "t_sidx", "t_widx", "t_hash")
+    val (ranks, stats) = PoolRankIndex.stage(pool)
+    def pairs(st: SamplerState) = Sampler.nextPairBatch(spark, chunks, pool, goldenRecipes,
+      st, 8, rankIndex = Some(ranks), srcStats = Some(stats))
+    def texts(st: SamplerState) = Sampler.nextTextBatch(spark, chunks, pool,
+      Recipes.derivedTextRecipes(goldenRecipes), st, 8, srcStats = Some(stats))
     def run(st0: SamplerState) = {
       // one evolving state drives all three entry points — the reference
       // advances the same source cursors from every batch type
-      val t = Sampler.nextBatch(spark, chunks, pool, goldenRecipes, st0, 8)
-      val p = Sampler.nextPairBatch(spark, chunks, pool, goldenRecipes, t.state, 8)
-      val x = Sampler.nextTextBatch(spark, chunks, pool,
-        Recipes.derivedTextRecipes(goldenRecipes), p.state, 8)
+      val t = Sampler.nextBatch(spark, chunks, pool, goldenRecipes, st0, 8,
+        rankIndex = Some(ranks), srcStats = Some(stats))
+      val p = pairs(t.state)
+      val x = texts(p.state)
       val ds = Seq(
         seqDigest(Seq(t.rows.select(goldenCols.head, goldenCols.tail: _*).collect())),
         seqDigest(Seq(p.rows.select(pairCols.head, pairCols.tail: _*).collect())),
@@ -395,9 +399,8 @@ class InvariantsSpec extends AnyFunSuite with GoldenHarness {
     val dir = java.nio.file.Files.createTempDirectory("graft_emix").toString
     SamplerState.save(afterTriplet, s"$dir/emix.json")
     val st1 = SamplerState.load(s"$dir/emix.json").get
-    val p2 = Sampler.nextPairBatch(spark, chunks, pool, goldenRecipes, st1, 8)
-    val x2 = Sampler.nextTextBatch(spark, chunks, pool,
-      Recipes.derivedTextRecipes(goldenRecipes), p2.state, 8)
+    val p2 = pairs(st1)
+    val x2 = texts(p2.state)
     assert(seqDigest(Seq(p2.rows.select(pairCols.head, pairCols.tail: _*).collect())) == ds(1)
       && seqDigest(Seq(x2.rows.select(textCols.head, textCols.tail: _*).collect())) == ds(2),
       "resume through persisted state broke the pair/text tail")

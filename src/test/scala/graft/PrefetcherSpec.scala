@@ -108,7 +108,7 @@ class PrefetcherSpec extends AnyFunSuite {
     val dir = java.nio.file.Files.createTempDirectory("graft_pfix").toString + "/ix"
     PoolRankIndex.save(PoolRankIndex.build(pool), dir)
     val ridx = PoolRankIndex.load(spark, dir)
-    val stats = PoolRankIndex.loadSrcStats(dir).get
+    val stats = PoolRankIndex.loadSrcStats(dir)
     val poolSize = stats.map(_._2).sum
     val recipes = Recipes.resolve(Nil, Recipes.csvDefaults(roleMode = true))
     val batchN = 8

@@ -232,7 +232,8 @@ class ScaleStressSpec extends AnyFunSuite {
 
   test("composed sampler batch completes at 200k-record pools (fused lanes)") {
     assume(soakTests, "set GRAFT_SOAK_TESTS=1 to run the completion smokes")
-    import graft.operators.{NegativeStrategy, Sampler, SamplerState, Selector, TripletRecipe}
+    import graft.operators.{NegativeStrategy, PoolRankIndex, Sampler, SamplerState, Selector,
+      TripletRecipe}
     // the fused negative dispatch + multi-slot chunk pick against a
     // 200k-record, 200-source, dated pool: per-batch cost must stay
     // batch-bounded (seconds, not minutes), and every slot delivers
@@ -251,14 +252,17 @@ class ScaleStressSpec extends AnyFunSuite {
         NegativeStrategy.WrongArticle, weight = 0.5f),
       TripletRecipe("wd", Selector.RoleAnchor, Selector.RoleContext,
         NegativeStrategy.WrongPublicationDate, weight = 0.5f))
+    val (ranks, stats) = PoolRankIndex.stage(pool)
     val out = Sampler.nextBatch(spark, chunks, pool, recipes,
-      SamplerState("stress", 0L, Map.empty), batch = 32)
+      SamplerState("stress", 0L, Map.empty), batch = 32,
+      rankIndex = Some(ranks), srcStats = Some(stats))
     assert(out.rows.count() == 32L)
   }
 
   test("fallback tier completes at 50k single-record sources (exact-key probe)") {
     assume(soakTests, "set GRAFT_SOAK_TESTS=1 to run the completion smokes")
-    import graft.operators.{NegativeStrategy, Sampler, SamplerState, Selector, TripletRecipe}
+    import graft.operators.{NegativeStrategy, PoolRankIndex, Sampler, SamplerState, Selector,
+      TripletRecipe}
     // every source holds ONE record, so every WrongArticle slot takes the
     // cross-source fallback tier: the fb pick must resolve through the
     // driver-side (srnk → source, count) order + an exact (source, rn)
@@ -280,8 +284,10 @@ class ScaleStressSpec extends AnyFunSuite {
     val pool = docs.select(col("doc_id").as("id"), col("source"))
     val recipes = Seq(TripletRecipe("wa", Selector.RoleAnchor, Selector.RoleContext,
       NegativeStrategy.WrongArticle, weight = 1.0f))
+    val (ranks, stats) = PoolRankIndex.stage(pool)
     val out = Sampler.nextBatch(spark, chunks, pool, recipes,
-      SamplerState("fbstress", 0L, Map.empty), batch = 32)
+      SamplerState("fbstress", 0L, Map.empty), batch = 32,
+      rankIndex = Some(ranks), srcStats = Some(stats))
     val core = out.core.collect()
     assert(core.length == 32)
     // single-record sources ⇒ the lane is fb for every slot, and the

@@ -10,16 +10,26 @@ class StateAndRecipesSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   private val sfDir = "/root/testdata/sf0.001"
 
-  /** 12 docs over two sources: the small composed fixture of the
-    * lane-report and serving-tail tests. */
-  private def smallComposed() = {
-    import spark.implicits._
-    val docs = (1 to 12).map(i =>
+  /** 12 docs over two sources, the pool's rank index staged once in
+    * memory: the small composed fixture of the lane-report and
+    * serving-tail tests. */
+  private final class SmallComposed {
+    private val s = spark
+    import s.implicits._
+    private val docs = (1 to 12).map(i =>
       (i.toLong, (s"head$i topic$i overview" +: (1 to 40).map(j => s"w${i}_$j")).mkString(" ")))
       .toDF("doc_id", "text")
-    val chunks = graft.queries.RecipeQueries.chunkTable(docs)
-    val pool = (1 to 12).map(i => (i.toLong, s"s${i % 2}")).toDF("id", "source")
-    (chunks, pool)
+    private val chunks = graft.queries.RecipeQueries.chunkTable(docs)
+    private val pool = (1 to 12).map(i => (i.toLong, s"s${i % 2}")).toDF("id", "source")
+    private val (ranks, stats) = PoolRankIndex.stage(pool)
+    def triplets(recipes: Seq[TripletRecipe], st: SamplerState, batch: Int): SamplerBatch =
+      Sampler.nextBatch(spark, chunks, pool, recipes, st, batch,
+        rankIndex = Some(ranks), srcStats = Some(stats))
+    def pairs(recipes: Seq[TripletRecipe], st: SamplerState, batch: Int): SamplerBatch =
+      Sampler.nextPairBatch(spark, chunks, pool, recipes, st, batch,
+        rankIndex = Some(ranks), srcStats = Some(stats))
+    def texts(recipes: Seq[TextRecipe], st: SamplerState, batch: Int): SamplerBatch =
+      Sampler.nextTextBatch(spark, chunks, pool, recipes, st, batch, srcStats = Some(stats))
   }
 
   // ---- sampler-state persistence (reference: FileSplitStore semantics) ----
@@ -341,18 +351,24 @@ class StateAndRecipesSpec extends AnyFunSuite {
         NegativeStrategy.WrongArticle, weight = 0.5f),
       TripletRecipe("tn_plain", Selector.RoleAnchor, Selector.RoleContext,
         NegativeStrategy.WrongArticle, weight = 0.5f))
-    def rowsOf(ni: Map[Int, org.apache.spark.sql.DataFrame]) =
+    val (ranks, stats) = PoolRankIndex.stage(pool)
+    def batchOf(ni: Map[Int, org.apache.spark.sql.DataFrame]) =
       Sampler.nextBatch(spark, chunks, pool, recipes,
-          SamplerState("tn", 0L, Map.empty), batch = 10, neighborIndex = ni)
-        .core.collect().map(_.toSeq.mkString("|")).sorted.toSeq
-    // parquet round-trip like the real staging
+        SamplerState("tn", 0L, Map.empty), batch = 10, rankIndex = Some(ranks),
+        srcStats = Some(stats), neighborIndex = ni)
+    def rowsOf(nbrs: org.apache.spark.sql.DataFrame) =
+      batchOf(Map(2 -> nbrs)).core.collect().map(_.toSeq.mkString("|")).sorted.toSeq
+    // the parquet round-trip of the real staging vs the same map in memory
+    val full = Sampler.temporalNeighborsFull(pool, 2)
     val dir = java.nio.file.Files.createTempDirectory("graft_nbr").toString + "/ix"
-    Sampler.temporalNeighborsFull(pool, 2)
-      .repartitionByRange(4, col("record_id")).sortWithinPartitions("record_id")
+    full.repartitionByRange(4, col("record_id")).sortWithinPartitions("record_id")
       .write.parquet(dir)
-    val staged = rowsOf(Map(2 -> spark.read.parquet(dir)))
-    val derived = rowsOf(Map.empty)
+    val staged = rowsOf(spark.read.parquet(dir))
+    val derived = rowsOf(full)
     assert(staged.nonEmpty && staged == derived)
+    // a temporal recipe without its staged offset fails at the call
+    val e = intercept[IllegalArgumentException](batchOf(Map(3 -> full)))
+    assert(e.getMessage.contains("TemporalOffset(2)"))
   }
 
   test("composed bm25 backend: disjoint vocab falls back to the rank pick, shared vocab diverges") {
@@ -374,32 +390,42 @@ class StateAndRecipesSpec extends AnyFunSuite {
           graft.functions.TextFunctions.tokens(col("text")).as("btoks")), "id")
       (chunks, pool)
     }
-    def run(shared: Boolean, backend: graft.operators.NegativeBackend) = {
+    // triplets, or pairs: 16 pairs are the same 8 triplet draws
+    def run(shared: Boolean, backend: graft.operators.NegativeBackend,
+        pairs: Boolean = false) = {
       val (chunks, pool) = corpus(shared)
+      val (ranks, stats) = PoolRankIndex.stage(pool)
+      val bm25 = Some(Bm25PoolIndex.fromPool(pool))
       val recipes = Seq(TripletRecipe("bmf", Selector.RoleAnchor, Selector.RoleContext,
         NegativeStrategy.WrongArticle, negativeBackend = backend))
-      Sampler.nextBatch(spark, chunks, pool, recipes,
-          SamplerState("bmf", 0L, Map.empty), batch = 8)
-        .core.collect().map(_.toSeq).toSet
+      val st = SamplerState("bmf", 0L, Map.empty)
+      val b =
+        if (pairs) Sampler.nextPairBatch(spark, chunks, pool, recipes, st, batch = 16,
+          bm25Index = bm25, rankIndex = Some(ranks), srcStats = Some(stats))
+        else Sampler.nextBatch(spark, chunks, pool, recipes, st, batch = 8,
+          bm25Index = bm25, rankIndex = Some(ranks), srcStats = Some(stats))
+      b.core.collect().map(_.toSeq).toSet
     }
     // every doc's context vocabulary is unique -> the scored intersection
     // is empty for every slot -> the bm25 backend delivers EXACTLY the
     // default backend's sequence (reference: bm25_backend.rs:157-174
-    // fallback to deterministic random within the pool)
-    assert(run(shared = false, NegativeBackend.Bm25)
-      == run(shared = false, NegativeBackend.Default))
+    // fallback to deterministic random within the pool), for triplets and
+    // for the pairs derived from them
+    for (pairs <- Seq(false, true))
+      assert(run(shared = false, NegativeBackend.Bm25, pairs)
+        == run(shared = false, NegativeBackend.Default, pairs), s"pairs=$pairs")
     // a shared token gives a non-empty intersection -> the scored top-3
     // rotation must diverge from the rank pick somewhere in the batch
-    assert(run(shared = true, NegativeBackend.Bm25)
-      != run(shared = true, NegativeBackend.Default))
+    for (pairs <- Seq(false, true))
+      assert(run(shared = true, NegativeBackend.Bm25, pairs)
+        != run(shared = true, NegativeBackend.Default, pairs), s"pairs=$pairs")
   }
 
   test("laneStats: the extended-metrics report aggregates the batch's own core rows") {
-    val (chunks, pool) = smallComposed()
+    val fx = new SmallComposed
     val recipes = Seq(TripletRecipe("lm", Selector.RoleAnchor, Selector.RoleContext,
       NegativeStrategy.WrongArticle))
-    val b = Sampler.nextBatch(spark, chunks, pool, recipes,
-      SamplerState("lm", 0L, Map.empty), batch = 8)
+    val b = fx.triplets(recipes, SamplerState("lm", 0L, Map.empty), batch = 8)
     val stats = b.laneStats.collect()
       .map(r => (r.getString(0), r.getString(1), r.getString(2)) -> r.getLong(3)).toMap
     // independent derivation from the same core rows
@@ -413,8 +439,7 @@ class StateAndRecipesSpec extends AnyFunSuite {
     // dispatch per triplet draw, regardless of the 2-row pair explosion —
     // the same per-(recipe, reason, lane) counts as the triplet report
     // over the same seed/counters
-    val pb = Sampler.nextPairBatch(spark, chunks, pool, recipes,
-      SamplerState("lm", 0L, Map.empty), batch = 8)
+    val pb = fx.pairs(recipes, SamplerState("lm", 0L, Map.empty), batch = 8)
     val pairStats = pb.laneStats.collect()
       .map(r => (r.getString(0), r.getString(1), r.getString(2)) -> r.getLong(3)).toMap
     assert(pairStats.nonEmpty)
@@ -424,18 +449,16 @@ class StateAndRecipesSpec extends AnyFunSuite {
 
   test("ExtendedMetrics accumulates lifetime totals: two resumed half-batches == one batch") {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val (chunks, pool) = smallComposed()
+    val fx = new SmallComposed
     val recipes = Seq(TripletRecipe("xm", Selector.RoleAnchor, Selector.RoleContext,
       NegativeStrategy.WrongArticle))
     // one 8-draw batch vs two resumed 4-draw batches (the q143 law
     // applied to the counters): the reference's running totals
     // (bm25_backend.rs:156-172) accumulate exactly like this
-    val one = Sampler.nextBatch(spark, chunks, pool, recipes,
-      SamplerState("xm", 0L, Map.empty), batch = 8)
+    val one = fx.triplets(recipes, SamplerState("xm", 0L, Map.empty), batch = 8)
     val oneTotals = new ExtendedMetrics().add(one).totals
-    val h1 = Sampler.nextBatch(spark, chunks, pool, recipes,
-      SamplerState("xm", 0L, Map.empty), batch = 4)
-    val h2 = Sampler.nextBatch(spark, chunks, pool, recipes, h1.state, batch = 4)
+    val h1 = fx.triplets(recipes, SamplerState("xm", 0L, Map.empty), batch = 4)
+    val h2 = fx.triplets(recipes, h1.state, batch = 4)
     // `add` folds the already-collected core rows on the driver: a
     // listener sees no job in the group it runs under. Delivery is async,
     // so a sentinel job queued after `add` marks the end of its events.
@@ -467,7 +490,7 @@ class StateAndRecipesSpec extends AnyFunSuite {
   test("serving draws leave the cache manager as they found it (triplet, pair, text)") {
     // the batch tail runs on the driver: drawing and collecting `rows`
     // caches nothing that no serving loop would ever release
-    val (chunks, pool) = smallComposed()
+    val fx = new SmallComposed
     val recipes = Seq(TripletRecipe("lk", Selector.RoleAnchor, Selector.RoleContext,
       NegativeStrategy.WrongArticle))
     val cm = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
@@ -480,10 +503,9 @@ class StateAndRecipesSpec extends AnyFunSuite {
       assert(b.rows.collect().length == 8)
       st = b.state
     }
-    (1 to 3).foreach(_ => draw(Sampler.nextBatch(spark, chunks, pool, recipes, st, 8)))
-    (1 to 3).foreach(_ => draw(Sampler.nextPairBatch(spark, chunks, pool, recipes, st, 8)))
-    (1 to 3).foreach(_ => draw(Sampler.nextTextBatch(spark, chunks, pool,
-      Recipes.derivedTextRecipes(recipes), st, 8)))
+    (1 to 3).foreach(_ => draw(fx.triplets(recipes, st, 8)))
+    (1 to 3).foreach(_ => draw(fx.pairs(recipes, st, 8)))
+    (1 to 3).foreach(_ => draw(fx.texts(Recipes.derivedTextRecipes(recipes), st, 8)))
     assert(entries <= before, s"cache entries grew from $before to $entries")
   }
 
@@ -521,8 +543,10 @@ class StateAndRecipesSpec extends AnyFunSuite {
     val recipes = Seq(
       TripletRecipe("asof_only", Selector.TemporalOffset(1), Selector.RoleContext,
         NegativeStrategy.WrongArticle))
+    val (ranks, stats) = PoolRankIndex.stage(pool)
     val out = Sampler.nextBatch(spark, chunks, pool, recipes,
-      SamplerState("tn", 0L, Map.empty), batch = 6)
+      SamplerState("tn", 0L, Map.empty), batch = 6, rankIndex = Some(ranks),
+      srcStats = Some(stats), neighborIndex = Map(1 -> Sampler.temporalNeighborsFull(pool, 1)))
     val core = out.core.collect()
     assert(core.nonEmpty)
     // sec = id days and offset = 1 day, so the as-of neighbor of record r

@@ -84,6 +84,10 @@ class ComposedPoolIndexSpec extends AnyFunSuite {
       == rows(dv.postings))
     assert(rows(ix.srcStats.select(dv.srcStats.columns.map(col).toSeq: _*))
       == rows(dv.srcStats))
+    assert(rows(ix.wterm.select(dv.wterm.columns.map(col).toSeq: _*)) == rows(dv.wterm))
+    // a generation without the staged wterm table cannot serve
+    graft.operators.Staging.rmTree(java.nio.file.Paths.get(s"$dir/wterm"))
+    intercept[IllegalArgumentException](Bm25PoolIndex.load(spark, dir))
   }
 
   test("ComposedIndexQueries load-or-build: build then warm-load, both == derived") {
@@ -96,36 +100,30 @@ class ComposedPoolIndexSpec extends AnyFunSuite {
     assert(rows(a) == rows(derived(pool)))
   }
 
-  test("rank index without srcStats fails loudly on pool drift") {
+  test("rank index without srcStats fails at the call") {
     import spark.implicits._
-    // sidecar baked from a 12-record pool; the serving pool then drifts
-    // (two records gone). Without the persisted stats, the fallback tier
-    // would resolve (srnk, rn) targets against the SERVING pool's counts
-    // while the sidecar's ranks were baked at build — the guard must
-    // surface the mismatch instead of silently dropping fallback draws.
+    // the sampler serves only from a staging: the rank sidecar and its
+    // per-source stats come together, so a rank index without its stats
+    // (or stats without a rank index) is refused before any job runs
     val docs = (1 to 12).map(i =>
       (i.toLong, (s"head$i topic$i overview" +: (1 to 40).map(j => s"w${i}_$j")).mkString(" ")))
       .toDF("doc_id", "text")
     val chunks = RecipeQueries.chunkTable(docs)
     val pool = (1 to 12).map(i => (i.toLong, s"s${i % 2}")).toDF("id", "source")
-    val idxDir = java.nio.file.Files.createTempDirectory("graft_drift").toString + "/idx"
-    PoolRankIndex.save(PoolRankIndex.build(pool), idxDir)
-    val ridx = PoolRankIndex.load(spark, idxDir)
-    val drifted = pool.filter(col("id") <= 10)
+    val (ridx, stats) = PoolRankIndex.stage(pool)
     val recipes = Seq(graft.operators.TripletRecipe("dg",
       graft.operators.Selector.RoleAnchor, graft.operators.Selector.RoleContext,
       graft.operators.NegativeStrategy.WrongArticle))
-    val e = intercept[IllegalArgumentException] {
-      Sampler.nextBatch(spark, chunks, drifted, recipes,
+    def batch(ranks: Option[DataFrame], st: Option[Seq[(String, Long)]]) =
+      Sampler.nextBatch(spark, chunks, pool, recipes,
         graft.operators.SamplerState("dg", 0L, Map.empty), batch = 4,
-        rankIndex = Some(ridx))
-    }
-    assert(e.getMessage.contains("drift"))
-    // the same index over the UNDRIFTED pool passes the guard and serves
-    val ok = Sampler.nextBatch(spark, chunks, pool, recipes,
-      graft.operators.SamplerState("dg", 0L, Map.empty), batch = 4,
-      rankIndex = Some(ridx))
-    assert(ok.core.count() > 0)
+        rankIndex = ranks, srcStats = st)
+    val noStats = intercept[IllegalArgumentException](batch(Some(ridx), None))
+    assert(noStats.getMessage.contains("srcStats is required"))
+    val noRanks = intercept[IllegalArgumentException](batch(None, Some(stats)))
+    assert(noRanks.getMessage.contains("rankIndex is required"))
+    // the complete staging serves
+    assert(batch(Some(ridx), Some(stats)).core.count() > 0)
   }
 
   test("all six lanes: staged chunk index == in-plan chunkTable derivation") {
