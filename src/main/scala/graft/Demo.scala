@@ -101,7 +101,8 @@ object Demo {
         case "pair" => Sampler.nextPairBatch(spark, chunks, pool, recipes, st, cfg.batch,
           rankIndex = Some(ranks), srcStats = Some(stats))
         case "text" => Sampler.nextTextBatch(spark, chunks, pool,
-          Recipes.derivedTextRecipes(recipes), st, cfg.batch, srcStats = Some(stats))
+          Recipes.derivedTextRecipes(recipes), st, cfg.batch,
+          rankIndex = Some(ranks), srcStats = Some(stats))
         case m => sys.error(s"unknown mode: $m")
       }
       val rows = out.rows.collect()

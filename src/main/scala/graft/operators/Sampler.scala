@@ -142,6 +142,13 @@ object Sampler {
     case _ => None
   }
 
+  /** The pool's staged rank sidecar, which every entry point requires. */
+  private def stagedRanks(rankIndex: Option[DataFrame]): DataFrame = {
+    require(rankIndex.nonEmpty, "rankIndex is required: pass the pool's staged " +
+      "rank sidecar (PoolRankIndex.stage, or ComposedIndexQueries.rankIndexAndStats)")
+    rankIndex.get
+  }
+
   /** Materialize a BATCH-BOUNDED frame as a driver-local relation: the
     * values come from the same Spark plan (one collect — the same job an
     * eager localCheckpoint would run), but downstream consumers see a
@@ -420,17 +427,18 @@ object Sampler {
     * ([[Mixing.epochPick]] — bounded-position pick, the dense order
     * inverted analytically instead of a corpus-wide position column per
     * batch), as a driver-local relation of (draw, epoch, recipe,
-    * [reason,] record_id, source). `er0` is the rank sidecar's staged
-    * epoch-0 rank, so the per-batch rank window disappears for the entire
-    * first epoch; `reasonOf` adds the triplet slots' strategy tag. */
+    * [reason,] record_id, source). The rank sidecar's staged epoch-0 rank
+    * (`er0`) serves epoch 0, so the per-batch rank window disappears for
+    * the entire first epoch; `reasonOf` adds the triplet slots' strategy
+    * tag. */
   private def slotRecords(spark: SparkSession, pool: DataFrame,
       slots: Seq[(Long, Long, Long, String)], srcCounts: Seq[(String, Long)],
-      er0: Option[DataFrame], reasonOf: Option[String => String]): DataFrame = {
+      rankTbl: DataFrame, reasonOf: Option[String => String]): DataFrame = {
     import spark.implicits._
     localRelation(spark, slots.groupBy(_._2).toSeq.sortBy(_._1).map { case (ep, ss) =>
       val sdf = ss.map(s => (s._1, s._3, s._4, reasonOf.map(_(s._4)).orNull))
         .toDF("draw", "pos", "recipe", "reason")
-      val pre = if (ep == 0) er0.map(_.select(col("source"), col("er0").as("r"), col("id")))
+      val pre = if (ep == 0) Some(rankTbl.select(col("source"), col("er0").as("r"), col("id")))
         else None
       Mixing.epochPick(pool, ep, ss.map(_._3), Some(srcCounts), pre)
         .join(broadcast(sdf), "pos")
@@ -593,8 +601,10 @@ object Sampler {
       neighborIndex: Map[Int, DataFrame])
       : (StructType, Seq[Row], Seq[Row], Seq[Row], SamplerState) = {
     import spark.implicits._
-    require(rankIndex.nonEmpty, "rankIndex is required: pass the pool's staged " +
-      "rank sidecar (PoolRankIndex.stage, or ComposedIndexQueries.rankIndexAndStats)")
+    // the pool-rank sidecar, staged once per pool refresh
+    // ([[PoolRankIndex]]): the strategy×tier lanes read it through a
+    // single keyed plan. Its `date` column marks a dated pool.
+    val rankTbl = stagedRanks(rankIndex)
     require(bm25Index.nonEmpty || !recipes.exists(_.negativeBackend == NegativeBackend.Bm25),
       "BM25-backend recipes need a staged Bm25PoolIndex (bm25Index)")
     requireNeighbors(recipes.flatMap(r =>
@@ -604,10 +614,6 @@ object Sampler {
     val (srcCounts, slots, st2) =
       schedule(st, batch, srcStats, ep => Recipes.ticketOrder(recipes, st.seed, ep))
 
-    // ---- pool-rank sidecar, staged once per pool refresh
-    // ([[PoolRankIndex]]): the strategy×tier lanes read it through a
-    // single keyed plan. Its `date` column marks a dated pool. ----
-    val rankTbl = rankIndex.get
     val hasDate = rankTbl.columns.contains("date")
 
     // ---- record pick: per-epoch interleave joined on position ----
@@ -620,7 +626,7 @@ object Sampler {
     // BUILDING plan strings (ExplainUtils on every AQE stage update).
     // Values are unaffected — every column is a pure (seed, epoch, draw)
     // function; only lineage is cut.
-    val slotRec = slotRecords(spark, pool, slots, srcCounts, Some(rankTbl),
+    val slotRec = slotRecords(spark, pool, slots, srcCounts, rankTbl,
       Some(name => byName(name).negative.reason))
 
     // ---- anchor chunk-pick metadata (driver-side; the bm25 lane's query
@@ -1113,13 +1119,15 @@ object Sampler {
     * pick per draw (hash stream `sel:t:`), seen-set dedup by the chunk key
     * (record, section, window) keeping the earliest draw, pad to `batch`.
     * Temporal selectors swap in the staged as-of neighbor exactly like
-    * [[nextBatch]]'s anchor lane. No negative dispatch ⇒ no rank sidecar,
-    * so there is no `rankIndex` parameter; `srcStats` (required) is the
-    * pool's staged per-source stats, and a staged deployment serves the
-    * POOL from the persisted [[PoolRankIndex]]'s (id, source) columns. */
+    * [[nextBatch]]'s anchor lane. `rankIndex` and `srcStats` (both
+    * required) are the pool's staged rank sidecar and per-source stats, as
+    * on [[nextBatch]]: the sidecar's `er0` serves every epoch-0 record
+    * pick without a per-batch rank window, and a staged deployment serves
+    * the POOL from its (id, source) columns. */
   def nextTextBatch(spark: SparkSession, chunks: DataFrame, pool: DataFrame,
       textRecipes: Seq[TextRecipe], st: SamplerState, batch: Int,
       decoration: Option[(graft.functions.KvpPrefixSampler, Int)] = None,
+      rankIndex: Option[DataFrame],
       srcStats: Option[Seq[(String, Long)]],
       neighborIndex: Map[Int, DataFrame] = Map.empty): SamplerBatch = {
     import spark.implicits._
@@ -1128,7 +1136,7 @@ object Sampler {
     val byName = textRecipes.map(r => r.name -> r).toMap
     val (srcCounts, slots, st2) = schedule(st, batch, srcStats,
       ep => Recipes.textTicketOrder(textRecipes, st.seed, ep))
-    val slotRec = slotRecords(spark, pool, slots, srcCounts, None, None)
+    val slotRec = slotRecords(spark, pool, slots, srcCounts, stagedRanks(rankIndex), None)
     val slotMeta = slots.map { case (draw, _, _, name) =>
       val (m, a) = selectorDesc(byName(name).selector)
       (draw, m, a)

@@ -1383,17 +1383,16 @@ object RecipeQueries extends QueryModule {
       // pre-dedup core stream.
       (s, dir) => {
         val chunks = stagedChunks(s, dir, "txx", TxWhere)
-        // Text batches have no negative dispatch, so nextTextBatch never
-        // derives a rank sidecar — there is no in-plan derivation for an
-        // index to replace (no double derivation to avoid). The index's
-        // whole role here is the STAGED POOL: reconstituting (id, source)
-        // from the persisted table keeps the corpus tokenize+filter pass
-        // (txPool's definition) off the batch path, same as every other
-        // composed lane.
+        // The staged rank index serves the epoch-0 record pick (its `er0`)
+        // and is the STAGED POOL: reconstituting (id, source) from the
+        // persisted table keeps the corpus tokenize+filter pass (txPool's
+        // definition) off the batch path, same as every other composed
+        // lane.
         val (ridx, stats) = ComposedIndexQueries.rankIndexAndStats(s, dir, "txx", txPool(s, dir))
         val pool = ridx.select(col("id"), col("source"))
         val out = Sampler.nextTextBatch(s, chunks, pool, txRecipes,
-          SamplerState(TxSeed, 0L, Map.empty), TxBatch, srcStats = stats)
+          SamplerState(TxSeed, 0L, Map.empty), TxBatch,
+          rankIndex = Some(ridx), srcStats = stats)
         out.core.select(col("draw"), col("epoch"), col("recipe"),
           col("record_id"), col("chunk_record"), col("t_sidx"), col("t_widx"), col("t_hash"))
       },

@@ -1,7 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
@@ -20,14 +21,17 @@ import graft.operators.{Bm25Index, Dedup}
   *      doc_id first (records are immutable by contract — a known id is
   *      a re-send even when its text mutated in transit), then by
   *      content hash, with min-doc_id-per-hash inside the batch (q20
-  *      semantics) — the reference's standing-pool-first contract;
+  *      semantics) — the reference's standing-pool-first contract. The
+  *      arrivals left after the two anti-joins are collected once and
+  *      the per-hash pick runs on the driver ([[keepMinPerHash]]);
   *   2. NEAR-dup checked with the incremental MinHash band index
   *      ([[Dedup.incrementalCandidatePairs]], the q68 shape): candidate
   *      cost ∝ |batch| × in-bucket collisions, never |corpus|²; candidates
-  *      verify by signature agreement ≥ `minAgree` of `numPerms`; a new
-  *      doc that verifies against a RETAINED doc drops, and new–new
-  *      clusters resolve keep-min through
-  *      [[Dedup.connectedComponents]] (q93's operator);
+  *      verify by signature agreement ≥ `minAgree` of `numPerms`. The
+  *      verified pairs are collected once and the drops decided on the
+  *      driver ([[nearDupDrops]]): a new doc that verifies against a
+  *      RETAINED doc drops, and new–new clusters resolve keep-min (the
+  *      set [[Dedup.connectedComponents]], q93's operator, labels);
   *   3. appended: survivors land in batch-keyed stores (`corpus/b<id>`,
   *      `hashes/b<id>`, `sigs/b<id>`) and the persisted BM25 index grows
   *      by the batch's postings delta (`bm25/b<id>` — the
@@ -48,10 +52,20 @@ import graft.operators.{Bm25Index, Dedup}
   *
   * Scale shape: the only corpus-sized frames touched per batch are the
   * NARROW hash/signature stores (one long, resp. `numPerms` longs per
-  * doc); corpus text is write-only. The band self-join is driven by the
-  * new side, verified pairs are batch-bounded, and the component loop
-  * runs on the edge-induced subgraph ([[Dedup.connectedComponents]]
-  * scaladoc).
+  * doc); corpus text is write-only. The driver holds at most one
+  * batch: the exact lane's rows (≤ |batch|, text included) and the
+  * verified pairs, which number at most |batch| × in-bucket collisions
+  * because the band self-join is driven by the new side. The drop
+  * decisions run over them in plain Scala; survivors are the exact
+  * rows minus the drop set, so the survivor count needs no job, and
+  * the corpus, hashes and BM25 publishes read a driver-local relation.
+  *
+  * Keeping these batch-bounded frames off Spark also keeps the distinct
+  * generated classes one batch compiles (about 60) well under Spark's
+  * codegen cache (`spark.sql.codegen.cache.maxEntries`, 100 by
+  * default). At about 90 the cache's LRU segments overflowed in some
+  * JVMs and not in others, depending on the order AQE stages compiled
+  * in, and an overflowing JVM recompiled 18-29 classes on every batch.
   */
 object CorpusStream {
 
@@ -130,88 +144,113 @@ object CorpusStream {
     val prevHashes = readStore(spark, s"$stateDir/hashes", hashSchema, Some(batchId))
     val prevSigs = readStore(spark, s"$stateDir/sigs", sigSchema(cfg), Some(batchId))
 
-    // 1. exact lane (q20 semantics): min doc_id per content hash within
-    // the batch, then the standing corpus wins over arrivals — by
-    // doc_id FIRST (records are immutable by contract, so a known id is
-    // a re-send even when its text mutated in transit; admitting it
-    // would duplicate the id in the store), then by content hash
+    // 1. exact lane (q20 semantics): the standing corpus wins over
+    // arrivals — by doc_id FIRST (records are immutable by contract, so a
+    // known id is a re-send even when its text mutated in transit;
+    // admitting it would duplicate the id in the store), then by content
+    // hash. The two anti-joins keep the corpus-sized store on the
+    // executors; the arrivals left are batch-bounded, collected once, and
+    // min doc_id per content hash survives on the driver ([[keepMinPerHash]];
+    // a known hash drops its whole group, so picking before or after the
+    // hash anti-join keeps the same rows)
     val hashed = batch.withColumn("content_hash",
       Determinism.portableHash(TextFunctions.normalizeWs(col(textCol))))
-    val wH = Window.partitionBy(col("content_hash")).orderBy(col("doc_id"))
-    val exact = hashed
+    val exactRows = keepMinPerHash(hashed
       .join(prevHashes.select(col("doc_id")), Seq("doc_id"), "left_anti")
-      .withColumn("rk", row_number().over(wH)).filter(col("rk") === 1).drop("rk")
-      .join(prevHashes.select(col("content_hash")).distinct(),
-        Seq("content_hash"), "left_anti")
-      .localCheckpoint(eager = false)
+      .join(prevHashes.select(col("content_hash")), Seq("content_hash"), "left_anti")
+      .select(hashed.columns.toSeq.map(col): _*)
+      .collect().toSeq)
+    def local(rows: Seq[Row]) = spark.createDataFrame(rows.asJava, hashed.schema)
 
     // 2. near-dup lane: incremental candidates (new side drives the band
     // join), verified by signature agreement
     val newSigs = Dedup.minhashSignatures(
-        exact, "doc_id", textCol, cfg.numPerms, cfg.shingleSize)
+        local(exactRows), "doc_id", textCol, cfg.numPerms, cfg.shingleSize)
       .localCheckpoint(eager = false)
     val allSigs = prevSigs.withColumn("is_new", lit(false))
       .unionByName(newSigs.withColumn("is_new", lit(true)))
     val cand = Dedup.incrementalCandidatePairs(
       allSigs, "doc_id", "is_new", cfg.numBands, cfg.rowsPerBand)
     val mhCols = (0 until cfg.numPerms).map(j => s"mh$j")
-    val sigsAll = allSigs.drop("is_new")
-    val sa = col("doc_id").as("aid") +: mhCols.map(c => col(c).as(s"a_$c"))
-    val sb = col("doc_id").as("bid") +: mhCols.map(c => col(c).as(s"b_$c"))
+    val sa = col("doc_id").as("aid") +: col("is_new").as("a_new") +:
+      mhCols.map(c => col(c).as(s"a_$c"))
+    val sb = col("doc_id").as("bid") +: col("is_new").as("b_new") +:
+      mhCols.map(c => col(c).as(s"b_$c"))
     val agree = mhCols.map(c =>
       when(col(s"a_$c") === col(s"b_$c"), 1L).otherwise(0L)).reduce(_ + _)
+    // collected once (≤ |new| × in-bucket collisions rows); the drops
+    // are decided on the driver
     val verified = cand
-      .join(sigsAll.select(sa: _*), col("a") === col("aid"))
-      .join(sigsAll.select(sb: _*), col("b") === col("bid"))
+      .join(allSigs.select(sa: _*), col("a") === col("aid"))
+      .join(allSigs.select(sb: _*), col("b") === col("bid"))
       .filter(agree >= cfg.minAgree)
-      .select(col("a"), col("b"))
-      .localCheckpoint(eager = false)
-    val newIds = newSigs.select(col("doc_id"))
-    // pairs with exactly one new endpoint → that endpoint drops (the
-    // standing corpus wins); both-new pairs resolve keep-min below
-    val aNew = verified.join(newIds.withColumnRenamed("doc_id", "a"), Seq("a"),
-      "left_semi").select(col("a"), col("b"))
-    val abNew = aNew.join(newIds.withColumnRenamed("doc_id", "b"), Seq("b"), "left_semi")
-      .select(col("a"), col("b"))
-    val aOnlyNew = aNew.join(abNew, Seq("a", "b"), "left_anti").select(col("a").as("did"))
-    val bNewOnly = verified
-      .join(newIds.withColumnRenamed("doc_id", "b"), Seq("b"), "left_semi")
-      .join(newIds.withColumnRenamed("doc_id", "a"), Seq("a"), "left_anti")
-      .select(col("b").as("did"))
-    val dropVsOld = aOnlyNew.unionByName(bNewOnly).distinct()
-    val keptVsOld = exact.join(dropVsOld.withColumnRenamed("did", "doc_id"),
-      Seq("doc_id"), "left_anti")
-    // new–new clusters among the docs still standing: keep min per
-    // component (a dropped-vs-old doc cannot justify dropping its
-    // neighbors, so edges filter to kept endpoints first)
-    val keptIds = keptVsOld.select(col("doc_id"))
-    val nnEdges = abNew
-      .join(keptIds.withColumnRenamed("doc_id", "a"), Seq("a"), "left_semi")
-      .join(keptIds.withColumnRenamed("doc_id", "b"), Seq("b"), "left_semi")
-    val comps = Dedup.connectedComponents(
-      keptIds.withColumnRenamed("doc_id", "id"), nnEdges)
-    val dropNn = comps.filter(col("id") =!= col("cluster")).select(col("id").as("doc_id"))
-    val survivors = keptVsOld.join(dropNn, Seq("doc_id"), "left_anti")
-      .localCheckpoint(eager = false)
+      .select(col("a"), col("a_new"), col("b"), col("b_new"))
+      .collect().toSeq
+      .map(r => VerifiedPair(r.getLong(0), r.getBoolean(1), r.getLong(2), r.getBoolean(3)))
+    val dropSet = nearDupDrops(verified)
+    val drops = spark.createDataFrame(dropSet.toSeq.sorted.map(Row(_)).asJava,
+      StructType(Seq(StructField("doc_id", LongType))))
+    val survivorRows = exactRows.filterNot(r => dropSet(r.getAs[Long]("doc_id")))
 
     // 3. publish: batch-keyed overwrites (idempotent replays), BM25 delta
     // per the refresh union law. A survivor-less batch writes nothing —
     // a replay recomputes the same empty set and skips identically, and
     // the store readers never meet a schema-less empty directory.
-    val n = survivors.count()
-    if (n > 0) {
+    if (survivorRows.nonEmpty) {
       val b = s"b$batchId"
+      val survivors = local(survivorRows).coalesce(1) // one file per store
       survivors.drop("content_hash").write.mode("overwrite")
         .parquet(s"$stateDir/corpus/$b")
       survivors.select(col("doc_id"), col("content_hash")).write.mode("overwrite")
         .parquet(s"$stateDir/hashes/$b")
-      newSigs.join(survivors.select(col("doc_id")), Seq("doc_id"), "left_semi")
+      newSigs.join(broadcast(drops), Seq("doc_id"), "left_anti") // newSigs ⊆ exact
         .write.mode("overwrite").parquet(s"$stateDir/sigs/$b")
       val delta = Bm25Index.build(survivors, "doc_id", textCol)
       delta.postings.write.mode("overwrite").parquet(s"$stateDir/bm25/$b/postings")
       delta.docLens.write.mode("overwrite").parquet(s"$stateDir/bm25/$b/doclens")
     }
-    n
+    survivorRows.size.toLong
+  }
+
+  /** Min doc_id per content hash (ties on the id broken by the whole
+    * row, so the pick never depends on collect order), in doc_id order. */
+  def keepMinPerHash(rows: Seq[Row]): Seq[Row] =
+    rows.groupBy(_.getAs[Any]("content_hash")).values
+      .map(_.minBy(r => (r.getAs[Long]("doc_id"), r.toString)))
+      .toSeq.sortBy(r => (r.getAs[Long]("doc_id"), r.toString))
+
+  /** A verified near-dup pair `a < b`, each endpoint flagged new (this
+    * batch) or standing. */
+  case class VerifiedPair(a: Long, aNew: Boolean, b: Long, bNew: Boolean)
+
+  /** The batch's near-dup drop set — a pure, order-independent function
+    * of its verified pairs. A pair with exactly one new endpoint drops
+    * that endpoint (the standing corpus wins). New–new pairs between docs
+    * not dropped that way keep the minimum id per component (a doc
+    * dropped against the standing corpus cannot take its new–new
+    * neighbours with it): the union-find links the larger root under the
+    * smaller, so every key of `parent` is a non-minimum member — the
+    * keep-min set [[Dedup.connectedComponents]] labels. */
+  def nearDupDrops(pairs: Seq[VerifiedPair]): Set[Long] = {
+    val vsOld = pairs.collect {
+      case VerifiedPair(a, true, _, false) => a
+      case VerifiedPair(_, false, b, true) => b
+    }.toSet
+    val parent = scala.collection.mutable.HashMap.empty[Long, Long]
+    def find(x: Long): Long = {
+      var r = x
+      while (parent.contains(r)) r = parent(r)
+      var y = x // path compression
+      while (y != r) { val next = parent(y); parent(y) = r; y = next }
+      r
+    }
+    pairs.foreach { p =>
+      if (p.aNew && p.bNew && !vsOld(p.a) && !vsOld(p.b)) {
+        val (ra, rb) = (find(p.a), find(p.b))
+        if (ra != rb) parent(ra max rb) = ra min rb
+      }
+    }
+    vsOld ++ parent.keySet
   }
 
   /** The streaming wrapper: a file-source stream over `sourceDir` driving

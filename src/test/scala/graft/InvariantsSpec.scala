@@ -376,7 +376,8 @@ class InvariantsSpec extends AnyFunSuite with GoldenHarness {
     def pairs(st: SamplerState) = Sampler.nextPairBatch(spark, chunks, pool, goldenRecipes,
       st, 8, rankIndex = Some(ranks), srcStats = Some(stats))
     def texts(st: SamplerState) = Sampler.nextTextBatch(spark, chunks, pool,
-      Recipes.derivedTextRecipes(goldenRecipes), st, 8, srcStats = Some(stats))
+      Recipes.derivedTextRecipes(goldenRecipes), st, 8,
+      rankIndex = Some(ranks), srcStats = Some(stats))
     def run(st0: SamplerState) = {
       // one evolving state drives all three entry points — the reference
       // advances the same source cursors from every batch type

@@ -29,7 +29,8 @@ class StateAndRecipesSpec extends AnyFunSuite {
       Sampler.nextPairBatch(spark, chunks, pool, recipes, st, batch,
         rankIndex = Some(ranks), srcStats = Some(stats))
     def texts(recipes: Seq[TextRecipe], st: SamplerState, batch: Int): SamplerBatch =
-      Sampler.nextTextBatch(spark, chunks, pool, recipes, st, batch, srcStats = Some(stats))
+      Sampler.nextTextBatch(spark, chunks, pool, recipes, st, batch,
+        rankIndex = Some(ranks), srcStats = Some(stats))
   }
 
   // ---- sampler-state persistence (reference: FileSplitStore semantics) ----
