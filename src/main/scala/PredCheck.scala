@@ -1,4 +1,3 @@
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.functions.TextFunctions
 
@@ -11,10 +10,7 @@ import graft.functions.TextFunctions
   * Usage: sbt "runMain PredCheck /root/testdata/sf0.001 /root/testdata/sf0.01 /root/testdata/sf0.1"
   */
 object PredCheck extends App {
-  val spark = SparkSession.builder().master("local[8]")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.warehouse.dir", "/tmp/graft_warehouse")
-    .getOrCreate()
+  val spark = graft.Sessions.local()
   spark.sparkContext.setLogLevel("ERROR")
   import spark.implicits._
   val ns = Seq(1, 2, 3, 9, 12, 13, 15)

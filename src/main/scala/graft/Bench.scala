@@ -42,20 +42,8 @@ object Bench {
     java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
       .asScala.map(_.getCollectionTime).sum
 
-  private def newSession(cpus: String): SparkSession = {
-    val spark = SparkSession.builder()
-      .config("spark.sql.warehouse.dir", "/tmp/graft_warehouse")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
-      // listener-side plan descriptions: 'simple' skips the formatted-mode
-      // operator-id annotation pass (ExplainUtils.processPlan), which on
-      // the big composed plans costs real driver time per AQE stage update
-      .config("spark.sql.ui.explainMode", "simple")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+  private def newSession(): SparkSession = {
+    val spark = Sessions.local()
     spark.sparkContext.setLogLevel("WARN")
     // absorb context/executor init outside the timed window
     spark.range(1000).count()
@@ -84,10 +72,10 @@ object Bench {
     * inflated grade on untouched code must survive an isolated fresh
     * session before it can land in an artifact.
     */
-  private def measureSuite(names: Seq[String], sfDir: String, cpus: String,
+  private def measureSuite(names: Seq[String], sfDir: String,
       prevQ: Map[String, (Double, Double)] = Map.empty)
     : (Seq[Row], Map[String, (Double, Double)]) = {
-    var spark = newSession(cpus)
+    var spark = newSession()
     // JVM/codegen warmup on a FIXED query (Map ordering is arbitrary;
     // run-to-run comparability needs the same warm state every time)
     try names.headOption.foreach(n => SparkEntry.queries(n)(spark, sfDir).count())
@@ -102,7 +90,7 @@ object Bench {
     val rawResults = names.zipWithIndex.map { case (name, idx) =>
       if (idx > 0 && idx % SessionChunk == 0) {
         spark.stop()
-        spark = newSession(cpus)
+        spark = newSession()
       }
       val tc0 = System.nanoTime()
       val errCold =
@@ -164,7 +152,7 @@ object Bench {
     val retimes: Map[String, Double] =
       suspects.flatMap { name =>
         spark.stop()
-        spark = newSession(cpus)
+        spark = newSession()
         try SparkEntry.queries(name)(spark, sfDir).count()
         catch { case _: Throwable => }
         spark.catalog.clearCache(); System.gc()
@@ -286,7 +274,7 @@ object Bench {
     * artifact's two whole-loop rates disagreed 6×). */
   private val ServingWindows = 5
 
-  private def servingBench(sfDir: String, cpus: String): Option[String] = {
+  private def servingBench(sfDir: String): Option[String] = {
     // steady deliveries per loop (past the fetch-ahead transient); the
     // TOTAL loop length derives from this + the production window, so a
     // high producer count grows the loop instead of tripping a require
@@ -299,8 +287,8 @@ object Bench {
     // half the cores is the knee; a trainer deployment sizes this to
     // its driver like any fetch-ahead
     val par = sys.env.get("SPARK_GRAFT_SERVING_PAR").map(_.toInt)
-      .getOrElse(math.max(4, scala.util.Try(cpus.toInt).getOrElse(8) / 2))
-    val spark = newSession(cpus)
+      .getOrElse(math.max(4, Sessions.cpus / 2))
+    val spark = newSession()
     try {
       val (chunks, pool, recipes, ridx, stats) =
         graft.queries.RecipeQueries.mixServing(spark, sfDir)
@@ -517,7 +505,6 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // comma-separated substring filter for iterating on single queries
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.split(',').toSeq)
     val names = SparkEntry.queries.keys.toSeq.sorted
@@ -539,7 +526,7 @@ object Bench {
     // a serving-bench failure must not take the 150-query suite grade
     // down with it: record the exception as the serving value instead
     val serving = if (!wantServing) None
-      else try servingBench(sfDir, cpus)
+      else try servingBench(sfDir)
       catch { case t: Throwable =>
         Some(s"""{"error":"${t.getClass.getName}: ${
           Option(t.getMessage).getOrElse("")
@@ -548,7 +535,7 @@ object Bench {
 
     val prevQ = if (only.isEmpty) prevArtifactQueries(sfNum)
       else Map.empty[String, (Double, Double)]
-    val (results1, retimes1) = measureSuite(names, sfDir, cpus, prevQ)
+    val (results1, retimes1) = measureSuite(names, sfDir, prevQ)
     val firstTotal = results1.map(_._2).sum
     // degradation guard (only when running the full suite — a filtered
     // subset's total is not comparable to any committed artifact)
@@ -575,7 +562,7 @@ object Bench {
     val (results, retimesDiag, rerunTotal) =
       if (!drifted) (results1, retimes1, None)
       else {
-        val (results2, retimes2) = measureSuite(names, sfDir, cpus, prevQ)
+        val (results2, retimes2) = measureSuite(names, sfDir, prevQ)
         val byName2 = results2.map(r => r._1 -> r).toMap
         // per-query best-of-two-passes; errors keep the first pass's row
         // (a pass-2 error must not erase a completed pass-1 timing)

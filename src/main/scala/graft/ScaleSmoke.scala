@@ -61,14 +61,7 @@ object ScaleSmoke {
     val factor = sys.env.getOrElse("SPARK_GRAFT_SCALE_FACTOR", "10").toInt
     val outDir = sys.env.getOrElse("SPARK_GRAFT_SCALE_DIR", "target/sf1smoke")
     val bound = sys.env.getOrElse("SPARK_GRAFT_SCALE_BOUND", "12").toDouble
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.local()
     spark.sparkContext.setLogLevel("WARN")
     try {
       generate(spark, sfDir, outDir, factor)

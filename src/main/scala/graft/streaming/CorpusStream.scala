@@ -9,7 +9,7 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 import graft.core.Determinism
 import graft.functions.TextFunctions
-import graft.operators.{Bm25Index, Dedup}
+import graft.operators.{Bm25, Bm25Index, Dedup}
 
 /** Continuous corpus intake — the Structured-Streaming composition of the
   * incremental curation operators (reference: the ingestion refresh loop,
@@ -205,9 +205,14 @@ object CorpusStream {
         .parquet(s"$stateDir/hashes/$b")
       newSigs.join(broadcast(drops), Seq("doc_id"), "left_anti") // newSigs ⊆ exact
         .write.mode("overwrite").parquet(s"$stateDir/sigs/$b")
-      val delta = Bm25Index.build(survivors, "doc_id", textCol)
-      delta.postings.write.mode("overwrite").parquet(s"$stateDir/bm25/$b/postings")
-      delta.docLens.write.mode("overwrite").parquet(s"$stateDir/bm25/$b/doclens")
+      val postings = s"$stateDir/bm25/$b/postings"
+      val tf = Bm25.termFrequencies(survivors, "doc_id", textCol)
+      tf.write.mode("overwrite").parquet(postings)
+      // the lengths sum the postings just written, so the shard is
+      // tokenized once; the known schema (no footer-reading job) and one
+      // partition (no exchange) keep the read-back to one job
+      Bm25.docLengths(spark.read.schema(tf.schema).parquet(postings).coalesce(1))
+        .write.mode("overwrite").parquet(s"$stateDir/bm25/$b/doclens")
     }
     survivorRows.size.toLong
   }

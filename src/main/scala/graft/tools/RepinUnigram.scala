@@ -1,16 +1,12 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Regenerates the [[graft.operators.PinnedVocabData]] literal from the
   * sf0.001 corpus with the trainer defaults — run after an intentional
   * trainer change, paste the output over the object body, and re-run the
   * full oracle gate (UnigramSpec asserts the pin matches a retrain). */
 object RepinUnigram {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.Sessions.local(4)
     spark.sparkContext.setLogLevel("ERROR")
     val docs = graft.core.Tables.load(spark, "/root/testdata/sf0.001", "documents")
     val wc = graft.operators.Bpe.wordCounts(docs, maxWords = 300)

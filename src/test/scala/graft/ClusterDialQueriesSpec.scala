@@ -40,16 +40,11 @@ class ClusterDialQueriesSpec extends AnyFunSuite {
     val classes = Seq("target/scala-2.13/classes", "target/scala-2.13/test-classes")
       .map(p => new java.io.File(p).getAbsolutePath)
       .mkString(java.io.File.pathSeparator)
-    SparkSession.builder()
-      .master(master)
-      .appName("graft-cluster-dials")
-      .config("spark.executor.extraClassPath", classes)
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir", "/tmp/graft_warehouse_cluster")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    Sessions.local(8, Map(
+      "spark.master" -> master,
+      "spark.app.name" -> "graft-cluster-dials",
+      "spark.executor.extraClassPath" -> classes,
+      "spark.sql.warehouse.dir" -> "/tmp/graft_warehouse_cluster"))
   }
 
   /** Canonical, ordering-free view of a result: every row rendered on

@@ -37,16 +37,11 @@ class ClusterGoldenSpec extends AnyFunSuite with GoldenHarness {
     val classes = Seq("target/scala-2.13/classes", "target/scala-2.13/test-classes")
       .map(p => new java.io.File(p).getAbsolutePath)
       .mkString(java.io.File.pathSeparator)
-    SparkSession.builder()
-      .master("local-cluster[2,8,4096]")
-      .appName("graft-cluster-golden")
-      .config("spark.executor.extraClassPath", classes)
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir", "/tmp/graft_warehouse_cluster")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    Sessions.local(8, Map(
+      "spark.master" -> "local-cluster[2,8,4096]",
+      "spark.app.name" -> "graft-cluster-golden",
+      "spark.executor.extraClassPath" -> classes,
+      "spark.sql.warehouse.dir" -> "/tmp/graft_warehouse_cluster"))
   }
 
   test("golden matrix: all six 45-batch pins hold across executor boundaries") {

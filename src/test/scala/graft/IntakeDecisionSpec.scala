@@ -129,7 +129,6 @@ class IntakeDecisionSpec extends AnyFunSuite {
   }
 
   test("applyBatch on a standing state with new–new and new–old near-dups starts ≤ 24 jobs") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     val cfg = IntakeConfig()
     val stateDir = Files.createTempDirectory("graft_intake_jobs").toString
     CorpusStream.applyBatch(spark, df(Seq(1L -> long24(greek :+ "omega"),
@@ -139,33 +138,14 @@ class IntakeDecisionSpec extends AnyFunSuite {
     val batch = df(Seq(11L -> long24(greek :+ "digamma"), 20L -> long24(dirs :+ "beyond"),
       21L -> long24(dirs :+ "between"), 22L -> long24(colors :+ "silver"),
       30L -> long24(greek :+ "omega")))
-    val sc = spark.sparkContext
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val sentinel = new java.util.concurrent.CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        Option(j.properties).map(_.getProperty("spark.jobGroup.id")).orNull match {
-          case "intake-apply" => jobs.incrementAndGet()
-          case "intake-sentinel" => sentinel.countDown()
-          case _ => ()
-        }
+    val run = Profile.jobsIn(spark.sparkContext, "intake-apply") {
+      CorpusStream.applyBatch(spark, batch, 1L, stateDir, cfg)
     }
-    sc.addSparkListener(listener)
-    val n = try {
-      sc.setJobGroup("intake-apply", "CorpusStream.applyBatch")
-      val n = try CorpusStream.applyBatch(spark, batch, 1L, stateDir, cfg)
-        finally sc.clearJobGroup()
-      // listener delivery is async: a job queued after applyBatch marks
-      // the end of its events
-      sc.setJobGroup("intake-sentinel", "listener sentinel")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      assert(sentinel.await(10, java.util.concurrent.TimeUnit.SECONDS))
-      n
-    } finally sc.removeSparkListener(listener)
     assert(CorpusStream.corpus(spark, stateDir).get.select("doc_id")
       .collect().map(_.getLong(0)).toSet == Set(1L, 4L, 12L, 20L))
-    assert(n == 1L)
-    info(s"applyBatch started ${jobs.get} Spark jobs")
-    assert(jobs.get <= 24, s"applyBatch started ${jobs.get} Spark jobs")
+    assert(run.result == 1L)
+    val jobs = run.jobs.size
+    info(s"applyBatch started $jobs Spark jobs")
+    assert(jobs <= 24, s"applyBatch started $jobs Spark jobs")
   }
 }

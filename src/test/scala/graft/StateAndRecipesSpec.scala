@@ -449,7 +449,6 @@ class StateAndRecipesSpec extends AnyFunSuite {
   }
 
   test("ExtendedMetrics accumulates lifetime totals: two resumed half-batches == one batch") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     val fx = new SmallComposed
     val recipes = Seq(TripletRecipe("xm", Selector.RoleAnchor, Selector.RoleContext,
       NegativeStrategy.WrongArticle))
@@ -461,29 +460,12 @@ class StateAndRecipesSpec extends AnyFunSuite {
     val h1 = fx.triplets(recipes, SamplerState("xm", 0L, Map.empty), batch = 4)
     val h2 = fx.triplets(recipes, h1.state, batch = 4)
     // `add` folds the already-collected core rows on the driver: a
-    // listener sees no job in the group it runs under. Delivery is async,
-    // so a sentinel job queued after `add` marks the end of its events.
-    val sc = spark.sparkContext
-    val addJobs = new java.util.concurrent.atomic.AtomicInteger()
-    val sentinel = new java.util.concurrent.CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        Option(j.properties).map(_.getProperty("spark.jobGroup.id")).orNull match {
-          case "em-add" => addJobs.incrementAndGet()
-          case "em-sentinel" => sentinel.countDown()
-          case _ => ()
-        }
+    // listener sees no job in the group it runs under
+    val run = Profile.jobsIn(spark.sparkContext, "em-add") {
+      new ExtendedMetrics().add(h1).add(h2)
     }
-    sc.addSparkListener(listener)
-    val m = try {
-      sc.setJobGroup("em-add", "ExtendedMetrics.add")
-      val m = try new ExtendedMetrics().add(h1).add(h2) finally sc.clearJobGroup()
-      sc.setJobGroup("em-sentinel", "listener sentinel")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      assert(sentinel.await(10, java.util.concurrent.TimeUnit.SECONDS))
-      m
-    } finally sc.removeSparkListener(listener)
-    assert(addJobs.get == 0, s"ExtendedMetrics.add started ${addJobs.get} Spark job(s)")
+    val m = run.result
+    assert(run.jobs.isEmpty, s"ExtendedMetrics.add started ${run.jobs.size} Spark job(s)")
     assert(m.totals == oneTotals)
     assert(m.totals.values.sum == one.core.count())
   }

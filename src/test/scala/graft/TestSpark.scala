@@ -4,19 +4,9 @@ import org.apache.spark.sql.SparkSession
 
 /** One shared session for the whole test run. */
 object TestSpark {
-  lazy val spark: SparkSession = SparkSession.builder()
-      .config("spark.sql.warehouse.dir", "/tmp/graft_warehouse")
-    .master("local[4]")
-    .appName("graft-tests")
+  lazy val spark: SparkSession = Sessions.local(4, Map(
+    "spark.app.name" -> "graft-tests",
     // FAIR so IngestionSpec's per-source refresh pools genuinely share
     // the cluster (pools not in an allocation file get default settings)
-    .config("spark.scheduler.mode", "FAIR")
-    // conf-time injection path for the SQL surface (the register() path
-    // is covered separately in InvariantsSpec)
-    .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.ui.explainMode", "simple")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
+    "spark.scheduler.mode" -> "FAIR"))
 }
