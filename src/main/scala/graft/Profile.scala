@@ -7,6 +7,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.SparkContext
 import org.apache.spark.scheduler._
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.FormattedMode
 
 /** The job profiler: one listener, one query runner and the plan dumper.
@@ -31,6 +32,9 @@ import org.apache.spark.sql.execution.FormattedMode
   */
 object Profile {
 
+  /** The local property that carries a job's description. */
+  private val JobDescription = "spark.job.description"
+
   final case class Job(id: Int, startMs: Long, endMs: Long, description: String)
   final case class Stage(scope: String, ms: Long, tasks: Int)
   final case class Run[T](result: T, jobs: Seq[Job], stages: Seq[Stage])
@@ -53,7 +57,11 @@ object Profile {
           case Some(`group`) =>
             // the result stage (highest id) is named after the job's call site
             val site = j.stageInfos.maxByOption(_.stageId).map(_.name)
-            starts.put(j.jobId, (j.time, prop("callSite.short").orElse(site).getOrElse("?"),
+            // a phase's description (see `phase`) names the job ahead of
+            // its call site; the group's own description is no name
+            val phase = prop(JobDescription).filter(_ != group)
+            starts.put(j.jobId, (j.time,
+              (phase.toSeq :+ prop("callSite.short").orElse(site).getOrElse("?")).mkString(": "),
               j.stageIds))
           case Some(`sentinelGroup`) => sentinel.countDown()
           case _ => ()
@@ -84,6 +92,19 @@ object Profile {
       val ours = starts.values.asScala.flatMap(_._3).toSet
       Run(result, jobs, stages.asScala.toSeq.collect { case (id, st) if ours(id) => st })
     } finally sc.removeSparkListener(listener)
+  }
+
+  /** Runs `body` with `name` as the job description of every job it
+    * starts on this thread — how a composed phase's jobs are attributed
+    * (`jobsIn` and `graft.Profile <q>` print it ahead of the call site) —
+    * and restores the caller's description afterwards. The job group is
+    * untouched, so group-keyed listeners attribute as before; no job is
+    * added and no result changes. */
+  def phase[T](spark: SparkSession, name: String)(body: => T): T = {
+    val sc = spark.sparkContext
+    val prev = sc.getLocalProperty(JobDescription)
+    sc.setJobDescription(name)
+    try body finally sc.setLocalProperty(JobDescription, prev)
   }
 
   /** Length of the union of `[start, end)` spans, and the holes between

@@ -29,6 +29,15 @@ object TextFunctions {
   def tokens(c: Column): Column =
     filter(split(normalizeWs(c), " "), t => t =!= "")
 
+  /** Scalar twin of `array_distinct(tokens(c))` for driver-side code:
+    * the distinct whitespace tokens of `text` in first-occurrence order
+    * (null text: none). It does not trim: Spark's `trim` strips only
+    * U+0020 while Java's `String.trim` strips every char ≤ U+0020, and
+    * the empty tokens an untrimmed split leaves are dropped anyway. */
+  def distinctTokens(text: String): Seq[String] =
+    if (text == null) Nil
+    else text.replaceAll("\\s+", " ").split(" ", -1).toSeq.filter(_.nonEmpty).distinct
+
   /** Raw-text predicate equivalent to `size(tokens(c)) >= n` — without
     * evaluating the tokenizer. Tokens are exactly the maximal non-\s
     * runs of the text (nonempty splits of \s-normalized text), so

@@ -192,42 +192,23 @@ object Mixing {
       .select(col("id"), col("source"), col("pos"))
   }
 
-  /** Resolve a BOUNDED set of dense epoch positions to their records
-    * WITHOUT materializing the full order — the batch sampler's pick
-    * lane. [[epochOrder]]'s dense position is analytically invertible
-    * from the #sources-sized stats table: with cum(r) = Σ_s min(n_s, r)
-    * (records served above depth r), a target position p sits at depth
-    * r = max{r : cum(r) <= p}, offset p - cum(r) into the sources still
-    * alive at that depth (srank order). So the driver maps each position
-    * to its (source, depth) in O(#sources · log) and the cluster only
-    * ranks the NEEDED sources' pools — one keyed window + a broadcast
-    * join, instead of ranking the whole corpus and cross-joining it with
-    * the source stats to build positions nobody reads. Identical values
-    * to `epochOrder(pool, epoch).filter(pos ∈ positions)` (law-pinned).
-    * Emits (pos, id, source).
-    *
-    * `stats` (optional): the pool's per-source counts, when the caller
-    * already collected them this batch (the composed sampler shares ONE
-    * stats collect across pool size, epoch pick, and fallback order) —
-    * values identical to the internal groupBy, input order irrelevant. */
-  def epochPick(pool: DataFrame, epoch: Long, positions: Seq[Long],
-      stats: Option[Seq[(String, Long)]] = None,
-      preRanked: Option[DataFrame] = None): DataFrame = {
-    val spark = pool.sparkSession
-    import spark.implicits._
-    val srcs = stats.map(_.toArray).getOrElse(
-        pool.groupBy(col("source")).agg(count(lit(1)).as("n"))
-          .collect().map(r => (r.getString(0), r.getLong(1))))
+  /** The driver half of [[epochPick]]: each requested dense position of
+    * `epoch`'s order as its (source, r, pos) target — the source and the
+    * per-source seeded rank `r` that serve it — from the per-source
+    * counts alone (input order irrelevant). Pure counter arithmetic;
+    * out-of-range positions are DROPPED, not an error — the join-based
+    * construction this replaces silently unmatched them, and a stale
+    * cached pool_size (pool shrank without invalidation) must degrade to
+    * a padded batch, not a driver crash. */
+  def epochTargets(stats: Seq[(String, Long)], epoch: Long,
+      positions: Seq[Long]): Seq[(String, Long, Long)] = {
+    val srcs = stats.toArray
       .sortBy { case (s, _) => (Determinism.jvmHash(s"so:$epoch:$s"), s) }
     val ns = srcs.map(_._2)
     val total = ns.sum
     def cum(r: Long): Long = { var i = 0; var c = 0L
       while (i < ns.length) { c += math.min(ns(i), r); i += 1 }; c }
-    // out-of-range positions are DROPPED, not an error — the join-based
-    // construction this replaces silently unmatched them, and a stale
-    // cached pool_size (pool shrank without invalidation) must degrade to
-    // a padded batch, not a driver crash
-    val wanted = positions.distinct.filter(p => p >= 0 && p < total).map { p =>
+    positions.distinct.filter(p => p >= 0 && p < total).map { p =>
       // largest r with cum(r) <= p (cum is nondecreasing, step <= #sources)
       var lo = 0L; var hi = ns.max
       while (lo < hi) {
@@ -245,20 +226,39 @@ object Mixing {
       require(si >= 0, s"epochPick: no source at depth $r for position $p")
       (srcs(si)._1, r, p)
     }
+  }
+
+  /** Resolve a BOUNDED set of dense epoch positions to their records
+    * WITHOUT materializing the full order — the batch sampler's pick
+    * lane. [[epochOrder]]'s dense position is analytically invertible
+    * from the #sources-sized stats table: with cum(r) = Σ_s min(n_s, r)
+    * (records served above depth r), a target position p sits at depth
+    * r = max{r : cum(r) <= p}, offset p - cum(r) into the sources still
+    * alive at that depth (srank order). So the driver maps each position
+    * to its (source, depth) in O(#sources · log) and the cluster only
+    * ranks the NEEDED sources' pools ([[epochTargets]], then one keyed
+    * window + a broadcast join), instead of ranking the whole corpus and cross-joining it with
+    * the source stats to build positions nobody reads. Identical values
+    * to `epochOrder(pool, epoch).filter(pos ∈ positions)` (law-pinned).
+    * Emits (pos, id, source).
+    *
+    * `stats` (optional): the pool's per-source counts, when the caller
+    * already collected them this batch (the composed sampler shares ONE
+    * stats collect across pool size, epoch pick, and fallback order) —
+    * values identical to the internal groupBy, input order irrelevant. */
+  def epochPick(pool: DataFrame, epoch: Long, positions: Seq[Long],
+      stats: Option[Seq[(String, Long)]] = None): DataFrame = {
+    val spark = pool.sparkSession
+    import spark.implicits._
+    val wanted = epochTargets(stats.getOrElse(
+        pool.groupBy(col("source")).agg(count(lit(1)).as("n"))
+          .collect().map(r => (r.getString(0), r.getLong(1))).toSeq),
+      epoch, positions)
     val needed = wanted.map(_._1).distinct
-    // `preRanked` carries this epoch's per-source seeded rank PRE-STAGED
-    // (the rank sidecar's `er0` column for epoch 0 — same orderBy, same
-    // tiebreak, persisted at pool refresh): a filter+join on the sorted
-    // sidecar leaf replaces the per-batch rank window. Callers may pass
-    // it ONLY for the epoch whose order it bakes in.
-    val ranked = preRanked match {
-      case Some(pr) => pr.filter(col("source").isin(needed: _*))
-        .select(col("source"), col("r"), col("id"))
-      case None => pool.filter(col("source").isin(needed: _*))
-        .withColumn("r", row_number().over(Window.partitionBy(col("source"))
-          .orderBy(Determinism.seeded(s"ro:$epoch", col("id")), col("id"))).cast("long") - 1)
-    }
-    ranked.join(broadcast(wanted.toDF("source", "r", "pos")), Seq("source", "r"))
+    pool.filter(col("source").isin(needed: _*))
+      .withColumn("r", row_number().over(Window.partitionBy(col("source"))
+        .orderBy(Determinism.seeded(s"ro:$epoch", col("id")), col("id"))).cast("long") - 1)
+      .join(broadcast(wanted.toDF("source", "r", "pos")), Seq("source", "r"))
       .select(col("pos"), col("id"), col("source"))
   }
 

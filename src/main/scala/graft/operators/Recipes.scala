@@ -243,39 +243,52 @@ object Recipes {
       .drop("crnk", "csize", "mode", "arg")
   }
 
-  /** Multi-slot [[selectChunksBatch]]: ALL slots of a composed batch in
-    * one plan. `draws` carries one row per (slot, draw) — (`draw`,
-    * `slot`, `record_id`, `mode`, `arg`) — so the eligibility join also
-    * restricts to the slot's chunk-source record up front (the per-slot
-    * form joined every batch record against every draw and cut the
-    * product afterwards). The window partitions by (slot, draw,
-    * record_id): ranks within a (draw, record_id) group are untouched by
-    * dropping other groups, and the pick hash is the SAME
-    * `sel:<slot>:<draw>:<record_id>` stream — selection is bit-identical
-    * to running selectChunksBatch once per slot and joining the slot's
-    * record restriction after. One window pass replaces one per slot
-    * (the round-9 composed-sampler latency directive). */
-  def selectChunksBatchSlots(chunks: org.apache.spark.sql.DataFrame,
-      draws: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.functions._
-    import org.apache.spark.sql.expressions.Window
-    import graft.core.Determinism
-    val d = draws.withColumnRenamed("record_id", "rid")
-    val elig = chunks.join(broadcast(d),
-      col("record_id") === col("rid") && (
-        (col("mode") === "role" && col("role") === col("arg")) ||
-          (col("mode") === "para" && col("section_idx") === col("arg").cast("int")) ||
-          (col("mode") === "random")))
-    val w = Window.partitionBy(col("slot"), col("draw"), col("record_id"))
-      .orderBy(col("section_idx"), col("view_kind"), col("window_index"), col("overlap"))
-    elig
-      .withColumn("crnk", row_number().over(w).cast("long") - 1)
-      .withColumn("csize", count(lit(1)).over(
-        Window.partitionBy(col("slot"), col("draw"), col("record_id"))))
-      .filter(col("crnk") === pmod(Determinism.portableHash(
-        concat(lit("sel:"), col("slot"), lit(":"), col("draw").cast("string"),
-          lit(":"), col("record_id").cast("string"))), col("csize")))
-      .drop("crnk", "csize", "mode", "arg", "rid")
+  /** One chunk-table row as the driver-side pick reads it: the
+    * [[graft.core.RecordChunk]] columns a selector and the sampler use.
+    * The numeric order columns are `None` where the table holds null
+    * (they sort first, like Spark's ascending order). */
+  final case class ChunkRow(recordId: Long, sectionIdx: Option[Long], role: String,
+      viewKind: String, windowIndex: Option[Long], overlap: Option[Long], wtext: String)
+
+  /** One chunk pick to make: the slot's stream tag (`a`, `p`, `n`, `t`),
+    * the draw, the chunk-source record, and the selector as its
+    * [[Sampler.selectorDesc]] (mode, arg). */
+  final case class ChunkDraw(slot: String, draw: Long, recordId: Long, mode: String, arg: String)
+
+  private val chunkOrder: Ordering[ChunkRow] = {
+    // Spark compares strings by their UTF-8 bytes, nulls first
+    val utf8: Ordering[String] = (a, b) =>
+      org.apache.spark.unsafe.types.UTF8String.fromString(a)
+        .compareTo(org.apache.spark.unsafe.types.UTF8String.fromString(b))
+    Ordering.by((c: ChunkRow) => (c.sectionIdx, Option(c.viewKind), c.windowIndex, c.overlap))(
+      Ordering.Tuple4(Ordering.Option[Long], Ordering.Option(utf8), Ordering.Option[Long],
+        Ordering.Option[Long]))
+  }
+
+  /** The driver twin of [[selectChunksBatch]] for a composed batch: every
+    * draw's pick over chunk rows already on the driver (all chunks of
+    * each draw's record). A draw's eligible chunks are its record's rows
+    * that match the selector mode (role, para or random), ordered by
+    * (section_idx, view_kind, window_index, overlap); it takes the one at
+    * `pmod(hash(sel:<slot>:<draw>:<record_id>), csize)` — the same pick
+    * as running selectChunksBatch once per slot and keeping the draw's
+    * record (law-pinned by DriverPicksSpec). Returns one pick per
+    * draw that has any eligible chunk, in `draws` order. */
+  def selectChunksLocal(rows: Seq[ChunkRow], draws: Seq[ChunkDraw]): Seq[(ChunkDraw, ChunkRow)] = {
+    val byRecord = rows.groupBy(_.recordId).view.mapValues(_.sorted(chunkOrder)).toMap
+    draws.flatMap { d =>
+      val elig = byRecord.getOrElse(d.recordId, Nil).filter { c =>
+        d.mode match {
+          case "role" => c.role == d.arg
+          case "para" => c.sectionIdx.contains(d.arg.toLong)
+          case "random" => true
+          case _ => false
+        }
+      }
+      if (elig.isEmpty) None
+      else Some(d -> elig((graft.core.Determinism.jvmHash(
+        s"sel:${d.slot}:${d.draw}:${d.recordId}") % elig.size).toInt))
+    }
   }
 
   /** Stages B and C of the auto-injected chunk-pair recipe

@@ -1,6 +1,8 @@
 package graft.operators
 
+import graft.Profile
 import graft.core.Determinism
+import graft.functions.TextFunctions
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -106,24 +108,22 @@ final class ExtendedMetrics {
   * repeat within an epoch cycle (cycle-before-repeat) by construction —
   * positions are served in order off a per-epoch permutation.
   *
-  * Scale shape: the only corpus-sized work per batch is the dense epoch
-  * order ([[Mixing.epochOrder]] — per-source windows over (id, source)
-  * pairs plus a broadcast source-stats join, no global window) and the
-  * rank-pick joins over the narrow pool. The chunk restriction is an
-  * `isin` PREDICATE over the batch's id list (≤ 2×batch longs), which
-  * pushes below the chunk table's window/explode derivation to the record
-  * scan — chunking cost per batch is ∝ batch size, not corpus size (a
-  * broadcast join could not push through the Generate). The selector
-  * windows and the negative rank-pick run on batch-bounded frames; the
-  * core join, rejection, dedup and pad run in Scala on the driver over
-  * the batch's core rows (ids, window indices, text hashes). No collect
-  * of record text; the driver holds counters, the slot schedule and
-  * those few×batch core rows.
+  * Scale shape: a batch reads by key and picks on the driver. Its reads
+  * are bounded by the batch: the slot records (at epoch 0 one keyed read
+  * of the staged rank sidecar; later epochs rank the needed sources'
+  * pools, [[Mixing.epochPick]]), the picked records' chunk rows (an
+  * `isin` PREDICATE over ≤ 2×batch ids, which pushes below a derived
+  * chunk table's window/explode to the record scan — a broadcast join
+  * could not push through the Generate), the negative targets' sidecar
+  * rows, and the BM25 scoring join. Chunk picks, the strategy × tier
+  * dispatch, the core join, rejection, dedup and pad run in Scala over
+  * those rows. The driver holds counters, the slot schedule and the
+  * batch's chunk rows (≤ 2×batch records' chunks).
   */
 object Sampler {
 
-  /** Selector → (mode, arg) for the broadcast draws frame of
-    * [[Recipes.selectChunksBatch]]. TemporalOffset is CHUNK-level a
+  /** Selector → (mode, arg) for the draws of [[Recipes.selectChunksLocal]]
+    * and [[Recipes.selectChunksBatch]]. TemporalOffset is CHUNK-level a
     * context-role pick — the reference selects the as-of neighbor record
     * and then its context chunk (src/sampler/mod.rs:1701-1704); the
     * record-level swap is [[temporalDays]] + the staged
@@ -149,18 +149,13 @@ object Sampler {
     rankIndex.get
   }
 
-  /** Materialize a BATCH-BOUNDED frame as a driver-local relation: the
-    * values come from the same Spark plan (one collect — the same job an
-    * eager localCheckpoint would run), but downstream consumers see a
-    * LocalRelation, so broadcasting it costs no job, local projections of
-    * it collect without scheduling one, and joins plan against exact
-    * sizes. Lineage is cut exactly like localCheckpoint. Applied ONLY to
-    * ≤ few×batch-row frames (the slot-schedule scale the driver already
-    * holds — the counters-and-schedule contract); corpus-scale frames
-    * (pool, rank sidecar, chunk tables) stay executor-side checkpoints. */
-  private def localRelation(spark: SparkSession, df: DataFrame): DataFrame =
-    localRows(spark, df.collect().toSeq, df.schema)
-
+  /** Driver rows as a driver-local relation (a LocalRelation): collecting
+    * it, or a projection of it, runs no Spark job, and joins plan against
+    * its exact size. Broadcasting it is NOT free: under AQE a broadcast of
+    * a LocalTableScan runs a job of its own. Applied ONLY to ≤ few×batch
+    * rows (the slot-schedule scale the driver already holds — the
+    * counters-and-schedule contract); corpus-scale frames (pool, rank
+    * sidecar, chunk tables) stay executor-side. */
   private def localRows(spark: SparkSession, rows: Seq[Row], schema: StructType): DataFrame =
     spark.createDataFrame(rows.asJava, schema)
 
@@ -327,41 +322,81 @@ object Sampler {
       s"TemporalOffset($d) recipes need the staged neighbor map for offset $d " +
         s"in neighborIndex (build it with temporalNeighborsFull)"))
 
-  /** The chunk-source record per draw for one slot's selectors: `dayOf`
-    * maps each recipe name to its selector's temporal offset. Temporal
-    * recipes swap in the as-of neighbor (reference select_chunk,
-    * src/sampler/mod.rs:1701-1704: TemporalOffset resolves the neighbor
-    * record, then picks its CONTEXT chunk; no same-pool neighbor → the
-    * slot drops and pad_with_reuse fills the batch — the contract's "skip
-    * rather than contaminate", src/config.rs:131-137) through an id-pruned
-    * read of the staged, record_id-sorted neighbor map — zero pool-scale
-    * work; `base` is a LocalRelation, so the id collect schedules no job.
-    * Returns (hasTemporal, plan): the PLAN only — callers localize it
-    * (and fuse several slots into one collect when any lane is temporal);
-    * slot sets without temporal selectors return the base projection
-    * untouched. */
-  private def chunkSources(dayOf: Seq[(String, Option[Int])], base: DataFrame,
-      neighborIndex: Map[Int, DataFrame]): (Boolean, DataFrame) = {
-    // fallback rows carry the `_fallback_same_split`-suffixed recipe name
-    // (crossSplitPick) — match both forms
-    def forms(ns: Seq[String]) = ns ++ ns.map(_ + Recipes.FallbackSuffix)
-    val temporal = dayOf.collect { case (n, Some(d)) => (n, d) }
-    if (temporal.isEmpty) (false, base.select(col("draw"), col("record_id")))
-    else {
-      val plainNames = dayOf.collect { case (n, None) => n }
-      val lanes = temporal.groupBy(_._2).toSeq.sortBy(_._1).map { case (d, rs) =>
-        val forIds = base.filter(col("recipe").isin(forms(rs.map(_._1)): _*))
-          .select(col("draw"), col("record_id"))
-        val ids = forIds.select(col("record_id")).collect().map(_.getLong(0)).distinct.toSeq
-        forIds.join(neighborIndex(d).filter(col("record_id").isin(ids: _*)), Seq("record_id"))
-          .select(col("draw"), col("nbid").as("record_id"))
+  /** The chunk-source record of each `(draw, recipe, record)` for one
+    * slot's selector (`dayOf` maps a recipe to its selector's temporal
+    * offset): the record itself, or its staged as-of neighbor for a
+    * TemporalOffset selector (reference select_chunk,
+    * src/sampler/mod.rs:1701-1704: resolve the neighbor record, then pick
+    * its CONTEXT chunk). A record with no same-pool neighbor drops its
+    * draw and pad_with_reuse fills the batch — the contract's "skip rather
+    * than contaminate" (src/config.rs:131-137). `nb` is [[neighborsOf]]'s
+    * map. Returns (draw, chunk-source record). */
+  private def chunkSources(recs: Seq[(Long, String, Long)], dayOf: String => Option[Int],
+      nb: Map[(Int, Long), Long]): Seq[(Long, Long)] =
+    recs.flatMap { case (draw, recipe, id) =>
+      dayOf(recipe) match {
+        case None => Some(draw -> id)
+        case Some(d) => nb.get((d, id)).map(draw -> _)
       }
-      val plain =
-        if (plainNames.isEmpty) Nil
-        else Seq(base.filter(col("recipe").isin(forms(plainNames): _*))
-          .select(col("draw"), col("record_id")))
-      (true, (plain ++ lanes).reduce(_ unionByName _))
     }
+
+  /** The staged as-of neighbor ([[temporalNeighborsFull]]) of each
+    * (offset, record) in `need`: one id-pruned read of each offset's
+    * record_id-sorted map — zero pool-scale work, no job when `need` is
+    * empty. */
+  private def neighborsOf(need: Seq[(Int, Long)],
+      neighborIndex: Map[Int, DataFrame]): Map[(Int, Long), Long] =
+    need.distinct.groupBy(_._1).toSeq.sortBy(_._1).flatMap { case (d, ps) =>
+      neighborIndex(d).filter(col("record_id").isin(ps.map(_._2): _*))
+        .select(col("record_id"), col("nbid")).collect()
+        .map(r => (d, r.getLong(0)) -> r.getLong(1))
+    }.toMap
+
+  /** Every chunk row of the records `ids`: ONE keyed read of the chunk
+    * table. The restriction is an `isin` PREDICATE, not a join: it pushes
+    * below a derived table's window/explode to the record scan (a
+    * broadcast join could not push through the Generate), so chunking
+    * cost per batch is ∝ batch size, not corpus size. No job for no ids. */
+  private[graft] def chunkRows(chunks: DataFrame, ids: Seq[Long]): Seq[Recipes.ChunkRow] =
+    if (ids.isEmpty) Nil
+    else chunks.filter(col("record_id").isin(ids: _*))
+      .select(col("record_id").cast("long"), col("section_idx").cast("long"), col("role"),
+        col("view_kind"), col("window_index").cast("long"), col("overlap").cast("long"),
+        col("wtext"))
+      .collect().toSeq.map { r =>
+        def opt(i: Int) = if (r.isNullAt(i)) None else Some(r.getLong(i))
+        Recipes.ChunkRow(r.getLong(0), opt(1), r.getString(2), r.getString(3), opt(4), opt(5),
+          r.getString(6))
+      }
+
+  /** Each draw's chunk pick for one slot tag (`a`, `p`, `n`, `t`) over
+    * rows in hand ([[Recipes.selectChunksLocal]]), with its delivered
+    * text hash: the raw text's portable hash, or — with a KVP sampler —
+    * the hash of the text decorated under the per-(record, draw) key
+    * `dec:<slot>:<record_id>:<draw>` (reference: the batch loop decorates,
+    * src/sampler/mod.rs:1470-1508) by [[Decoration.decorateColumn]],
+    * evaluated as a projection over a driver-local relation, which runs
+    * no job. A null text hashes to null. */
+  private def slotPicks(spark: SparkSession,
+      decoration: Option[(graft.functions.KvpPrefixSampler, Int)], slot: String,
+      rows: Seq[Recipes.ChunkRow], srcs: Seq[(Long, Long)], selOf: Long => Selector)
+      : Map[Long, (Recipes.ChunkRow, Option[Long])] = {
+    val picks = Recipes.selectChunksLocal(rows, srcs.map { case (draw, rid) =>
+      val (m, a) = selectorDesc(selOf(draw))
+      Recipes.ChunkDraw(slot, draw, rid, m, a)
+    })
+    val hashes = decoration match {
+      case None => picks.map { case (_, c) => Option(c.wtext).map(Determinism.jvmHash) }
+      case Some(_) if picks.isEmpty => Nil
+      case Some((smp, maxTok)) =>
+        localRows(spark,
+            picks.map { case (d, c) => Row(s"dec:$slot:${c.recordId}:${d.draw}", c.wtext) },
+            StructType(Seq(StructField("key", StringType), StructField("wtext", StringType))))
+          .select(Determinism.portableHash(Decoration.decorateColumn(smp, col("key"),
+            split(col("wtext"), " "), maxTok).getField("text")))
+          .collect().toSeq.map(r => if (r.isNullAt(0)) None else Some(r.getLong(0)))
+    }
+    picks.zip(hashes).map { case ((d, c), h) => d.draw -> (c, h) }.toMap
   }
 
   /** The state a `batch`-draw [[nextBatch]] call will RETURN, computed
@@ -423,35 +458,67 @@ object Sampler {
     (srcCounts, slots, st2)
   }
 
-  /** Record pick: each slot's record off its epoch's interleave
-    * ([[Mixing.epochPick]] — bounded-position pick, the dense order
-    * inverted analytically instead of a corpus-wide position column per
-    * batch), as a driver-local relation of (draw, epoch, recipe,
-    * [reason,] record_id, source). The rank sidecar's staged epoch-0 rank
-    * (`er0`) serves epoch 0, so the per-batch rank window disappears for
-    * the entire first epoch; `reasonOf` adds the triplet slots' strategy
-    * tag. */
-  private def slotRecords(spark: SparkSession, pool: DataFrame,
-      slots: Seq[(Long, Long, Long, String)], srcCounts: Seq[(String, Long)],
-      rankTbl: DataFrame, reasonOf: Option[String => String]): DataFrame = {
-    import spark.implicits._
-    localRelation(spark, slots.groupBy(_._2).toSeq.sortBy(_._1).map { case (ep, ss) =>
-      val sdf = ss.map(s => (s._1, s._3, s._4, reasonOf.map(_(s._4)).orNull))
-        .toDF("draw", "pos", "recipe", "reason")
-      val pre = if (ep == 0) Some(rankTbl.select(col("source"), col("er0").as("r"), col("id")))
-        else None
-      Mixing.epochPick(pool, ep, ss.map(_._3), Some(srcCounts), pre)
-        .join(broadcast(sdf), "pos")
-        .select(Seq(col("draw"), lit(ep).as("epoch"), col("recipe")) ++
-          reasonOf.map(_ => col("reason")) ++
-          Seq(col("id").as("record_id"), col("source")): _*)
-    }.reduce(_ unionByName _))
+  /** One staged rank-sidecar row ([[rankSidecar]]). An undated pool
+    * leaves the date-group fields unset (`date` null, counts 0). */
+  private final case class Ranks(id: Long, source: String, er0: Long, rn: Long, nsrc: Long,
+      srnk: Long, scnt: Long, date: Any, rn2: Long, dgs: Long, drnk: Long, dcnt: Long)
+
+  /** The sidecar rows matching any of `keys` (each a conjunction of
+    * column equalities): ONE disjunctive filter the scan can push down,
+    * one collect. No job for no keys. */
+  private def readRanks(rankTbl: DataFrame, keys: Seq[Column]): Seq[Ranks] =
+    if (keys.isEmpty) Nil
+    else {
+      val dated = rankTbl.columns.contains("date")
+      val cs = Seq("id", "source", "er0", "rn", "nsrc", "srnk", "scnt") ++
+        (if (dated) Seq("date", "rn2", "dgs", "drnk", "dcnt") else Nil)
+      rankTbl.filter(keys.reduce(_ || _)).select(cs.map(col): _*).collect().toSeq.map { r =>
+        def l(i: Int) = r.getLong(i)
+        if (dated) Ranks(l(0), r.getString(1), l(2), l(3), l(4), l(5), l(6), r.get(7), l(8),
+          l(9), l(10), l(11))
+        else Ranks(l(0), r.getString(1), l(2), l(3), l(4), l(5), l(6), null, 0L, 0L, 0L, 0L)
+      }
+    }
+
+  /** A scheduled slot with its picked record. */
+  private final case class SlotRec(draw: Long, epoch: Long, recipe: String, id: Long,
+      source: String)
+
+  /** Record pick: each slot's record off its epoch's interleave, in draw
+    * order, plus the sidecar rows read on the way (by id). Epoch 0 — the
+    * overwhelming share of a long pool's serving life — is ONE keyed read
+    * of the staged sidecar: [[Mixing.epochTargets]] maps each position to
+    * its (source, er0) key on the driver, and the rows come back with
+    * every rank column the negative dispatch reads. Later epochs run
+    * [[Mixing.epochPick]]'s per-source rank window, one collect each.
+    * Positions join their slots on the driver. */
+  private def slotRecords(pool: DataFrame, slots: Seq[(Long, Long, Long, String)],
+      srcCounts: Seq[(String, Long)], rankTbl: DataFrame): (Seq[SlotRec], Map[Long, Ranks]) = {
+    val read = Seq.newBuilder[Ranks]
+    val recs = slots.groupBy(_._2).toSeq.sortBy(_._1).flatMap { case (ep, ss) =>
+      val positions = ss.map(_._3)
+      val at: Map[Long, (Long, String)] =
+        if (ep == 0) {
+          val targets = Mixing.epochTargets(srcCounts, 0L, positions)
+          val rows = readRanks(rankTbl, targets.map { case (src, r, _) =>
+            col("source") === src && col("er0") === r })
+          read ++= rows
+          val byKey = rows.map(k => (k.source, k.er0) -> k).toMap
+          targets.flatMap { case (src, r, p) => byKey.get((src, r)).map(k => p -> (k.id, k.source)) }
+            .toMap
+        } else Mixing.epochPick(pool, ep, positions, Some(srcCounts)).collect()
+          .map(r => r.getLong(0) -> (r.getLong(1), r.getString(2))).toMap
+      ss.flatMap { case (draw, _, pos, recipe) =>
+        at.get(pos).map { case (id, src) => SlotRec(draw, ep, recipe, id, src) }
+      }
+    }
+    (recs.sortBy(_.draw), read.result().map(k => k.id -> k).toMap)
   }
 
   /** The seeded fallback source order as (source, srnk, nsrc) — the ONE
     * derivation both the sidecar build ([[rankSidecar]]'s srnk/scnt
     * columns, persisted at refresh) and the serving-time fallback
-    * resolution (strategyPick's exact-key probe) must share: a staged
+    * resolution (the negative dispatch's fallback target) must share: a staged
     * deployment resolves REFRESH-time srnk values through SERVING-time
     * order, so the two copies drifting apart would silently retarget
     * every fallback draw. */
@@ -507,7 +574,7 @@ object Sampler {
       }
     // seeded fallback source order, folded in per-row (replaces the sG
     // side table) — a driver-side sort of the already-collected source
-    // stats, shipped as a LocalRelation so the broadcast costs no job
+    // stats, shipped as a #sources-row LocalRelation
     val sOrd = fallbackOrder(srcCounts)
       .map { case (src, srnk, _) => (src, srnk, srcCounts.size.toLong) }
       .toDF("source", "srnk", "scnt")
@@ -591,7 +658,15 @@ object Sampler {
   /** The shared composed-triplet stream, as driver rows: returns (schema,
     * core, kept, deduped, state) — `core` every drawn triplet in draw
     * order, `kept` the identical-text rejection survivors, `deduped` the
-    * seen-set survivors of those the entry points pad. */
+    * seen-set survivors of those the entry points pad.
+    *
+    * Every input to a batch's picks is bounded by the batch, so a batch
+    * runs a few keyed reads and makes every pick in plain Scala: the slot
+    * records (one sidecar read at epoch 0, which also brings the
+    * anchors' rank rows), the a/p chunk rows, the negative targets (plus
+    * the rank rows of later-epoch anchors), the n chunk rows not already
+    * in hand, and one scoring join when a recipe uses the BM25 backend. Each phase's jobs
+    * carry its name as their description ([[graft.Profile.phase]]). */
   private def composed(spark: SparkSession, chunks: DataFrame, pool: DataFrame,
       recipes: Seq[TripletRecipe], st: SamplerState, batch: Int,
       decoration: Option[(graft.functions.KvpPrefixSampler, Int)],
@@ -600,470 +675,246 @@ object Sampler {
       srcStats: Option[Seq[(String, Long)]],
       neighborIndex: Map[Int, DataFrame])
       : (StructType, Seq[Row], Seq[Row], Seq[Row], SamplerState) = {
-    import spark.implicits._
     // the pool-rank sidecar, staged once per pool refresh
-    // ([[PoolRankIndex]]): the strategy×tier lanes read it through a
-    // single keyed plan. Its `date` column marks a dated pool.
+    // ([[PoolRankIndex]]); its `date` column marks a dated pool
     val rankTbl = stagedRanks(rankIndex)
     require(bm25Index.nonEmpty || !recipes.exists(_.negativeBackend == NegativeBackend.Bm25),
       "BM25-backend recipes need a staged Bm25PoolIndex (bm25Index)")
     requireNeighbors(recipes.flatMap(r =>
       Seq(r.anchor, r.positive, r.negativeSelector).map(temporalDays)), neighborIndex)
     val byName = recipes.map(r => r.name -> r).toMap
-    def localize(df: DataFrame): DataFrame = localRelation(spark, df) // see localRelation
     val (srcCounts, slots, st2) =
       schedule(st, batch, srcStats, ep => Recipes.ticketOrder(recipes, st.seed, ep))
-
     val hasDate = rankTbl.columns.contains("date")
+    if (slots.exists(s => byName(s._4).negative == NegativeStrategy.WrongPublicationDate))
+      require(hasDate,
+        "WrongPublicationDate recipes need a `date` column in the pool the rank index was built from")
 
-    // ---- record pick: per-epoch interleave joined on position ----
-    // Each composed frame from here on is BATCH-sized and feeds several
-    // downstream consumers; localize() materializes it as a driver-local
-    // relation so every subsequent job plans over a tiny leaf instead of
-    // replaying (and re-optimizing, and re-describing to the SQL listener)
-    // the whole upstream tree. Without the cuts the final plan duplicates the pick
-    // subtree ~6x and a 6-batch golden run spends ~100 s/batch just
-    // BUILDING plan strings (ExplainUtils on every AQE stage update).
-    // Values are unaffected — every column is a pure (seed, epoch, draw)
-    // function; only lineage is cut.
-    val slotRec = slotRecords(spark, pool, slots, srcCounts, rankTbl,
-      Some(name => byName(name).negative.reason))
+    val (recs, inHand) = Profile.phase(spark, "sampler.slot_records") {
+      slotRecords(pool, slots, srcCounts, rankTbl)
+    }
+    val recipeOf = slots.map(s => s._1 -> byName(s._4)).toMap
+    def dayOf(sel: TripletRecipe => Selector)(name: String) = temporalDays(sel(byName(name)))
+    def temporalNeed(sel: TripletRecipe => Selector, rs: Seq[(Long, String, Long)]) =
+      rs.flatMap { case (_, name, id) => dayOf(sel)(name).map(_ -> id) }
 
-    // ---- anchor chunk-pick metadata (driver-side; the bm25 lane's query
-    // text is the anchor pick) ----
-    val slotMeta = slots.map { case (draw, _, _, name) =>
-      val (am, aa) = selectorDesc(byName(name).anchor)
-      (draw, am, aa)
-    }.toDF("draw", "a_mode", "a_arg")
-    // ---- chunk-source records per slot ([[chunkSources]]: temporal
-    // selectors swap in the staged as-of neighbor) ----
-    def chunkRecordsPlan(sel: TripletRecipe => Selector, base: DataFrame)
-        : (Boolean, DataFrame) =
-      chunkSources(recipes.map(r => r.name -> temporalDays(sel(r))), base, neighborIndex)
-    def chunkRecords(sel: TripletRecipe => Selector, base: DataFrame): DataFrame = {
-      val (temporal, plan) = chunkRecordsPlan(sel, base)
-      if (temporal) localize(plan) else plan
+    // ---- anchor + positive picks: chunk-source records (temporal
+    // neighbor swap, one read per offset for both slots), ONE keyed read
+    // of their chunk rows, then the `sel:a:`/`sel:p:` picks ----
+    val slotIds = recs.map(r => (r.draw, r.recipe, r.id))
+    val (apRows, aBy, pBy) = Profile.phase(spark, "sampler.ap_pick") {
+      val nb = neighborsOf(temporalNeed(_.anchor, slotIds) ++ temporalNeed(_.positive, slotIds),
+        neighborIndex)
+      val aSrc = chunkSources(slotIds, dayOf(_.anchor), nb)
+      val pSrc = chunkSources(slotIds, dayOf(_.positive), nb)
+      val rows = chunkRows(chunks, (aSrc ++ pSrc).map(_._2).distinct)
+      (rows, slotPicks(spark, decoration, "a", rows, aSrc, d => recipeOf(d).anchor),
+        slotPicks(spark, decoration, "p", rows, pSrc, d => recipeOf(d).positive))
     }
 
-    // ---- negative record: fused strategy × tier dispatch over the
-    // staged rank sidecar ----
-    def drawKey(prefix: String) = Determinism.portableHash(
-      concat(lit(s"$prefix:${st.seed}:"), col("draw").cast("string"), lit(":"),
-        col("record_id").cast("string")))
-    // same strings as drawKey, with the stream prefix as a per-row COLUMN
-    def drawKeyOf(stream: Column) = Determinism.portableHash(
-      concat(stream, lit(s":${st.seed}:"), col("draw").cast("string"), lit(":"),
-        col("record_id").cast("string")))
-    // `lane` (the resolved tier: src/sd/wd/fb, or bm25) rides along for
-    // the extended-metrics report (reference bm25_backend.rs:156-172) —
-    // a pure relabeling of rows that already existed, so every digest
-    // and oracle that selects named columns is untouched
-    val negOut = Seq("draw", "epoch", "recipe", "reason", "record_id", "nid").map(col) :+
-      col("tier").as("lane")
-    // the fallback lane's (srnk → source, count) resolution table — the
-    // SAME derivation rankSidecar folds into the persisted sidecar
-    // ([[fallbackOrder]]), built once per batch (strategyPick can run
-    // twice — Default and BM25 backends) as a #sources-row LocalRelation
-    lazy val fbOrd = {
-      import spark.implicits._
-      fallbackOrder(srcCounts)
-        .map { case (src, srnk, n) => (srnk, src, n) }
-        .toDF("t_srnk", "t_source", "t_nsrc")
-    }
+    // ---- negative record: the strategy × tier dispatch on the driver
+    // (reference pool staging, src/sampler/mod.rs:994-1151) ----
     val waR = NegativeStrategy.WrongArticle.reason
     val qaR = NegativeStrategy.QuestionAnswerMismatch.reason
     val wdR = NegativeStrategy.WrongPublicationDate.reason
-    /** All DefaultBackend strategy×tier lanes as ONE keyed plan
-      * (reference pool staging, src/sampler/mod.rs:994-1151): each anchor
-      * row picks its tier —
-      *   WrongArticle → same-source same-DATE skip-the-anchor (`nega`,
-      *     dated pools with a ≥2 date group) → same-source (`neg`) →
-      *     fallback;
-      *   QuestionAnswerMismatch → same-source (`negq`) → fallback;
-      *   WrongPublicationDate → other-date-group two-level
-      *     (`negd`/`negr`) → fallback;
-      *   fallback = cross-source same-split two-level (`negs`/`negc`),
-      *     recipe suffixed `_fallback_same_split`; slots whose pool holds
-      *     no other source drop (src/sampler/mod.rs:1097-1151, 1391-1395)
-      * — then each tier resolves through ONE direct keyed lookup into the
-      * enriched sidecar: src by (source, rn), sd by (source, date, rn2),
-      * wd by (source, drnk) + the in-group rank filter (the filter reads
-      * the TARGET row's own group size — the match is bounded by one
-      * date-group, and the group sizes are not known driver-side), fb by
-      * the exact (source, rn) key (the srnk→source order and per-source
-      * counts ARE driver-side, so the target rank resolves before the
-      * sidecar join — one matched row per draw). Hash
-      * streams, tier predicates, and delivered values are bit-identical
-      * to the per-lane dispatch (golden matrix + q57/q58/q59/q66 oracles
-      * pin this). */
-    def strategyPick(anchors: DataFrame, strategies: Seq[NegativeStrategy]): DataFrame = {
-      if (strategies.contains(NegativeStrategy.WrongPublicationDate))
-        require(hasDate,
-          "WrongPublicationDate recipes need a `date` column in the pool the rank index was built from")
-      val metaCols = Seq(col("id").as("record_id"), col("rn").as("a_rn"), col("nsrc"),
-        col("srnk"), col("scnt")) ++
-        (if (hasDate) Seq(col("date").as("a_date"), col("rn2").as("a_rn2"), col("dgs"),
-          col("drnk").as("a_drnk"), col("dcnt"))
-         else Nil)
-      val m = anchors.join(rankTbl.select(metaCols: _*), Seq("record_id"))
-      val waTier =
-        if (hasDate)
-          when(col("dgs") >= 2, lit("sd"))
-            .when(col("nsrc") >= 2, lit("src")).otherwise(lit("fb"))
-        else when(col("nsrc") >= 2, lit("src")).otherwise(lit("fb"))
-      val tierCol = {
-        val base = when(col("reason") === waR, waTier)
-          .when(col("reason") === qaR,
-            when(col("nsrc") >= 2, lit("src")).otherwise(lit("fb")))
-        if (hasDate)
-          base.when(col("reason") === wdR,
-            when(col("dcnt") >= 2, lit("wd")).otherwise(lit("fb")))
-        else base
-      }
-      val t0 = m.withColumn("tier", tierCol)
-        .filter(col("tier") =!= "fb" || col("scnt") >= 2)
-      val t1 =
-        if (!hasDate) t0
-        else t0
-          .withColumn("p0sd", pmod(drawKey("nega"), greatest(col("dgs") - 1, lit(1L))))
-          .withColumn("n_rn2",
-            when(col("p0sd") >= col("a_rn2"), col("p0sd") + 1).otherwise(col("p0sd")))
-          .withColumn("d0", pmod(drawKey("negd"), greatest(col("dcnt") - 1, lit(1L))))
-          .withColumn("t_drnk", when(col("tier") === "wd",
-            when(col("d0") >= col("a_drnk"), col("d0") + 1).otherwise(col("d0"))))
-      val t = t1
-        .withColumn("p0s", pmod(
-          drawKeyOf(when(col("reason") === qaR, lit("negq")).otherwise(lit("neg"))),
-          greatest(col("nsrc") - 1, lit(1L))))
-        .withColumn("n_rn",
-          when(col("p0s") >= col("a_rn"), col("p0s") + 1).otherwise(col("p0s")))
-        .withColumn("s0", pmod(drawKey("negs"), greatest(col("scnt") - 1, lit(1L))))
-        .withColumn("t_srnk", when(col("tier") === "fb",
-          when(col("s0") >= col("srnk"), col("s0") + 1).otherwise(col("s0"))))
-        .withColumn("recipe", when(col("tier") === "fb",
-          concat(col("recipe"), lit(Recipes.FallbackSuffix))).otherwise(col("recipe")))
-      // per-tier resolution lookups (each a broadcast-side batch frame
-      // against the checkpointed sidecar)
-      val srcKeyed = t.filter(col("tier") === "src")
-        .join(rankTbl.select(col("source"), col("rn").as("n_rn"), col("id").as("nid")),
-          Seq("source", "n_rn"))
-        .select(negOut: _*)
-      // fallback: the target source is the t_srnk-ranked one; the record
-      // inside it is `pmod(negc-key, ccnt)`. Both the srnk→source order
-      // and the per-source counts are pure functions of `srcCounts`
-      // (exactly the values rankSidecar folds into the sidecar), so the
-      // target's (source, rn) key resolves against a #sources-row
-      // broadcast BEFORE the sidecar join — one matched row per fb draw,
-      // not one per record of the target source (which at corpus scale
-      // made the fb lane's join output grow with source size).
-      val fbKeyed = t.filter(col("tier") === "fb")
-        .join(broadcast(fbOrd), Seq("t_srnk"))
-        .withColumn("t_rn", pmod(drawKey("negc"), col("t_nsrc")))
-        .join(rankTbl.select(col("source").as("t_source"), col("rn").as("t_rn"),
-          col("id").as("nid")), Seq("t_source", "t_rn"))
-        .select(negOut: _*)
-      val srcSide = srcKeyed.unionByName(fbKeyed)
-      if (!hasDate) srcSide
-      else {
-        val sdKeyed = t.filter(col("tier") === "sd")
-          .join(rankTbl.select(col("source"), col("date").as("a_date"),
-            col("rn2").as("n_rn2"), col("id").as("nid")),
-            Seq("source", "a_date", "n_rn2"))
-          .select(negOut: _*)
-        // wrong-date: target group by (source, drnk); the record inside it
-        // is `pmod(negr-key, dct)` where dct (== the target group's dgs)
-        // is read off the target rows
-        val wdKeyed = t.filter(col("tier") === "wd")
-          .join(rankTbl.select(col("source"), col("drnk").as("t_drnk"),
-            col("rn2").as("t_rn2"), col("dgs").as("t_dgs"), col("id").as("nid")),
-            Seq("source", "t_drnk"))
-          .filter(col("t_rn2") === pmod(drawKey("negr"), col("t_dgs")))
-          .select(negOut: _*)
-        srcSide.unionByName(sdKeyed).unionByName(wdKeyed)
-      }
-    }
-    def strategiesOf(backend: NegativeBackend): Seq[NegativeStrategy] =
-      slots.map(s => byName(s._4)).filter(_.negativeBackend == backend)
-        .map(_.negative).distinct
-    val bmNames = recipes.filter(_.negativeBackend == NegativeBackend.Bm25).map(_.name)
-
-    // ---- BM25 scoring sidecar (slot-INDEPENDENT): the staged
-    // weighted-term table of the [[Bm25PoolIndex]] — per-(source, term,
-    // cand) e6 term scores, the whole df/idf/tf-part pass run once per
-    // pool refresh — filtered to the batch's anchor sources. No checkpoint
-    // and no background force: the staged table is a flat leaf already
-    // (parquet, or an in-memory staging), the scoring join streams it with
-    // the source filter pruning row groups; a checkpoint would only
-    // re-materialize a pool-scale table into the block store per batch
-    // (A/B'd wall-neutral locally, strictly worse at scale).
-    val wtermPre: Option[DataFrame] = if (bmNames.isEmpty) None else Some {
-      // batch-bounded source list, deduped on the driver (slotRec is a
-      // LocalRelation — no job)
-      val srcList = slotRec.filter(col("recipe").isin(bmNames: _*))
-        .select(col("source")).collect().map(_.getString(0)).distinct.toSeq
-      bm25Index.get.wterm.filter(col("source").isin(srcList: _*))
-    }
-
-    /** Bm25Backend lanes (reference: bm25_backend.rs:120-174): re-rank the
-      * strategy pool by the BM25 score of the anchor's SELECTED chunk text
-      * against each candidate's `btoks`, rotate through the top-3 by the
-      * (seed, draw, anchor) hash stream — the stateless twin of the
-      * reference's per-(anchor, split) cursor — and fall back to the
-      * DefaultBackend pick for slots whose scored intersection is empty.
-      *
-      * Scale shape: the staged weighted-term table is filtered to the
-      * BATCH's anchor sources and query terms. The anchor⋈candidate product passes
-      * through ONE (source, term) join (the q85 lane's shape). The
-      * anchor-text pick re-runs the final a-slot's pure pick (stream
-      * `sel:a:` — bit-identical text) over the a/p chain's ALREADY
-      * MATERIALIZED batch-restricted chunk checkpoint, so the re-pick
-      * costs one narrow window over a tiny leaf, not a second chunk
-      * derivation. */
-    def bm25Lanes(qtermsPre: (DataFrame, Seq[String])): DataFrame = {
-      val bmSlots = slotRec.filter(col("recipe").isin(bmNames: _*))
-      val (qterms, termList) = qtermsPre
-      val wterm = wtermPre.get.filter(col("term").isin(termList: _*))
-      val scoredAll = broadcast(
-          bmSlots.select(col("draw"), col("record_id"), col("source"), col("reason"))
-            .join(qterms, "draw"))
-        .join(wterm, Seq("source", "term"))
-        .filter(col("cand") =!= col("record_id"))
-      // wrong-date slots additionally require a different date group —
-      // the strategy pool predicate applies BEFORE the re-rank
-      val wdReason = NegativeStrategy.WrongPublicationDate.reason
-      val scoredF =
-        if (!strategiesOf(NegativeBackend.Bm25).contains(NegativeStrategy.WrongPublicationDate))
-          scoredAll
-        else scoredAll
-          .join(rankTbl.select(col("id").as("record_id"), col("date").as("a_date")), "record_id")
-          .join(rankTbl.select(col("id").as("cand"), col("date").as("c_date")), "cand")
-          .filter(col("reason") =!= wdReason || col("a_date") =!= col("c_date"))
-      val scored = scoredF.groupBy(col("draw"), col("record_id"), col("cand"))
-        .agg(sum(col("term_e6")).as("score_e6"))
-      // top-3 + rotation as ONE aggregation — ascending struct sort on
-      // (-score, cand) ≡ the former (score desc, cand) rank window, the
-      // rotation modulus is the array size ≡ the former count window, and
-      // an empty intersection simply produces no row. Replaces two window
-      // exchanges + a filter with a single shuffle on the already-grouped
-      // keys.
-      val picked = scored.groupBy(col("draw"), col("record_id"))
-        .agg(slice(array_sort(collect_list(
-          struct((-col("score_e6")).as("ns"), col("cand")))), 1, 3).as("t3"))
-        .select(col("draw"), element_at(col("t3"),
-          (pmod(drawKey("negb"), size(col("t3")).cast("long")) + 1).cast("int"))
-          .getField("cand").as("nid"))
-      // BM25 hit lane and the empty-intersection default fallback as ONE
-      // plan: both left-join the LocalRelation slot frame, so the scoring
-      // chain and the keyed default pick execute CONCURRENTLY inside the
-      // single negRec job (formerly: materialize picked → anti-join →
-      // strategyPick(rest), a sequential second job) and the scoring
-      // subtree is referenced exactly once — no mid-lane materialization.
-      // strategyPick is per-row pure (keyed sidecar lookups), so running
-      // it over hit slots too and discarding those rows changes no value.
-      val dflt = strategyPick(bmSlots, strategiesOf(NegativeBackend.Bm25))
-        .select(col("draw"), col("recipe").as("d_recipe"), col("nid").as("d_nid"),
-          col("lane").as("d_lane"))
-      bmSlots
-        .join(picked.withColumnRenamed("nid", "b_nid"), Seq("draw"), "left")
-        .join(dflt, Seq("draw"), "left")
-        .filter(col("b_nid").isNotNull || col("d_nid").isNotNull)
-        .select(col("draw"), col("epoch"),
-          when(col("b_nid").isNotNull, col("recipe")).otherwise(col("d_recipe")).as("recipe"),
-          col("reason"), col("record_id"),
-          coalesce(col("b_nid"), col("d_nid")).as("nid"),
-          when(col("b_nid").isNotNull, lit("bm25")).otherwise(col("d_lane")).as("lane"))
-    }
-
-    // the delivered text hash: raw chunk text, or the decorated text when a
-    // KVP sampler is configured (decoration is a pure (record, draw)
-    // function, so the composed stream stays batch/partition invariant)
-    val slotText: Column = decoration match {
-      case None => col("wtext")
-      case Some((smp, maxTok)) =>
-        Decoration.decorateColumn(smp,
-          concat(lit("dec:"), col("slot"), lit(":"), col("record_id").cast("string"),
-            lit(":"), col("draw").cast("string")),
-          split(col("wtext"), " "), maxTok).getField("text")
-    }
-
-    // ---- the ENTIRE anchor + positive pick chain, run CONCURRENTLY with
-    // the negative dispatch below: chunk-source records (temporal neighbor
-    // swap) → batch-restricted chunk checkpoint → ONE fused a/p window
-    // pick → localized per-draw pivot. The a/p lanes read only slotRec
-    // (materialized) and the staged neighbor maps, never the negative
-    // lane, so a second thread overlaps their neighbor reads AND the chunk
-    // derivation/window stages with the dispatch's job instead of
-    // serializing after it. Only the n-slot pick has to wait for the
-    // negative dispatch — it runs on the main thread below over its own
-    // (negative-record) restriction. Values are untouched: the pick
-    // streams (`sel:a:`/`sel:p:`) are pure (draw, record) functions and
-    // the split pivot aggregates the same per-slot rows the former fused
-    // three-slot pivot did.
-    val apMelt = slots.map { case (draw, _, _, name) =>
-      val r = byName(name)
-      val (am, aa) = selectorDesc(r.anchor)
-      val (pm, pa) = selectorDesc(r.positive)
-      (draw, am, aa, pm, pa)
-    }.flatMap { case (draw, am, aa, pm, pa) =>
-      Seq((draw, "a", am, aa), (draw, "p", pm, pa))
-    }.toDF("draw", "slot", "mode", "arg")
-    // Two futures on ONE thread: `apPrepTask` (chunk-source records +
-    // the batch-restricted chunk checkpoint plan) completes without any
-    // job for non-temporal recipe sets — so the bm25 scoring lane, which
-    // needs only the PREP (anchor records + chunksAP), no longer waits
-    // behind the a/p window-pick collect; that collect (`apPicksTask`)
-    // overlaps the negative dispatch's job instead.
-    val apPrepTask = new java.util.concurrent.FutureTask(() => {
-      val (aTmp, aPlan) = chunkRecordsPlan(_.anchor, slotRec)
-      val (pTmp, pPlan) = chunkRecordsPlan(_.positive, slotRec)
-      // ONE collect covers both slots when any lane is temporal (the two
-      // neighbor-join plans union and materialize together); non-temporal
-      // sets are pure LocalRelation projections — no job
-      val (aRecs, pRecs) =
-        if (!aTmp && !pTmp) (aPlan, pPlan)
-        else {
-          val ap = localize(
-            aPlan.withColumn("sl", lit("a")).unionByName(pPlan.withColumn("sl", lit("p"))))
-          (ap.filter(col("sl") === "a").drop("sl"), ap.filter(col("sl") === "p").drop("sl"))
+    // the fallback lane's srnk → (source, count) resolution — the SAME
+    // derivation rankSidecar folds into the persisted sidecar
+    val fbOrd = fallbackOrder(srcCounts).map { case (src, srnk, n) => srnk -> (src, n) }.toMap
+    final case class Neg(draw: Long, epoch: Long, recipe: String, reason: String,
+        recordId: Long, nid: Long, lane: String)
+    val bmSlots = recs.filter(r => recipeOf(r.draw).negativeBackend == NegativeBackend.Bm25)
+    val negRec: Seq[Neg] = Profile.phase(spark, "sampler.negatives") {
+      val missing = recs.map(_.id).distinct.filterNot(inHand.contains)
+      val ranks = inHand ++ readRanks(rankTbl,
+        if (missing.isEmpty) Nil else Seq(col("id").isin(missing: _*))).map(k => k.id -> k)
+      /* Each anchor picks its tier —
+       *   WrongArticle → same-source same-DATE skip-the-anchor (`nega`,
+       *     dated pools with a ≥2 date group) → same-source (`neg`) →
+       *     fallback;
+       *   QuestionAnswerMismatch → same-source (`negq`) → fallback;
+       *   WrongPublicationDate → other-date-group two-level
+       *     (`negd`/`negr`) → fallback;
+       *   fallback = cross-source same-split two-level (`negs`/`negc`),
+       *     recipe suffixed `_fallback_same_split`; slots whose pool holds
+       *     no other source drop (src/sampler/mod.rs:1097-1151, 1391-1395)
+       * — and its target's sidecar key: src and fb by (source, rn), sd by
+       * (source, date, rn2), wd by (source, drnk) plus the in-group rank
+       * `pmod(negr-key, dgs)` read off the target row's own group size.
+       * The fallback's srnk → source order and per-source counts are
+       * driver-side, so its target rank resolves before the read. */
+      val dispatched = recs.flatMap { r =>
+        ranks.get(r.id).flatMap { m =>
+          def key(stream: String) = Determinism.jvmHash(s"$stream:${st.seed}:${r.draw}:${r.id}")
+          def skip(h: Long, n: Long, self: Long) = {
+            val p = h % math.max(n - 1, 1L)
+            if (p >= self) p + 1 else p
+          }
+          val reason = recipeOf(r.draw).negative.reason
+          val tier =
+            if (reason == waR) {
+              if (m.dgs >= 2) "sd" else if (m.nsrc >= 2) "src" else "fb"
+            } else if (reason == qaR) { if (m.nsrc >= 2) "src" else "fb" }
+            else if (m.dcnt >= 2) "wd" else "fb"
+          val target: Option[Target] = tier match {
+            case "sd" => Some(ByDate(r.source, m.date, skip(key("nega"), m.dgs, m.rn2)))
+            case "wd" => Some(ByGroup(r.source, skip(key("negd"), m.dcnt, m.drnk), key("negr")))
+            case "src" =>
+              Some(ByRn(r.source, skip(key(if (reason == qaR) "negq" else "neg"), m.nsrc, m.rn)))
+            case _ if m.scnt < 2 => None
+            case _ => fbOrd.get(skip(key("negs"), m.scnt, m.srnk)).map { case (src, n) =>
+              ByRn(src, key("negc") % n) }
+          }
+          target.map(t => (r, reason, tier, t))
         }
-      // both rec frames are LocalRelations, so these collects run
-      // driver-side without scheduling a job; dedupe in Scala rather than
-      // a distinct() whose Aggregate would schedule one
-      val ids = (aRecs.select(col("record_id")).collect() ++
-          pRecs.select(col("record_id")).collect())
-        .map(_.getLong(0)).distinct.toSeq
-      // batch id restriction as an isin PREDICATE, not a join (pushes
-      // below the chunk table's window/explode derivation — see the
-      // n-lane comment below). Lazy: an eager checkpoint here was A/B'd
-      // WORSE — it stalls the bm25 lane (which needs only this PLAN)
-      // behind the materialization job; the duplicate-derivation race
-      // between the a/p pick job and the scoring job is bounded by the
-      // block store's per-partition dedupe.
-      val chunksAP = chunks.filter(col("record_id").isin(ids: _*))
-        .localCheckpoint(eager = false)
-      (aRecs, pRecs, chunksAP)
-    })
-    val apPicksTask = new java.util.concurrent.FutureTask(() => {
-      val (aRecs, pRecs, chunksAP) = apPrepTask.get()
-      val apRows = aRecs.withColumn("slot", lit("a"))
-        .unionByName(pRecs.withColumn("slot", lit("p")))
-      val sel = Recipes.selectChunksBatchSlots(chunksAP,
-          apRows.join(broadcast(apMelt), Seq("draw", "slot")))
-        .select(col("slot"), col("draw"),
-          col("window_index").cast("long").as("widx"),
-          Determinism.portableHash(slotText).as("thash"))
-      localize(sel.groupBy(col("draw")).agg(
-        max(when(col("slot") === "a", col("widx"))).as("a_widx"),
-        max(when(col("slot") === "a", col("thash"))).as("a_hash"),
-        max(when(col("slot") === "p", col("widx"))).as("p_widx"),
-        max(when(col("slot") === "p", col("thash"))).as("p_hash")))
-    })
-    // qterms for the bm25 scoring lane, on the SAME background thread
-    // right after the prep (and BEFORE the a/p pick collect — the
-    // negative dispatch needs qterms on its critical path, the core
-    // join needs apPicks only later): one narrow window over the
-    // batch-restricted chunk leaf, materialized as a LocalRelation. The
-    // batch's DISTINCT TERM SET then becomes an isin PREDICATE on the
-    // weighted-term side, which pushes into the wterm parquet scan
-    // (sorted by (source, term), so row groups prune) and shrinks the
-    // scoring join's input from every term the batch's sources ever used
-    // to the ~hundreds the batch actually asks about. This is the reference's per-term
-    // postings probe (bm25_backend.rs:120-174 probes its HashMap per
-    // query term) re-expressed as scan pruning; term weights are
-    // per-(source,term) constants fixed at build time, so
-    // dropping never-joined terms cannot move a score. Formerly this
-    // collect ran serially inside the negative dispatch; moving it here
-    // overlaps it with the default dispatch on the main thread — values
-    // untouched (the qterms frame is a pure function of
-    // the prep outputs).
-    val qtermsTask = new java.util.concurrent.FutureTask(() => {
-      val (aRecsAll, _, chunksAP) = apPrepTask.get()
-      val bmSlots = slotRec.filter(col("recipe").isin(bmNames: _*))
-      val bmARecs = aRecsAll.join(broadcast(bmSlots.select(col("draw"))), Seq("draw"))
-      val bmDraws = bmARecs.withColumn("slot", lit("a"))
-        .join(broadcast(slotMeta.select(col("draw"),
-          col("a_mode").as("mode"), col("a_arg").as("arg"))), Seq("draw"))
-      val qterms = localize(Recipes.selectChunksBatchSlots(chunksAP, bmDraws)
-        .select(col("draw"), explode(array_distinct(
-          graft.functions.TextFunctions.tokens(col("wtext")))).as("term")))
-      val termList = qterms.select(col("term")).collect()
-        .map(_.getString(0)).distinct.toSeq
-      (qterms, termList)
-    })
-    locally {
-      val t = new Thread(() => {
-        apPrepTask.run()
-        if (bmNames.nonEmpty) qtermsTask.run()
-        apPicksTask.run()
-      }, "graft-ap-pick-chain")
-      t.setDaemon(true); t.start()
-    }
-
-    val negRec = {
-      val dflt = strategyPick(
-        if (bmNames.isEmpty) slotRec else slotRec.filter(!col("recipe").isin(bmNames: _*)),
-        strategiesOf(NegativeBackend.Default))
-      localize(if (bmNames.isEmpty) dflt else dflt.unionByName(bm25Lanes(qtermsTask.get())))
-    }
-
-    // ---- n-slot pick: the only selector window that has to FOLLOW the
-    // negative dispatch (its chunk-source records are the picked
-    // negatives). Same shape as the a/p chain above: isin PREDICATE
-    // restriction (a broadcast join sits above the chunk table's
-    // window/explode derivation and cannot push through the Generate, so
-    // every batch would re-chunk the whole corpus; the id list is
-    // batch-bounded and as a filter it pushes below the derivation to the
-    // record scan — per-batch chunking cost ∝ batch size, not corpus
-    // size), then the fused window pick (stream `sel:n:`).
-    val nRecs = chunkRecords(_.negativeSelector,
-      negRec.select(col("draw"), col("recipe"), col("nid").as("record_id")))
-    val nIds = nRecs.select(col("record_id")).collect()
-      .map(_.getLong(0)).distinct.toSeq
-    val chunksN = chunks.filter(col("record_id").isin(nIds: _*)).localCheckpoint(eager = false)
-    val nMelt = slots.map { case (draw, _, _, name) =>
-      val (nm, na) = selectorDesc(byName(name).negativeSelector)
-      (draw, "n", nm, na)
-    }.toDF("draw", "slot", "mode", "arg")
-    // `draw` is unique per slot, so after the record restriction it alone
-    // keys the pick — and for temporal slots the chunk-source record (the
-    // neighbor) is NOT the slot's scheduled record, so the core join below
-    // is on draw, never on record_id. ≤1 pick row survives per draw, so
-    // the projection needs no pivot.
-    val nPick = Recipes.selectChunksBatchSlots(chunksN,
-        nRecs.withColumn("slot", lit("n")).join(broadcast(nMelt), Seq("draw", "slot")))
-      .select(col("draw"), Determinism.portableHash(slotText).as("n_hash"))
-
-    // ---- the batch tail, on the driver. The core join on draw: negRec
-    // and apPicks are LocalRelations (their collects run no job) and each
-    // joined frame holds ≤1 row per draw, so the joins are map lookups;
-    // the nPick collect is the tail's only job. A draw whose ANY slot
-    // found no eligible chunk drops from the core stream. nPick runs
-    // first, so its job overlaps an a/p pick still running.
-    val nBy = nPick.collect().map(r => r.getAs[Long]("draw") -> r).toMap
-    val apPicks = apPicksTask.get()
-    val apBy = apPicks.collect().map(r => r.getAs[Long]("draw") -> r).toMap
-    val parts = Seq(negRec.schema, apPicks.schema, nPick.schema)
-    // (frame, field) of each core column, `draw` from negRec
-    val at = Seq("draw", "epoch", "recipe", "record_id", "a_widx", "a_hash", "p_widx",
-        "p_hash", "nid", "n_hash", "reason", "lane").map { c =>
-      val f = parts.indexWhere(_.fieldNames.contains(c))
-      (f, parts(f).fieldIndex(c))
-    }
-    val schema = StructType(at.map { case (f, i) => parts(f)(i) })
-    val Seq(ia, ip, in) = Seq("a_hash", "p_hash", "n_hash").map(schema.fieldIndex)
-    val core = negRec.collect().toSeq.flatMap { neg =>
-      val draw = neg.getAs[Long]("draw")
-      for (ap <- apBy.get(draw); n <- nBy.get(draw)) yield {
-        val rs = Seq(neg, ap, n)
-        Row.fromSeq(at.map { case (f, i) => rs(f).get(i) })
       }
-    }.filter(r => !r.isNullAt(ia) && !r.isNullAt(ip) && !r.isNullAt(in))
-      .sortBy(_.getLong(0))
+      val targets = readRanks(rankTbl, dispatched.map(_._4).distinct.map(_.pred))
+      val dflt = dispatched.flatMap { case (r, reason, tier, t) =>
+        targets.find(t.hit).map { k =>
+          r.draw -> Neg(r.draw, r.epoch,
+            if (tier == "fb") r.recipe + Recipes.FallbackSuffix else r.recipe, reason, r.id,
+            k.id, tier)
+        }
+      }.toMap
+      val bm = bm25Picks(spark, bm25Index, rankTbl, bmSlots.map(r =>
+        (r, recipeOf(r.draw).negative.reason)), aBy, st.seed)
+      // a BM25 slot takes its scored pick, else its default-backend pick
+      recs.flatMap { r =>
+        bm.get(r.draw) match {
+          case Some(nid) => Some(Neg(r.draw, r.epoch, r.recipe,
+            recipeOf(r.draw).negative.reason, r.id, nid, "bm25"))
+          case None => dflt.get(r.draw)
+        }
+      }
+    }
+
+    // ---- n-slot pick: the one pick that has to FOLLOW the dispatch (its
+    // chunk-source records are the picked negatives); reads only the
+    // chunk rows not already in hand (stream `sel:n:`) ----
+    val nBy = Profile.phase(spark, "sampler.n_pick") {
+      val negIds = negRec.map(n => (n.draw, recipeOf(n.draw).name, n.nid))
+      val nSrc = chunkSources(negIds, dayOf(_.negativeSelector),
+        neighborsOf(temporalNeed(_.negativeSelector, negIds), neighborIndex))
+      val have = apRows.map(_.recordId).toSet
+      val rows = apRows ++ chunkRows(chunks, nSrc.map(_._2).distinct.filterNot(have))
+      slotPicks(spark, decoration, "n", rows, nSrc, d => recipeOf(d).negativeSelector)
+    }
+
+    // ---- the batch tail. The core join on draw: a draw whose ANY slot
+    // found no eligible chunk (or a null text) drops from the core
+    // stream. Nullability follows the inputs the ids come from. ----
+    val ridNull = slots.exists(_._2 == 0L) && nullable(rankTbl, "id") ||
+      slots.exists(_._2 > 0L) && nullable(pool, "id")
+    val schema = StructType(Seq(
+      StructField("draw", LongType, nullable = false),
+      StructField("epoch", LongType, nullable = false),
+      StructField("recipe", StringType),
+      StructField("record_id", LongType, ridNull),
+      StructField("a_widx", LongType), StructField("a_hash", LongType),
+      StructField("p_widx", LongType), StructField("p_hash", LongType),
+      StructField("nid", LongType, nullable(rankTbl, "id") ||
+        recipes.exists(_.negativeBackend == NegativeBackend.Bm25)),
+      StructField("n_hash", LongType), StructField("reason", StringType),
+      StructField("lane", StringType)))
+    def widx(c: Recipes.ChunkRow): Any = c.windowIndex.getOrElse(null)
+    val core = negRec.sortBy(_.draw).flatMap { n =>
+      for ((a, Some(ah)) <- aBy.get(n.draw); (p, Some(ph)) <- pBy.get(n.draw);
+           (_, Some(nh)) <- nBy.get(n.draw))
+        yield Row(n.draw, n.epoch, n.recipe, n.recordId, widx(a), ah, widx(p), ph, n.nid, nh,
+          n.reason, n.lane)
+    }
     // identical-text rejection, unless the recipe allows equal a/p texts
-    val allowSame = slots.map(s => s._1 -> byName(s._4).allowSameAnchorPositive).toMap
-    val kept = core.filter(r => allowSame(r.getLong(0)) || r.get(ia) != r.get(ip))
+    val ia = schema.fieldIndex("a_hash")
+    val ip = schema.fieldIndex("p_hash")
+    val kept = core.filter(r => recipeOf(r.getLong(0)).allowSameAnchorPositive ||
+      r.get(ia) != r.get(ip))
     val deduped = seenFirst(kept, schema, Seq("record_id", "a_widx", "p_widx", "nid"))
     (schema, core, kept, deduped, st2)
+  }
+
+  private def nullable(df: DataFrame, c: String): Boolean = df.schema(c).nullable
+
+  /** A negative's target row in the rank sidecar: `pred` selects it in
+    * the keyed read, `hit` finds it among the rows read. */
+  private sealed trait Target {
+    def pred: Column
+    def hit(k: Ranks): Boolean
+  }
+  /** src and fb tiers: (source, rn). */
+  private final case class ByRn(source: String, rn: Long) extends Target {
+    def pred: Column = col("source") === source && col("rn") === rn
+    def hit(k: Ranks): Boolean = k.source == source && k.rn == rn
+  }
+  /** sd tier: (source, date, rn2); a null date matches nothing. */
+  private final case class ByDate(source: String, date: Any, rn2: Long) extends Target {
+    def pred: Column = col("source") === source && col("date") === lit(date) && col("rn2") === rn2
+    def hit(k: Ranks): Boolean =
+      date != null && k.source == source && k.date == date && k.rn2 == rn2
+  }
+  /** wd tier: the target date group (source, drnk), and the record at
+    * in-group rank `pmod(h, dgs)` of that group's own size. */
+  private final case class ByGroup(source: String, drnk: Long, h: Long) extends Target {
+    def pred: Column = col("source") === source && col("drnk") === drnk &&
+      col("rn2") === pmod(lit(h), col("dgs"))
+    def hit(k: Ranks): Boolean = k.source == source && k.drnk == drnk && k.rn2 == h % k.dgs
+  }
+
+  /** Bm25Backend picks (reference: bm25_backend.rs:120-174): re-rank each
+    * BM25 slot's strategy pool by the BM25 score of the anchor's SELECTED
+    * chunk text against each candidate's `btoks`, and rotate through the
+    * top-3 by the (seed, draw, anchor) hash stream `negb` — the stateless
+    * twin of the reference's per-(anchor, split) cursor. Slots whose
+    * scored intersection is empty get no pick (the caller falls back to
+    * the default dispatch).
+    *
+    * Scale shape: the query terms are the anchor picks' distinct tokens
+    * (tokenized on the driver, [[TextFunctions.distinctTokens]]), and the
+    * batch's distinct sources and terms become isin PREDICATES on the
+    * staged weighted-term table, which push into its (source,
+    * term)-sorted parquet scan — the
+    * reference's per-term postings probe re-expressed as scan pruning.
+    * The anchor × candidate product passes through ONE (source, term)
+    * join (the q85 lane's shape); one collect. */
+  private def bm25Picks(spark: SparkSession, bm25Index: Option[Bm25PoolIndex],
+      rankTbl: DataFrame, bmSlots: Seq[(SlotRec, String)],
+      aBy: Map[Long, (Recipes.ChunkRow, Option[Long])], seed: String): Map[Long, Long] = {
+    val qterms = bmSlots.flatMap { case (r, reason) =>
+      aBy.get(r.draw).toSeq.flatMap { case (c, _) => TextFunctions.distinctTokens(c.wtext) }
+        .map(t => Row(r.draw, r.id, r.source, reason, t))
+    }
+    if (qterms.isEmpty) return Map.empty
+    val anchors = localRows(spark, qterms, StructType(Seq(
+      StructField("draw", LongType, nullable = false),
+      StructField("record_id", LongType, nullable = false),
+      StructField("source", StringType), StructField("reason", StringType),
+      StructField("term", StringType))))
+    val wterm = bm25Index.get.wterm
+      .filter(col("source").isin(bmSlots.map(_._1.source).distinct: _*))
+      .filter(col("term").isin(qterms.map(_.getString(4)).distinct: _*))
+    val scoredAll = broadcast(anchors)
+      .join(wterm, Seq("source", "term"))
+      .filter(col("cand") =!= col("record_id"))
+    // wrong-date slots additionally require a different date group —
+    // the strategy pool predicate applies BEFORE the re-rank
+    val wdReason = NegativeStrategy.WrongPublicationDate.reason
+    val scoredF =
+      if (!bmSlots.exists(_._2 == wdReason)) scoredAll
+      else scoredAll
+        .join(rankTbl.select(col("id").as("record_id"), col("date").as("a_date")), "record_id")
+        .join(rankTbl.select(col("id").as("cand"), col("date").as("c_date")), "cand")
+        .filter(col("reason") =!= wdReason || col("a_date") =!= col("c_date"))
+    val scored = scoredF.groupBy(col("draw"), col("record_id"), col("cand"))
+      .agg(sum(col("term_e6")).as("score_e6"))
+    // top-3 + rotation as ONE aggregation — ascending struct sort on
+    // (-score, cand) ≡ the (score desc, cand) rank, the rotation modulus
+    // is the array size, and an empty intersection produces no row
+    scored.groupBy(col("draw"), col("record_id"))
+      .agg(slice(array_sort(collect_list(
+        struct((-col("score_e6")).as("ns"), col("cand")))), 1, 3).as("t3"))
+      .select(col("draw"), element_at(col("t3"),
+        (pmod(Determinism.portableHash(concat(lit(s"negb:$seed:"), col("draw").cast("string"),
+          lit(":"), col("record_id").cast("string"))), size(col("t3")).cast("long")) + 1)
+          .cast("int")).getField("cand").as("nid"))
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
   }
 
   /** The composed pair batch (reference `next_pair_batch`,
@@ -1130,49 +981,46 @@ object Sampler {
       rankIndex: Option[DataFrame],
       srcStats: Option[Seq[(String, Long)]],
       neighborIndex: Map[Int, DataFrame] = Map.empty): SamplerBatch = {
-    import spark.implicits._
-    val dayOf = textRecipes.map(r => r.name -> temporalDays(r.selector))
-    requireNeighbors(dayOf.map(_._2), neighborIndex)
+    val dayOf = textRecipes.map(r => r.name -> temporalDays(r.selector)).toMap
+    requireNeighbors(dayOf.values.toSeq, neighborIndex)
     val byName = textRecipes.map(r => r.name -> r).toMap
+    val rankTbl = stagedRanks(rankIndex)
     val (srcCounts, slots, st2) = schedule(st, batch, srcStats,
       ep => Recipes.textTicketOrder(textRecipes, st.seed, ep))
-    val slotRec = slotRecords(spark, pool, slots, srcCounts, stagedRanks(rankIndex), None)
-    val slotMeta = slots.map { case (draw, _, _, name) =>
-      val (m, a) = selectorDesc(byName(name).selector)
-      (draw, m, a)
-    }.toDF("draw", "mode", "arg")
-    // temporal selectors: the chunk-source record is the as-of neighbor
-    val tRecs = {
-      val (temporal, plan) = chunkSources(dayOf, slotRec, neighborIndex)
-      if (temporal) localRelation(spark, plan) else plan
+    val (recs, _) = Profile.phase(spark, "sampler.slot_records") {
+      slotRecords(pool, slots, srcCounts, rankTbl)
     }
-    val ids = tRecs.select(col("record_id")).collect().map(_.getLong(0)).distinct.toSeq
-    val chunksR = chunks.filter(col("record_id").isin(ids: _*)).localCheckpoint(eager = false)
-    val tText: Column = decoration match {
-      case None => col("wtext")
-      case Some((smp, maxTok)) =>
-        Decoration.decorateColumn(smp,
-          concat(lit("dec:t:"), col("record_id").cast("string"),
-            lit(":"), col("draw").cast("string")),
-          split(col("wtext"), " "), maxTok).getField("text")
+    val recipeOf = recs.map(r => r.draw -> byName(r.recipe)).toMap
+    // the one pick per draw (stream `sel:t:`) over ONE keyed read of the
+    // chunk-source records' chunk rows
+    val tBy = Profile.phase(spark, "sampler.text_pick") {
+      val slotIds = recs.map(r => (r.draw, r.recipe, r.id))
+      val tSrc = chunkSources(slotIds, dayOf, neighborsOf(
+        slotIds.flatMap { case (_, name, id) => dayOf(name).map(_ -> id) }, neighborIndex))
+      slotPicks(spark, decoration, "t", chunkRows(chunks, tSrc.map(_._2).distinct), tSrc,
+        d => recipeOf(d).selector)
     }
-    // the fused slot path (stream `sel:t:`) — record restriction in the
-    // eligibility join, pick bit-identical to selectChunksBatch + join
-    val pick = Recipes.selectChunksBatchSlots(chunksR,
-        tRecs.withColumn("slot", lit("t")).join(broadcast(slotMeta), Seq("draw")))
-      .select(col("draw"), col("record_id").as("chunk_record"),
-        col("section_idx").cast("long").as("t_sidx"),
-        col("window_index").cast("long").as("t_widx"),
-        Determinism.portableHash(tText).as("t_hash"))
-    val core = localRelation(spark, slotRec
-      .join(pick, Seq("draw"))
-      .select(col("draw"), col("epoch"), col("recipe"), col("record_id"),
-        col("chunk_record"), col("t_sidx"), col("t_widx"), col("t_hash")))
+    val ridNull = slots.exists(_._2 == 0L) && nullable(rankTbl, "id") ||
+      slots.exists(_._2 > 0L) && nullable(pool, "id")
+    val schema = StructType(Seq(
+      StructField("draw", LongType, nullable = false),
+      StructField("epoch", LongType, nullable = false),
+      StructField("recipe", StringType),
+      StructField("record_id", LongType, ridNull),
+      StructField("chunk_record", LongType, nullable(chunks, "record_id")),
+      StructField("t_sidx", LongType, nullable(chunks, "section_idx")),
+      StructField("t_widx", LongType, nullable(chunks, "window_index")),
+      StructField("t_hash", LongType)))
+    val core = recs.flatMap { r =>
+      tBy.get(r.draw).map { case (c, h) =>
+        Row(r.draw, r.epoch, r.recipe, r.id, c.recordId, c.sectionIdx.getOrElse(null),
+          c.windowIndex.getOrElse(null), h.getOrElse(null))
+      }
+    }
     // seen-set dedup by the chunk key, earliest draw wins (reference
     // chunk_key dedup, src/sampler/mod.rs:2288-2292)
-    def rows = padded(spark,
-      seenFirst(core.collect().toSeq, core.schema, Seq("chunk_record", "t_sidx", "t_widx")),
-      core.schema, "draw", batch, s"padt:${st.seed}:${st.counter("draw")}")
-    SamplerBatch(core, () => rows, st2)
+    def rows = padded(spark, seenFirst(core, schema, Seq("chunk_record", "t_sidx", "t_widx")),
+      schema, "draw", batch, s"padt:${st.seed}:${st.counter("draw")}")
+    SamplerBatch(localRows(spark, core, schema), () => rows, st2)
   }
 }

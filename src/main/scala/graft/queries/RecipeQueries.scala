@@ -1064,8 +1064,8 @@ object RecipeQueries extends QueryModule {
       // cross-split fallback counts) surfaced as an oracle-gated report:
       // the q58 batch aggregated by (recipe, reason, lane) with a
       // negative-id checksum per cell. `lane` rides the composed core
-      // stream (src tier / sd / wd / fb / bm25 — Sampler.strategyPick and
-      // the bm25 dispatch), so the report is one aggregation over the
+      // stream (src tier / sd / wd / fb / bm25 — the Sampler's negative
+      // dispatch), so the report is one aggregation over the
       // rows a trainer already drew, exactly how the reference counts
       // inside its backend. The twin re-derives the lane split from its
       // own bmpick CTE — a Spark-side mislabel (e.g. counting an

@@ -162,15 +162,21 @@ class InvariantsSpec extends AnyFunSuite with GoldenHarness {
     // wraps, every strategy delivered, the fallback row) moves behind
     // GRAFT_SOAK_TESTS=1 below: it alone cost ~16 min of the default
     // suite, which round 16's driver could not finish inside its budget.
+    val lanes = Set.newBuilder[String]
     val got = goldenMatrix.map { case (cname, recipes, dated, dec) =>
-      val (b13, _, end) = runGolden(batch = 8, nBatches = 10, parts = 13,
+      val (b13, core, end) = runGolden(batch = 8, nBatches = 10, parts = 13,
         recipes = recipes, seed = s"gm:$cname", dated = dated,
         cols = goldenCols :+ "reason", decoration = dec)
       assert(end.epoch == 3L && end.counter("draw") == 80L,
         s"$cname: expected 3 epoch wraps inside the pinned window")
+      // the negative tier (`lane`) each delivered draw took
+      val delivered = b13.flatten.map(_.getAs[Long]("draw")).toSet
+      lanes ++= core.filter(c => delivered(c.head.asInstanceOf[Long])).map(_.last.toString)
       (cname, seqDigest(b13))
     }.toMap
     assert(got == MatrixPins10, s"golden matrix drift: $got")
+    // the pins cover every branch of the negative dispatch
+    assert(lanes.result() == Set("src", "sd", "wd", "fb", "bm25"), lanes.result())
     // decoration genuinely engaged: the same config without the sampler
     // yields a different sequence (prefix + budget fold into every hash)
     val (bPlain, _, _) = runGolden(batch = 8, nBatches = 10, parts = 13,

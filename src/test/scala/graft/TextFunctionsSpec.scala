@@ -226,4 +226,19 @@ class TextFunctionsSpec extends AnyFunSuite {
       UrlFunctions.hostOf(lit("https://WWW.Site5.AC.uk:443/p?q=1#f"))))
       == "site5.ac.uk")
   }
+
+  test("distinctTokens == array_distinct(tokens(...)), control chars and all") {
+    // leading/trailing control chars below U+0020 that are not \s: Java's
+    // String.trim would strip them, Spark's trim keeps them in the token
+    val texts = Seq("\u0001abc def\u0001", " \t lead", "trail \n", "", "   ", null,
+      "a a b a", "x\u00a0y z", "\u001fz\u001c", "tab\tsep", "multi   space",
+      "\u000bvt\u000b", "\r\n crlf \r\n", "w1 w2 w1 \u0000 w3", "\u2003em\u2003space")
+    val s = spark
+    import s.implicits._
+    val viaSpark = texts.toDF("t")
+      .select(array_distinct(TextFunctions.tokens(col("t")))).collect()
+      .map(r => if (r.isNullAt(0)) Nil else r.getSeq[String](0))
+    assert(viaSpark.toSeq == texts.map(TextFunctions.distinctTokens))
+    assert(TextFunctions.distinctTokens("\u0001abc def\u0001") == Seq("\u0001abc", "def\u0001"))
+  }
 }
