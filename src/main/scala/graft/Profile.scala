@@ -6,6 +6,7 @@ import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue, CountDown
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.SparkContext
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.FormattedMode
@@ -16,7 +17,8 @@ import org.apache.spark.sql.execution.FormattedMode
   * query once through the `noop` sink to warm up, then once more, and
   * prints the wall time, each job's time and description, the union of
   * the job intervals against the driver gaps between them, and the stages
-  * by RDD scope with their task counts. Tokens resolve like `q58` →
+  * by RDD scope with their task counts, and the generated classes
+  * compiled during the timed run. Tokens resolve like `q58` →
   * `q58_bm25_composed_batch`.
   *
   * `sbt "runMain graft.Profile --plan <dir> <suffix> <q>..."` writes each
@@ -37,12 +39,18 @@ object Profile {
 
   final case class Job(id: Int, startMs: Long, endMs: Long, description: String)
   final case class Stage(scope: String, ms: Long, tasks: Int)
-  final case class Run[T](result: T, jobs: Seq[Job], stages: Seq[Stage])
+  final case class Run[T](result: T, jobs: Seq[Job], stages: Seq[Stage], compiled: Long)
+
+  /** Classes Janino has compiled in this JVM so far: generated code that
+    * missed Spark's codegen cache. */
+  def compiledClasses: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
 
   /** Runs `body` under job group `group` and returns what it returned with
-    * the jobs it started (from this thread or threads it spawned) and
-    * their completed stages. Listener delivery is asynchronous, so a
-    * sentinel job queued after `body` marks the end of its events. */
+    * the jobs it started (from this thread or threads it spawned), their
+    * completed stages, and the generated classes compiled while it ran
+    * (a JVM-wide count, so other threads' compiles count too). Listener
+    * delivery is asynchronous, so a sentinel job queued after `body`
+    * marks the end of its events. */
   def jobsIn[T](sc: SparkContext, group: String)(body: => T): Run[T] = {
     val sentinelGroup = s"$group.sentinel"
     val starts = new ConcurrentHashMap[Int, (Long, String, Seq[Int])]()
@@ -82,7 +90,9 @@ object Profile {
     sc.addSparkListener(listener)
     try {
       sc.setJobGroup(group, group)
+      val compiled0 = compiledClasses
       val result = try body finally sc.clearJobGroup()
+      val compiled = compiledClasses - compiled0
       sc.setJobGroup(sentinelGroup, "listener sentinel")
       try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
       require(sentinel.await(30, TimeUnit.SECONDS), s"listener events for $group never arrived")
@@ -90,7 +100,7 @@ object Profile {
         Job(id, t0, ends.asScala.getOrElse(id, t0), d)
       }.sortBy(_.id)
       val ours = starts.values.asScala.flatMap(_._3).toSet
-      Run(result, jobs, stages.asScala.toSeq.collect { case (id, st) if ours(id) => st })
+      Run(result, jobs, stages.asScala.toSeq.collect { case (id, st) if ours(id) => st }, compiled)
     } finally sc.removeSparkListener(listener)
   }
 
@@ -153,7 +163,7 @@ object Profile {
       def s(ms: Long) = ms / 1000.0
       val conf = Seq("spark.master", "spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled")
       println(conf.map(k => s"$k=${spark.conf.get(k)}").mkString(s"$name (", ", ", ")"))
-      println(f"  wall ${r.result}%.2f s, jobs=${r.jobs.size}")
+      println(f"  wall ${r.result}%.2f s, jobs=${r.jobs.size}, compiled classes=${r.compiled}")
       r.jobs.sortBy(j => j.startMs - j.endMs).foreach { j =>
         println(f"  job ${j.id}%4d ${s(j.endMs - j.startMs)}%6.2f s  ${j.description.take(90)}")
       }

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.core.Determinism
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
@@ -192,14 +192,18 @@ object Mixing {
       .select(col("id"), col("source"), col("pos"))
   }
 
-  /** The driver half of [[epochPick]]: each requested dense position of
-    * `epoch`'s order as its (source, r, pos) target — the source and the
-    * per-source seeded rank `r` that serve it — from the per-source
-    * counts alone (input order irrelevant). Pure counter arithmetic;
-    * out-of-range positions are DROPPED, not an error — the join-based
-    * construction this replaces silently unmatched them, and a stale
-    * cached pool_size (pool shrank without invalidation) must degrade to
-    * a padded batch, not a driver crash. */
+  /** Each requested dense position of `epoch`'s order ([[epochOrder]])
+    * as its (source, r, pos) target — the source and the per-source
+    * seeded rank `r` that serve it — from the per-source counts alone
+    * (input order irrelevant), without materializing the order. With
+    * cum(r) = Σ_s min(n_s, r) (records served above depth r), position p
+    * sits at depth r = max{r : cum(r) <= p}, offset p - cum(r) into the
+    * sources still alive at that depth (srank order): O(#sources · log)
+    * per position. The sampler reads each target's record by key from
+    * the epoch's staged ranks ([[PoolRankIndex.epochRanks]]); PropertySpec
+    * pins that read to `epochOrder`. Out-of-range positions are DROPPED,
+    * not an error — a stale cached pool_size (pool shrank without
+    * invalidation) must degrade to a padded batch, not a driver crash. */
   def epochTargets(stats: Seq[(String, Long)], epoch: Long,
       positions: Seq[Long]): Seq[(String, Long, Long)] = {
     val srcs = stats.toArray
@@ -223,43 +227,9 @@ object Mixing {
         if (ns(j) > r) { if (k == 0L) si = j else k -= 1 }
         j += 1
       }
-      require(si >= 0, s"epochPick: no source at depth $r for position $p")
+      require(si >= 0, s"epochTargets: no source at depth $r for position $p")
       (srcs(si)._1, r, p)
     }
-  }
-
-  /** Resolve a BOUNDED set of dense epoch positions to their records
-    * WITHOUT materializing the full order — the batch sampler's pick
-    * lane. [[epochOrder]]'s dense position is analytically invertible
-    * from the #sources-sized stats table: with cum(r) = Σ_s min(n_s, r)
-    * (records served above depth r), a target position p sits at depth
-    * r = max{r : cum(r) <= p}, offset p - cum(r) into the sources still
-    * alive at that depth (srank order). So the driver maps each position
-    * to its (source, depth) in O(#sources · log) and the cluster only
-    * ranks the NEEDED sources' pools ([[epochTargets]], then one keyed
-    * window + a broadcast join), instead of ranking the whole corpus and cross-joining it with
-    * the source stats to build positions nobody reads. Identical values
-    * to `epochOrder(pool, epoch).filter(pos ∈ positions)` (law-pinned).
-    * Emits (pos, id, source).
-    *
-    * `stats` (optional): the pool's per-source counts, when the caller
-    * already collected them this batch (the composed sampler shares ONE
-    * stats collect across pool size, epoch pick, and fallback order) —
-    * values identical to the internal groupBy, input order irrelevant. */
-  def epochPick(pool: DataFrame, epoch: Long, positions: Seq[Long],
-      stats: Option[Seq[(String, Long)]] = None): DataFrame = {
-    val spark = pool.sparkSession
-    import spark.implicits._
-    val wanted = epochTargets(stats.getOrElse(
-        pool.groupBy(col("source")).agg(count(lit(1)).as("n"))
-          .collect().map(r => (r.getString(0), r.getLong(1))).toSeq),
-      epoch, positions)
-    val needed = wanted.map(_._1).distinct
-    pool.filter(col("source").isin(needed: _*))
-      .withColumn("r", row_number().over(Window.partitionBy(col("source"))
-        .orderBy(Determinism.seeded(s"ro:$epoch", col("id")), col("id"))).cast("long") - 1)
-      .join(broadcast(wanted.toDF("source", "r", "pos")), Seq("source", "r"))
-      .select(col("pos"), col("id"), col("source"))
   }
 
   /** Unconsumed-first reorder after a population change

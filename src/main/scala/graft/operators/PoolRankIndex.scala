@@ -1,7 +1,13 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.Profile
+import graft.core.Determinism
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Column, DataFrame, GraftColumnBridge, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /** The composed sampler's pool-rank sidecar as a STAGED index — the
   * input every [[Sampler]] batch serves its record and negative picks
@@ -39,6 +45,78 @@ object PoolRankIndex {
   def stage(pool: DataFrame): (DataFrame, Seq[(String, Long)]) = {
     val ranks = build(pool).localCheckpoint()
     (ranks, srcStatsOf(ranks))
+  }
+
+  /** Each record's per-source rank in `epoch`'s interleave order
+    * ([[Mixing.epochOrder]]'s seeded order and id tiebreak): the sidecar's
+    * `er0` at epoch 0, [[epochRanks]]' column at later epochs. */
+  private[operators] def epochRank(epoch: Long): Column =
+    row_number().over(Window.partitionBy(col("source"))
+      .orderBy(Determinism.seeded(s"ro:$epoch", col("id")), col("id"))).cast("long") - 1
+
+  /** The column of [[epochRanks]]' frame that holds `epoch`'s rank. */
+  def epochRankCol(epoch: Long): String = s"er$epoch"
+
+  /** The sidecar with `epoch`'s per-source interleave rank as column
+    * [[epochRankCol]] in place of `er0`: `ranks` itself at epoch 0, and
+    * at a later epoch a frame staged once per rank index — one window
+    * pass under the `sampler.epoch_stage` phase (its shuffle and the
+    * materializing count: two jobs), rows persisted `MEMORY_AND_DISK`,
+    * nothing written under the index dirs. So a batch of any epoch reads
+    * its slot records, with their rank rows, in one keyed read of one
+    * job.
+    *
+    * The memo is keyed by the identity of `ranks`. Concurrent callers
+    * stage an epoch once; each rank index keeps its two most recently
+    * staged epochs and unpersists older ones (a serving cursor only moves
+    * forward, so a batch at most straddles two), and a rank index that is
+    * garbage collected takes its staged rows with it. */
+  def epochRanks(ranks: DataFrame, epoch: Long): DataFrame =
+    if (epoch == 0L) ranks
+    else epochStages.synchronized {
+      epochStages.computeIfAbsent(ranks, r => {
+        val s = new EpochStages
+        stageCleaner.register(r, () => s.dropAll())
+        s
+      })
+    }.get(ranks, epoch)
+
+  private val KeptEpochs = 2
+  private val epochStages = new java.util.WeakHashMap[DataFrame, EpochStages]()
+  private lazy val stageCleaner = java.lang.ref.Cleaner.create()
+
+  /** One rank index's staged epochs, oldest first: each epoch's
+    * persisted rows and the frame over them. */
+  private final class EpochStages {
+    private val byEpoch =
+      scala.collection.mutable.LinkedHashMap.empty[Long, (RDD[InternalRow], DataFrame)]
+
+    def get(ranks: DataFrame, epoch: Long): DataFrame = synchronized {
+      if (!byEpoch.contains(epoch)) {
+        val staged = stage(ranks, epoch)
+        while (byEpoch.size >= KeptEpochs) byEpoch.remove(byEpoch.head._1).foreach(_._1.unpersist())
+        byEpoch(epoch) = staged
+      }
+      byEpoch(epoch)._2
+    }
+
+    def dropAll(): Unit = synchronized {
+      byEpoch.values.foreach(_._1.unpersist())
+      byEpoch.clear()
+    }
+  }
+
+  private def stage(ranks: DataFrame, epoch: Long): (RDD[InternalRow], DataFrame) = {
+    val spark = ranks.sparkSession
+    val plan = ranks.select(ranks.columns.toSeq.map(c =>
+      if (c == "er0") epochRank(epoch).as(epochRankCol(epoch)) else col(c)): _*)
+    Profile.phase(spark, "sampler.epoch_stage") {
+      // the plan reuses its row objects: copy each row before persisting
+      val rows = plan.queryExecution.toRdd.map(_.copy())
+        .setName(s"epoch $epoch ranks").persist(StorageLevel.MEMORY_AND_DISK)
+      rows.count()
+      (rows, GraftColumnBridge.rowsFrame(spark, rows, plan.schema))
+    }
   }
 
   /** Per-source stats of a built sidecar: each source's `nsrc`. */

@@ -3,10 +3,16 @@ package graft.operators
 import graft.Profile
 import graft.core.Determinism
 import graft.functions.TextFunctions
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftColumnBridge, Row, SparkSession}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, ArrayData}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, MapType,
+  StringType, StructField, StructType}
+import org.apache.spark.unsafe.types.UTF8String
+import scala.collection.immutable.HashSet
 import scala.jdk.CollectionConverters._
 
 /** One composed sampler batch: `core` is the per-draw stream BEFORE the
@@ -109,16 +115,17 @@ final class ExtendedMetrics {
   * positions are served in order off a per-epoch permutation.
   *
   * Scale shape: a batch reads by key and picks on the driver. Its reads
-  * are bounded by the batch: the slot records (at epoch 0 one keyed read
-  * of the staged rank sidecar; later epochs rank the needed sources'
-  * pools, [[Mixing.epochPick]]), the picked records' chunk rows (an
-  * `isin` PREDICATE over ≤ 2×batch ids, which pushes below a derived
-  * chunk table's window/explode to the record scan — a broadcast join
-  * could not push through the Generate), the negative targets' sidecar
-  * rows, and the BM25 scoring join. Chunk picks, the strategy × tier
-  * dispatch, the core join, rejection, dedup and pad run in Scala over
-  * those rows. The driver holds counters, the slot schedule and the
-  * batch's chunk rows (≤ 2×batch records' chunks).
+  * are bounded by the batch, and each is one [[keyed]] read whose
+  * generated code is the same in every batch: the slot records (of the
+  * staged rank sidecar at epoch 0, of the epoch's ranks staged once at
+  * its first batch after, [[PoolRankIndex.epochRanks]]), the picked
+  * records' chunk rows (a PREDICATE over ≤ 2×batch ids, which pushes
+  * below a derived chunk table's window/explode to the record scan — a
+  * broadcast join could not push through the Generate), the negative
+  * targets' sidecar rows, and the BM25 scoring join's term rows. Chunk
+  * picks, the strategy × tier dispatch, the core join, rejection, dedup
+  * and pad run in Scala over those rows. The driver holds counters, the
+  * slot schedule and the batch's chunk rows (≤ 2×batch records' chunks).
   */
 object Sampler {
 
@@ -340,26 +347,81 @@ object Sampler {
       }
     }
 
+  /** The keyed read every batch makes: the rows of `df` whose `cols`
+    * equal one of `keys` (external values — Long, String, dates; a key
+    * holding a null, or a long out of an int column's range, matches
+    * nothing, as `===` would). One filter whose generated code depends on
+    * neither the key values nor their count, so a serving loop compiles
+    * it once: [[keyMatch]], plus a per-column `InSet` on each string or
+    * long key column so the scan can still push the filter down. An
+    * `isin` list or an OR of equalities would inline every long literal,
+    * so each batch would compile a new class, and an OR tree's codegen is
+    * quadratic in its depth. */
+  private[graft] def keyed(df: DataFrame, cols: Seq[String], keys: Seq[Seq[Any]]): DataFrame = {
+    val pushed = if (cols.size == 1) Nil else cols.zipWithIndex.collect {
+      case (c, i) if setColumn(df.schema(c).dataType) => columnIn(df, c, keys.map(_(i)))
+    }
+    df.filter(pushed.foldLeft(keyMatch(df, cols, keys))(_ && _))
+  }
+
+  /** The exact key test of [[keyed]]: one `InSet` over the key column, or
+    * over the struct of the key columns, whose set is a reference object
+    * in the generated code. An empty set generates other code, so no keys
+    * become the one all-null key: it matches only rows whose key columns
+    * are all null. */
+  private def keyMatch(df: DataFrame, cols: Seq[String], keys: Seq[Seq[Any]]): Column =
+    if (cols.size == 1 && setColumn(df.schema(cols.head).dataType))
+      columnIn(df, cols.head, keys.map(_.head))
+    else {
+      val types = cols.map(df.schema(_).dataType)
+      val rows = keys.flatMap { k =>
+        val vs = types.zip(k).map { case (t, v) => internal(t, v) }
+        if (vs.forall(_.nonEmpty)) Some(InternalRow.fromSeq(vs.map(_.get))) else None
+      }
+      GraftColumnBridge.inSet(struct(cols.map(col): _*),
+        HashSet.from(if (rows.nonEmpty) rows else Seq(InternalRow.fromSeq(cols.map(_ => null)))))
+    }
+
+  /** `c IN values` over a string or long column, always a HashSet — the
+    * generated code casts the set to its runtime class, and small Scala
+    * sets have one class per size. */
+  private def columnIn(df: DataFrame, c: String, values: Seq[Any]): Column =
+    GraftColumnBridge.inSet(col(c), HashSet.from(values.flatMap(internal(df.schema(c).dataType, _))))
+
+  /** A column type whose `InSet` tests a set. Spark generates a `switch`
+    * over inlined values for int-like and date columns, so those keys go
+    * through the struct form. */
+  private def setColumn(t: DataType): Boolean = t == LongType || t == StringType
+
+  /** An external key value as the Catalyst value of a `t` column. An
+    * `InSet` is not type-coerced like `isin`, so a long id keys an int
+    * column as an int. */
+  private def internal(t: DataType, v: Any): Option[Any] = (t, v) match {
+    case (_, null) => None
+    case (IntegerType, n: Long) => if (n.isValidInt) Some(n.toInt) else None
+    case _ => Some(CatalystTypeConverters.convertToCatalyst(v))
+  }
+
   /** The staged as-of neighbor ([[temporalNeighborsFull]]) of each
-    * (offset, record) in `need`: one id-pruned read of each offset's
+    * (offset, record) in `need`: one keyed read of each offset's
     * record_id-sorted map — zero pool-scale work, no job when `need` is
     * empty. */
   private def neighborsOf(need: Seq[(Int, Long)],
       neighborIndex: Map[Int, DataFrame]): Map[(Int, Long), Long] =
     need.distinct.groupBy(_._1).toSeq.sortBy(_._1).flatMap { case (d, ps) =>
-      neighborIndex(d).filter(col("record_id").isin(ps.map(_._2): _*))
+      keyed(neighborIndex(d), Seq("record_id"), ps.map(p => Seq(p._2)))
         .select(col("record_id"), col("nbid")).collect()
         .map(r => (d, r.getLong(0)) -> r.getLong(1))
     }.toMap
 
   /** Every chunk row of the records `ids`: ONE keyed read of the chunk
-    * table. The restriction is an `isin` PREDICATE, not a join: it pushes
-    * below a derived table's window/explode to the record scan (a
-    * broadcast join could not push through the Generate), so chunking
-    * cost per batch is ∝ batch size, not corpus size. No job for no ids. */
+    * table. The restriction is a PREDICATE, not a join: it pushes below a
+    * derived table's window/explode to the record scan (a broadcast join
+    * could not push through the Generate), so chunking cost per batch is
+    * ∝ batch size, not corpus size. No job for no ids. */
   private[graft] def chunkRows(chunks: DataFrame, ids: Seq[Long]): Seq[Recipes.ChunkRow] =
     if (ids.isEmpty) Nil
-    else chunks.filter(col("record_id").isin(ids: _*))
+    else keyed(chunks, Seq("record_id"), ids.map(Seq(_)))
       .select(col("record_id").cast("long"), col("section_idx").cast("long"), col("role"),
         col("view_kind"), col("window_index").cast("long"), col("overlap").cast("long"),
         col("wtext"))
@@ -458,58 +520,52 @@ object Sampler {
     (srcCounts, slots, st2)
   }
 
-  /** One staged rank-sidecar row ([[rankSidecar]]). An undated pool
-    * leaves the date-group fields unset (`date` null, counts 0). */
-  private final case class Ranks(id: Long, source: String, er0: Long, rn: Long, nsrc: Long,
+  /** One staged rank-sidecar row ([[rankSidecar]]), `er` its epoch rank
+    * column as read. An undated pool leaves the date-group fields unset
+    * (`date` null, counts 0). */
+  private final case class Ranks(id: Long, source: String, er: Long, rn: Long, nsrc: Long,
       srnk: Long, scnt: Long, date: Any, rn2: Long, dgs: Long, drnk: Long, dcnt: Long)
 
-  /** The sidecar rows matching any of `keys` (each a conjunction of
-    * column equalities): ONE disjunctive filter the scan can push down,
-    * one collect. No job for no keys. */
-  private def readRanks(rankTbl: DataFrame, keys: Seq[Column]): Seq[Ranks] =
-    if (keys.isEmpty) Nil
-    else {
-      val dated = rankTbl.columns.contains("date")
-      val cs = Seq("id", "source", "er0", "rn", "nsrc", "srnk", "scnt") ++
-        (if (dated) Seq("date", "rn2", "dgs", "drnk", "dcnt") else Nil)
-      rankTbl.filter(keys.reduce(_ || _)).select(cs.map(col): _*).collect().toSeq.map { r =>
-        def l(i: Int) = r.getLong(i)
-        if (dated) Ranks(l(0), r.getString(1), l(2), l(3), l(4), l(5), l(6), r.get(7), l(8),
-          l(9), l(10), l(11))
-        else Ranks(l(0), r.getString(1), l(2), l(3), l(4), l(5), l(6), null, 0L, 0L, 0L, 0L)
-      }
+  /** The sidecar rows of `rows` (a keyed read), with `er` read from the
+    * epoch rank column `er`: one collect. */
+  private def readRanks(rows: DataFrame, er: String): Seq[Ranks] = {
+    val dated = rows.columns.contains("date")
+    val cs = Seq("id", "source", er, "rn", "nsrc", "srnk", "scnt") ++
+      (if (dated) Seq("date", "rn2", "dgs", "drnk", "dcnt") else Nil)
+    rows.select(cs.map(col): _*).collect().toSeq.map { r =>
+      def l(i: Int) = r.getLong(i)
+      if (dated) Ranks(l(0), r.getString(1), l(2), l(3), l(4), l(5), l(6), r.get(7), l(8),
+        l(9), l(10), l(11))
+      else Ranks(l(0), r.getString(1), l(2), l(3), l(4), l(5), l(6), null, 0L, 0L, 0L, 0L)
     }
+  }
 
   /** A scheduled slot with its picked record. */
   private final case class SlotRec(draw: Long, epoch: Long, recipe: String, id: Long,
       source: String)
 
   /** Record pick: each slot's record off its epoch's interleave, in draw
-    * order, plus the sidecar rows read on the way (by id). Epoch 0 — the
-    * overwhelming share of a long pool's serving life — is ONE keyed read
-    * of the staged sidecar: [[Mixing.epochTargets]] maps each position to
-    * its (source, er0) key on the driver, and the rows come back with
-    * every rank column the negative dispatch reads. Later epochs run
-    * [[Mixing.epochPick]]'s per-source rank window, one collect each.
-    * Positions join their slots on the driver. */
-  private def slotRecords(pool: DataFrame, slots: Seq[(Long, Long, Long, String)],
+    * order, with its sidecar row. One path for every epoch:
+    * [[Mixing.epochTargets]] maps each position to its (source, rank) key
+    * on the driver, then ONE keyed read of the epoch's ranks
+    * ([[PoolRankIndex.epochRanks]]: the sidecar itself at epoch 0, a
+    * frame staged once per epoch after) brings the records back with
+    * every rank column the negative dispatch reads. Positions join their
+    * slots on the driver. */
+  private def slotRecords(slots: Seq[(Long, Long, Long, String)],
       srcCounts: Seq[(String, Long)], rankTbl: DataFrame): (Seq[SlotRec], Map[Long, Ranks]) = {
     val read = Seq.newBuilder[Ranks]
     val recs = slots.groupBy(_._2).toSeq.sortBy(_._1).flatMap { case (ep, ss) =>
-      val positions = ss.map(_._3)
-      val at: Map[Long, (Long, String)] =
-        if (ep == 0) {
-          val targets = Mixing.epochTargets(srcCounts, 0L, positions)
-          val rows = readRanks(rankTbl, targets.map { case (src, r, _) =>
-            col("source") === src && col("er0") === r })
-          read ++= rows
-          val byKey = rows.map(k => (k.source, k.er0) -> k).toMap
-          targets.flatMap { case (src, r, p) => byKey.get((src, r)).map(k => p -> (k.id, k.source)) }
-            .toMap
-        } else Mixing.epochPick(pool, ep, positions, Some(srcCounts)).collect()
-          .map(r => r.getLong(0) -> (r.getLong(1), r.getString(2))).toMap
+      val targets = Mixing.epochTargets(srcCounts, ep, ss.map(_._3))
+      val er = PoolRankIndex.epochRankCol(ep)
+      val rows = if (targets.isEmpty) Nil
+        else readRanks(keyed(PoolRankIndex.epochRanks(rankTbl, ep), Seq("source", er),
+          targets.map { case (src, r, _) => Seq(src, r) }), er)
+      read ++= rows
+      val byKey = rows.map(k => (k.source, k.er) -> k).toMap
+      val at = targets.flatMap { case (src, r, p) => byKey.get((src, r)).map(p -> _) }.toMap
       ss.flatMap { case (draw, _, pos, recipe) =>
-        at.get(pos).map { case (id, src) => SlotRec(draw, ep, recipe, id, src) }
+        at.get(pos).map(k => SlotRec(draw, ep, recipe, k.id, k.source))
       }
     }
     (recs.sortBy(_.draw), read.result().map(k => k.id -> k).toMap)
@@ -539,8 +595,7 @@ object Sampler {
     * (persisted with `save`, or in memory with `stage`) and served to
     * every batch as `rankIndex` (reference pool staging,
     * src/sampler/mod.rs:994-1151 — staged per refresh, not per batch).
-    * `srcCounts` is the per-source stats collect (the epochPick identity
-    * — jvmHash ≡ the seeded column hash). */
+    * `srcCounts` is the per-source stats collect. */
   def rankSidecar(pool: DataFrame, srcCounts: Seq[(String, Long)]): DataFrame = {
     val spark = pool.sparkSession
     import spark.implicits._
@@ -549,15 +604,10 @@ object Sampler {
     val base0 = pool
       .withColumn("rn", row_number().over(wSrc.orderBy(col("id"))).cast("long") - 1)
       .withColumn("nsrc", count(lit(1)).over(wSrc).cast("long"))
-      // the EPOCH-0 interleave rank (Mixing.epochPick's per-source
-      // seeded order for epoch 0, identical orderBy + tiebreak): a pure
-      // pool function, so it stages with the sidecar and the first
-      // epoch's batches — the overwhelming share of a long pool's
-      // serving life (epoch advances only after a full pool cycle) —
-      // skip the per-batch rank window entirely; later epochs derive
-      // their reshuffled order in-plan as before
-      .withColumn("er0", row_number().over(wSrc.orderBy(
-        Determinism.seeded("ro:0", col("id")), col("id"))).cast("long") - 1)
+      // the EPOCH-0 interleave rank: a pure pool function, so it stages
+      // with the sidecar; later epochs stage theirs once each
+      // (PoolRankIndex.epochRanks)
+      .withColumn("er0", PoolRankIndex.epochRank(0L))
     // per-row date-group attrs replace the former dG side table:
     //   drnk — the record's date-group rank within its source
     //          (dense_rank over rows ≡ row_number over distinct dates);
@@ -612,8 +662,10 @@ object Sampler {
     * @param chunks chunk table (columns of [[graft.core.RecordChunk]]):
     *               record_id, section_idx, role, view_kind, window_index,
     *               overlap, wtext
-    * @param pool   record pool: `id`, `source` (one row per record) — read
-    *               only by the interleave pick of epochs after the first
+    * @param pool   record pool: `id`, `source` (one row per record). No
+    *               batch reads it: the staged rank index serves every
+    *               epoch's record pick. Its `id` nullability is
+    *               `record_id`'s for the draws of epochs after the first
     * @param recipes resolved recipe set (configured or source defaults —
     *               apply [[Recipes.resolve]]/[[Recipes.withAutoInjected]]
     *               upstream)
@@ -662,11 +714,12 @@ object Sampler {
     *
     * Every input to a batch's picks is bounded by the batch, so a batch
     * runs a few keyed reads and makes every pick in plain Scala: the slot
-    * records (one sidecar read at epoch 0, which also brings the
-    * anchors' rank rows), the a/p chunk rows, the negative targets (plus
-    * the rank rows of later-epoch anchors), the n chunk rows not already
-    * in hand, and one scoring join when a recipe uses the BM25 backend. Each phase's jobs
-    * carry its name as their description ([[graft.Profile.phase]]). */
+    * records (one read of the epoch's ranks, which also brings the
+    * anchors' rank rows), the a/p chunk rows, the negative targets, the n
+    * chunk rows not already in hand, and one scoring join when a recipe
+    * uses the BM25 backend. The first batch of each epoch after the first
+    * stages that epoch's ranks. Each phase's jobs carry its name as their
+    * description ([[graft.Profile.phase]]). */
   private def composed(spark: SparkSession, chunks: DataFrame, pool: DataFrame,
       recipes: Seq[TripletRecipe], st: SamplerState, batch: Int,
       decoration: Option[(graft.functions.KvpPrefixSampler, Int)],
@@ -690,8 +743,8 @@ object Sampler {
       require(hasDate,
         "WrongPublicationDate recipes need a `date` column in the pool the rank index was built from")
 
-    val (recs, inHand) = Profile.phase(spark, "sampler.slot_records") {
-      slotRecords(pool, slots, srcCounts, rankTbl)
+    val (recs, ranks) = Profile.phase(spark, "sampler.slot_records") {
+      slotRecords(slots, srcCounts, rankTbl)
     }
     val recipeOf = slots.map(s => s._1 -> byName(s._4)).toMap
     def dayOf(sel: TripletRecipe => Selector)(name: String) = temporalDays(sel(byName(name)))
@@ -724,9 +777,6 @@ object Sampler {
         recordId: Long, nid: Long, lane: String)
     val bmSlots = recs.filter(r => recipeOf(r.draw).negativeBackend == NegativeBackend.Bm25)
     val negRec: Seq[Neg] = Profile.phase(spark, "sampler.negatives") {
-      val missing = recs.map(_.id).distinct.filterNot(inHand.contains)
-      val ranks = inHand ++ readRanks(rankTbl,
-        if (missing.isEmpty) Nil else Seq(col("id").isin(missing: _*))).map(k => k.id -> k)
       /* Each anchor picks its tier —
        *   WrongArticle → same-source same-DATE skip-the-anchor (`nega`,
        *     dated pools with a ≥2 date group) → same-source (`neg`) →
@@ -767,7 +817,7 @@ object Sampler {
           target.map(t => (r, reason, tier, t))
         }
       }
-      val targets = readRanks(rankTbl, dispatched.map(_._4).distinct.map(_.pred))
+      val targets = targetRows(rankTbl, dispatched.map(_._4).distinct)
       val dflt = dispatched.flatMap { case (r, reason, tier, t) =>
         targets.find(t.hit).map { k =>
           r.draw -> Neg(r.draw, r.epoch,
@@ -833,30 +883,61 @@ object Sampler {
 
   private def nullable(df: DataFrame, c: String): Boolean = df.schema(c).nullable
 
-  /** A negative's target row in the rank sidecar: `pred` selects it in
-    * the keyed read, `hit` finds it among the rows read. */
+  /** A negative's target row in the rank sidecar; `hit` finds it among
+    * the rows read. */
   private sealed trait Target {
-    def pred: Column
+    def source: String
     def hit(k: Ranks): Boolean
   }
   /** src and fb tiers: (source, rn). */
   private final case class ByRn(source: String, rn: Long) extends Target {
-    def pred: Column = col("source") === source && col("rn") === rn
     def hit(k: Ranks): Boolean = k.source == source && k.rn == rn
   }
   /** sd tier: (source, date, rn2); a null date matches nothing. */
   private final case class ByDate(source: String, date: Any, rn2: Long) extends Target {
-    def pred: Column = col("source") === source && col("date") === lit(date) && col("rn2") === rn2
     def hit(k: Ranks): Boolean =
       date != null && k.source == source && k.date == date && k.rn2 == rn2
   }
   /** wd tier: the target date group (source, drnk), and the record at
     * in-group rank `pmod(h, dgs)` of that group's own size. */
   private final case class ByGroup(source: String, drnk: Long, h: Long) extends Target {
-    def pred: Column = col("source") === source && col("drnk") === drnk &&
-      col("rn2") === pmod(lit(h), col("dgs"))
     def hit(k: Ranks): Boolean = k.source == source && k.drnk == drnk && k.rn2 == h % k.dgs
   }
+
+  /** Every target's sidecar row in ONE keyed read: the targets' sources
+    * as a pushable `InSet`, AND one exact test per tier — (source, rn)
+    * and, in a dated pool, (source, date, rn2) as [[keyMatch]] sets, and
+    * for the wd tier the target (source, drnk) groups as a set plus a
+    * literal map from each group to its `h` values: a row of such a group
+    * matches when `rn2 = pmod(h, dgs)` for one of them, so only target
+    * rows come back. Every tier keys on a rank, which is never null, so a
+    * tier with no targets tests [[keyMatch]]'s all-null key and matches
+    * nothing, and the filter's generated code is the same in every
+    * batch. No job for no targets. */
+  private def targetRows(rankTbl: DataFrame, ts: Seq[Target]): Seq[Ranks] =
+    if (ts.isEmpty) Nil
+    else {
+      val byRn = keyMatch(rankTbl, Seq("source", "rn"),
+        ts.collect { case ByRn(src, rn) => Seq(src, rn) })
+      val tiers =
+        if (!rankTbl.columns.contains("date")) byRn
+        else {
+          val groups = ts.collect { case ByGroup(src, d, h) => (src, d) -> h }
+            .groupMap(_._1)(_._2).toSeq
+          val hs = GraftColumnBridge.column(Literal.create(new ArrayBasedMapData(
+              ArrayData.toArrayData(groups.map { case ((src, d), _) =>
+                InternalRow(UTF8String.fromString(src), d) }.toArray),
+              ArrayData.toArrayData(groups.map(g => ArrayData.toArrayData(g._2.toArray)).toArray)),
+            MapType(StructType(Seq(StructField("source", StringType), StructField("drnk", LongType))),
+              ArrayType(LongType, containsNull = false), valueContainsNull = false)))
+          byRn || keyMatch(rankTbl, Seq("source", "date", "rn2"),
+            ts.collect { case ByDate(src, d, rn2) => Seq(src, d, rn2) }) ||
+            keyMatch(rankTbl, Seq("source", "drnk"), groups.map { case ((src, d), _) => Seq(src, d) }) &&
+              exists(hs.getItem(struct(col("source"), col("drnk"))),
+                h => pmod(h, col("dgs")) === col("rn2"))
+        }
+      readRanks(rankTbl.filter(columnIn(rankTbl, "source", ts.map(_.source)) && tiers), "er0")
+    }
 
   /** Bm25Backend picks (reference: bm25_backend.rs:120-174): re-rank each
     * BM25 slot's strategy pool by the BM25 score of the anchor's SELECTED
@@ -868,7 +949,7 @@ object Sampler {
     *
     * Scale shape: the query terms are the anchor picks' distinct tokens
     * (tokenized on the driver, [[TextFunctions.distinctTokens]]), and the
-    * batch's distinct sources and terms become isin PREDICATES on the
+    * batch's distinct sources and terms become [[keyed]] reads of the
     * staged weighted-term table, which push into its (source,
     * term)-sorted parquet scan — the
     * reference's per-term postings probe re-expressed as scan pruning.
@@ -887,9 +968,9 @@ object Sampler {
       StructField("record_id", LongType, nullable = false),
       StructField("source", StringType), StructField("reason", StringType),
       StructField("term", StringType))))
-    val wterm = bm25Index.get.wterm
-      .filter(col("source").isin(bmSlots.map(_._1.source).distinct: _*))
-      .filter(col("term").isin(qterms.map(_.getString(4)).distinct: _*))
+    val wterm = keyed(keyed(bm25Index.get.wterm, Seq("source"),
+      bmSlots.map(s => Seq(s._1.source)).distinct), Seq("term"),
+      qterms.map(t => Seq(t.getString(4))).distinct)
     val scoredAll = broadcast(anchors)
       .join(wterm, Seq("source", "term"))
       .filter(col("cand") =!= col("record_id"))
@@ -972,9 +1053,8 @@ object Sampler {
     * Temporal selectors swap in the staged as-of neighbor exactly like
     * [[nextBatch]]'s anchor lane. `rankIndex` and `srcStats` (both
     * required) are the pool's staged rank sidecar and per-source stats, as
-    * on [[nextBatch]]: the sidecar's `er0` serves every epoch-0 record
-    * pick without a per-batch rank window, and a staged deployment serves
-    * the POOL from its (id, source) columns. */
+    * on [[nextBatch]]: every epoch's record pick is one keyed read of its
+    * ranks ([[PoolRankIndex.epochRanks]]), with no per-batch rank window. */
   def nextTextBatch(spark: SparkSession, chunks: DataFrame, pool: DataFrame,
       textRecipes: Seq[TextRecipe], st: SamplerState, batch: Int,
       decoration: Option[(graft.functions.KvpPrefixSampler, Int)] = None,
@@ -988,7 +1068,7 @@ object Sampler {
     val (srcCounts, slots, st2) = schedule(st, batch, srcStats,
       ep => Recipes.textTicketOrder(textRecipes, st.seed, ep))
     val (recs, _) = Profile.phase(spark, "sampler.slot_records") {
-      slotRecords(pool, slots, srcCounts, rankTbl)
+      slotRecords(slots, srcCounts, rankTbl)
     }
     val recipeOf = recs.map(r => r.draw -> byName(r.recipe)).toMap
     // the one pick per draw (stream `sel:t:`) over ONE keyed read of the

@@ -46,7 +46,7 @@ object ComposedIndexQueries extends QueryModule {
   //     the rank table unchanged; bumped so pre-v3 caches regenerate with
   //     the stats sidecar present)
   // v4: rank sidecar gains `er0` — the epoch-0 interleave rank staged at
-  //     refresh (the per-batch epochPick rank window disappears for the
+  //     refresh (the per-batch rank window disappears for the
   //     whole first epoch); pre-v4 caches lack the column
   private val DefVersion = "v4"
 

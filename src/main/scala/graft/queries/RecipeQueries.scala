@@ -1383,8 +1383,8 @@ object RecipeQueries extends QueryModule {
       // pre-dedup core stream.
       (s, dir) => {
         val chunks = stagedChunks(s, dir, "txx", TxWhere)
-        // The staged rank index serves the epoch-0 record pick (its `er0`)
-        // and is the STAGED POOL: reconstituting (id, source) from the
+        // The staged rank index serves every epoch's record pick and is
+        // the STAGED POOL: reconstituting (id, source) from the
         // persisted table keeps the corpus tokenize+filter pass (txPool's
         // definition) off the batch path, same as every other composed
         // lane.

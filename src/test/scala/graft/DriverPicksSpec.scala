@@ -76,24 +76,37 @@ class DriverPicksSpec extends AnyFunSuite with GoldenHarness {
     }
   }
 
-  test("a staged mixed_strategy batch runs <= 8 jobs, each under a named phase") {
+  /** The golden `mixed_strategy` fixture, its staged rank index, and a
+    * batch draw over them. */
+  private def mixedStrategy() = {
     val (_, recipes, dated, _) = goldenMatrix.find(_._1 == "mixed_strategy").get
     val (chunks, pool) = goldenCorpus(dated = dated)
     val (ranks, stats) = PoolRankIndex.stage(pool)
-    def draw(st: SamplerState) = Sampler.nextBatch(spark, chunks, pool, recipes, st, 8,
-      rankIndex = Some(ranks), srcStats = Some(stats)).core.collect()
-    val st0 = SamplerState("gm:mixed_strategy", 0L, Map.empty)
+    def draw(st: SamplerState, batch: Int = 8) = Sampler.nextBatch(spark, chunks, pool,
+      recipes, st, batch, rankIndex = Some(ranks), srcStats = Some(stats))
+    (draw _, stats.map(_._2).sum)
+  }
+
+  private val mixedSeed = SamplerState("gm:mixed_strategy", 0L, Map.empty)
+
+  test("a staged mixed_strategy batch runs <= 8 jobs, each under a named phase") {
+    val (drawBatch, poolSize) = mixedStrategy()
+    def draw(st: SamplerState) = drawBatch(st, 8).core.collect()
+    val st0 = mixedSeed
     draw(st0) // warm-up: codegen and the cached chunk derivation
     // an epoch-0 batch (4 jobs: slot records, a/p chunk rows, negative
-    // targets, n chunk rows), then one that straddles the epoch-1 wrap
-    // (its epoch-1 slots add the per-source rank window and the anchors'
-    // sidecar read: 8). The composed sampler ran 20 jobs per epoch-0
-    // batch before its picks moved to the driver.
-    val st3 = Sampler.advanceState(st0, 24, stats.map(_._2).sum)
-    for (st <- Seq(st0, st3)) {
+    // targets, n chunk rows), one that straddles the epoch-1 wrap (its
+    // epoch-1 slots add a second slot-record read, and the first batch of
+    // an epoch stages its ranks: 7), then one wholly inside epoch 1, after
+    // its ranks are staged (the epoch-0 shape: 4). The composed sampler
+    // ran 20 jobs per epoch-0 batch before its picks moved to the driver.
+    val st3 = Sampler.advanceState(st0, 24, poolSize)
+    val st4 = Sampler.advanceState(st3, 8, poolSize)
+    assert(st4.epoch == 1L && st4.counter("cursor") + 8 <= poolSize)
+    for ((st, bound) <- Seq(st0 -> 4, st3 -> 8, st4 -> 4)) {
       val run = Profile.jobsIn(spark.sparkContext, "driver-picks") { draw(st) }
       assert(run.result.nonEmpty)
-      assert(run.jobs.size <= 8,
+      assert(run.jobs.size <= bound,
         s"${run.jobs.size} jobs at $st:\n${run.jobs.map(_.description).mkString("\n")}")
       assert(run.jobs.forall(_.description.startsWith("sampler.")),
         run.jobs.map(_.description).mkString("\n"))
@@ -109,6 +122,78 @@ class DriverPicksSpec extends AnyFunSuite with GoldenHarness {
       Profile.jobsIn(spark.sparkContext, "driver-picks-dec")(b()).jobs.size
     }
     assert(jobs(goldenDecoration) == jobs(None))
+  }
+
+  test("each epoch is staged once, also by two producers; two are kept") {
+    val sc = spark.sparkContext
+    def staged() = sc.getPersistentRDDs.values
+      .filter(r => Option(r.name).exists(_.startsWith("epoch "))).map(_.id).toSet
+    def stageJobs(run: Profile.Run[_]) =
+      run.jobs.count(_.description.startsWith("sampler.epoch_stage"))
+    // one producer: the first batch of epoch 1 stages its ranks, the next
+    // reuses them
+    val (drawOne, poolSize) = mixedStrategy()
+    val e1 = Sampler.advanceState(mixedSeed, poolSize.toInt, poolSize)
+    val before = staged()
+    val one = Profile.jobsIn(sc, "stage-one")(drawOne(e1, 4).core.collect())
+    val again = Profile.jobsIn(sc, "stage-again")(
+      drawOne(Sampler.advanceState(e1, 4, poolSize), 4).core.collect())
+    assert(stageJobs(one) > 0 && stageJobs(again) == 0)
+    assert((staged() -- before).size == 1)
+    // two concurrent producers entering epoch 1 of a fresh rank index:
+    // the same staging jobs as one producer, and one staged frame
+    val (drawTwo, _) = mixedStrategy()
+    val before2 = staged()
+    val go = new java.util.concurrent.CountDownLatch(1)
+    val two = Profile.jobsIn(sc, "stage-two") {
+      val producers = Seq(e1, Sampler.advanceState(e1, 4, poolSize)).map { st =>
+        val t = new Thread(() => { go.await(); drawTwo(st, 4).core.collect(); () })
+        t.start(); t
+      }
+      go.countDown()
+      producers.foreach(_.join())
+    }
+    assert(stageJobs(two) == stageJobs(one), two.jobs.map(_.description).mkString("\n"))
+    assert((staged() -- before2).size == 1)
+    // epochs 2 and 3 stage theirs and drop the oldest: two stay
+    for (e <- 2 to 3) drawTwo(Sampler.advanceState(mixedSeed, e * poolSize.toInt, poolSize), 4)
+      .core.collect()
+    val kept = staged() -- before2
+    assert(kept.size == 2, kept)
+  }
+
+  test("steady batches compile no generated code (epoch 0, epoch 1, bm25)") {
+    // every per-batch read's generated code is independent of its keys,
+    // so after warm-up a serving loop compiles nothing: 8 steady batches
+    // of 2 at epoch 0 and at epoch 1 (inside one 25-record epoch each)
+    val (draw, poolSize) = mixedStrategy()
+    def compiles(sts: Seq[SamplerState])(batch: SamplerState => SamplerBatch): Long = {
+      val c0 = Profile.compiledClasses
+      sts.foreach { st => val b = batch(st); b.core.collect(); b.rows.collect() }
+      Profile.compiledClasses - c0
+    }
+    def steady(from: SamplerState, n: Int) =
+      Iterator.iterate(from)(Sampler.advanceState(_, 2, poolSize)).take(n).toSeq
+    for (epoch <- Seq(0L, 1L)) {
+      val sts = steady(Sampler.advanceState(mixedSeed, (epoch * poolSize).toInt, poolSize), 10)
+      assert(sts.last.epoch == epoch && sts.last.counter("cursor") + 2 <= poolSize)
+      compiles(sts.take(2))(draw(_, 2)) // warm-up (epoch 1: stages its ranks)
+      val n = compiles(sts.drop(2))(draw(_, 2))
+      assert(n == 0, s"$n classes compiled over 8 steady epoch-$epoch batches")
+    }
+    // a BM25-backend batch adds the scoring join over keyed term reads
+    val (_, bmRecipes, _, _) = goldenMatrix.find(_._1 == "bm25").get
+    val (chunks, pool) = goldenCorpus(lexical = true)
+    val (ranks, stats) = PoolRankIndex.stage(pool)
+    val ix = Bm25PoolIndex.fromPool(pool)
+    val bm25 = Bm25PoolIndex(ix.postings, ix.srcStats, ix.wterm.localCheckpoint())
+    def bmDraw(st: SamplerState) = Sampler.nextBatch(spark, chunks, pool, bmRecipes, st, 4,
+      bm25Index = Some(bm25), rankIndex = Some(ranks), srcStats = Some(stats))
+    val bmSts = Iterator.iterate(SamplerState("gm:bm25", 0L, Map.empty))(
+      Sampler.advanceState(_, 4, stats.map(_._2).sum)).take(3).toSeq
+    compiles(bmSts.take(2))(bmDraw)
+    val bmN = compiles(bmSts.drop(2))(bmDraw)
+    assert(bmN == 0, s"$bmN classes compiled over a steady bm25 batch")
   }
 
   test("Profile.phase names its jobs and restores the caller's description") {

@@ -17,32 +17,41 @@ class PropertySpec extends AnyFunSuite {
 
   private val anyString: Gen[String] = Gen.listOf(Gen.choose(0.toChar, 0x2FF.toChar)).map(_.mkString)
 
-  test("epochPick == epochOrder at the requested positions (random skewed pools)") {
-    // the sampler's pick lane inverts the dense epoch position
-    // analytically (Mixing.epochPick) instead of materializing the
-    // corpus-wide order; the law pins it to the full construction at
-    // every requested position, across skewed pools (incl. singleton
-    // sources) and epochs
+  test("keyed read of staged epoch ranks == epochOrder (random skewed pools)") {
+    // the sampler resolves each dense epoch position on the driver
+    // (Mixing.epochTargets) and reads its record by (source, rank) from
+    // the epoch's staged ranks (PoolRankIndex.epochRanks) instead of
+    // materializing the corpus-wide order; the law pins that read to the
+    // full construction at every requested position, across skewed pools
+    // (incl. singleton sources) and epochs 0-3
     val spark = TestSpark.spark
     import spark.implicits._
+    import graft.operators.{Mixing, PoolRankIndex, Sampler}
     val rng = new scala.util.Random(31)
     for (trial <- 1 to 6) {
       val nSrc = 1 + rng.nextInt(6)
       val pool = (0 until nSrc).flatMap { s =>
-        val n = 1 + rng.nextInt(if (s == 0) 1 else 40) // source 0 is a singleton-ish
+        val n = 1 + rng.nextInt(if (s == 0) 1 else 40) // source 0 is a singleton
         (0 until n).map(i => (s.toLong * 1000 + i, s"src_$s"))
       }
       val df = pool.toDF("id", "source").repartition(5).cache()
+      val (ranks, stats) = PoolRankIndex.stage(df)
       val total = pool.size.toLong
-      val epoch = rng.nextInt(3).toLong
       val positions = (Seq(0L, total - 1) ++
         Seq.fill(10)(math.abs(rng.nextLong()) % total)).distinct
-      val full = graft.operators.Mixing.epochOrder(df, epoch)
-        .filter(org.apache.spark.sql.functions.col("pos").isin(positions: _*))
-        .collect().map(r => (r.getAs[Long]("pos"), r.getAs[Long]("id"))).toMap
-      val picked = graft.operators.Mixing.epochPick(df, epoch, positions)
-        .collect().map(r => (r.getAs[Long]("pos"), r.getAs[Long]("id"))).toMap
-      assert(picked == full, s"trial $trial (epoch $epoch, total $total)")
+      for (epoch <- 0L to 3L) {
+        val full = Mixing.epochOrder(df, epoch)
+          .filter(org.apache.spark.sql.functions.col("pos").isin(positions: _*))
+          .collect().map(r => (r.getAs[Long]("pos"), r.getAs[Long]("id"))).toMap
+        val targets = Mixing.epochTargets(stats, epoch, positions)
+        val er = PoolRankIndex.epochRankCol(epoch)
+        val byKey = Sampler.keyed(PoolRankIndex.epochRanks(ranks, epoch), Seq("source", er),
+            targets.map { case (src, r, _) => Seq(src, r) })
+          .collect().map(r => (r.getAs[String]("source"), r.getAs[Long](er)) -> r.getAs[Long]("id"))
+          .toMap
+        val picked = targets.map { case (src, r, p) => p -> byKey((src, r)) }.toMap
+        assert(picked == full, s"trial $trial (epoch $epoch, total $total)")
+      }
       df.unpersist()
     }
   }
