@@ -1,42 +1,36 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import scala.jdk.CollectionConverters._
 
-/** Benchmark main. One JSON line on stdout:
-  * `{"metric":"total","value":N,"unit":"sec","queries":{...},"sf":...}`
-  * plus diagnostic fields: per-query `gc` seconds, an `errors` object
-  * (query → exception class; a failing query must surface, not record a
-  * fast time), and `failed` count.
+/** Benchmark main: the query suite under one fixed protocol, plus the
+  * serving bench.
   *
-  * Reproducibility: 50 queries in one long-lived context accumulate
-  * broadcast blocks, generated classes, and GC pressure that inflated a
-  * ~41 s suite to 318 s in round 1. Countermeasures: deterministic warmup
-  * (always the first sorted query), `System.gc()` after every query so the
-  * ContextCleaner can drop out-of-scope broadcasts, and a full SparkSession
-  * recycle every [[SessionChunk]] queries (janino's codegen cache is
-  * JVM-static, so recycling is cheap but resets executor/block-manager
-  * state).
+  * Every query is timed through [[Profile.sinkRun]]: the `noop` sink,
+  * which computes every output column, with the result fingerprint
+  * observed by the same job. Per query ([[measure]]): one untimed warm-up
+  * run, recorded as `cold`, then [[TimedRuns]] timed runs, each on a
+  * freshly built plan (new RDDs, so no shuffle reuse from an earlier
+  * run), with the cache cleared and a `System.gc()` between runs. The
+  * query reports the median, min and max of its timed runs. A timed run
+  * whose fingerprint differs from the warm-up's fails the query as
+  * `FingerprintMismatch`; a failed query records no time. The session is
+  * rebuilt every [[SessionChunk]] queries, since a long-lived context
+  * accumulates broadcast blocks and GC pressure (janino's codegen cache
+  * is JVM-static, so a rebuild is cheap).
   *
-  * Degradation guard: the round-9 artifact overstated the suite ~20% — a
-  * uniformly degraded session shifts the outlier-detection median itself,
-  * so mid-band queries keep inflated numbers and only the heavy tail is
-  * re-timed. Defense: after the first full pass, compare against the Σ of
-  * per-query committed minima over the current suite (the same reference
-  * the per-query retimes use — a whole-artifact total is incomparable
-  * once the query set grows, and the compact line's truncation had left
-  * only stale artifacts parseable); if the new steady total drifts >15%
-  * above it, run the ENTIRE suite a second time (all sessions recycled —
-  * block-manager/broadcast/GC state reset; janino's JVM-static codegen
-  * cache persisting across passes is exactly the warm state the
-  * steady-state methodology wants) and keep each query's best of the two
-  * passes. Both totals land in the artifact (`prev_total`, `first_total`,
-  * `rerun_total`) so the selection is auditable.
+  * Stdout ends with three JSON lines: the full detail, the `queries` map
+  * by short key (`q01`), and the short `total` line, printed last because
+  * the harness that collects this output keeps only the last ~2000
+  * characters. An unfiltered run also writes the detail to
+  * bench_detail.json. `SPARK_GRAFT_ONLY` selects queries as it does for
+  * [[Verify]]; its token `serving` selects the serving bench, which runs
+  * on every unfiltered run.
   */
 object Bench {
 
-  private val SessionChunk =
-    math.max(1, sys.env.getOrElse("SPARK_GRAFT_BENCH_CHUNK", "10").toInt)
+  private val SessionChunk = 10
+  val TimedRuns = 3
 
   private def gcMillis: Long =
     java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
@@ -50,165 +44,44 @@ object Bench {
     spark
   }
 
-  /** (name, steady, gcSec, error, cold) per query. */
-  type Row = (String, Double, Double, Option[String], Double)
-
-  /** One full suite measurement: warmup, steady-state timing per query
-    * with session recycling, then the per-suspect fresh-session retime
-    * pass. Returns the (possibly retime-replaced) rows plus the retime
-    * diagnostics (suite vs fresh time per suspect).
-    *
-    * `prevQ` (short key → (best, median) committed steady seconds at this
-    * SF) adds the PER-QUERY drift defense the suite-total guard can't
-    * give: rounds 12–13 each graded a dozen UNTOUCHED queries 18–41%
-    * above their prior artifact while the suite total stayed inside the
-    * 15% rerun trigger, leaving "code regression vs session interference
-    * vs box noise" unattributable. A query is re-timed in its OWN fresh
-    * session when its grade exceeds BOTH the best committed number's
-    * envelope (>15% and >0.15 s above the min) AND its historical median
-    * — the noise envelope: a jittery query whose typical committed grade
-    * sits above best+15% is no longer re-timed every round (round 14
-    * re-timed 43/152). Best kept, both numbers in the diagnostics — an
-    * inflated grade on untouched code must survive an isolated fresh
-    * session before it can land in an artifact.
-    */
-  private def measureSuite(names: Seq[String], sfDir: String,
-      prevQ: Map[String, (Double, Double)] = Map.empty)
-    : (Seq[Row], Map[String, (Double, Double)]) = {
-    var spark = newSession()
-    // JVM/codegen warmup on a FIXED query (Map ordering is arbitrary;
-    // run-to-run comparability needs the same warm state every time)
-    try names.headOption.foreach(n => SparkEntry.queries(n)(spark, sfDir).count())
-    catch { case _: Throwable => }
-    spark.catalog.clearCache()
-    // Steady-state methodology: every query runs once UNTIMED (janino
-    // codegen + JIT + parquet-footer warmup for that specific plan), then a
-    // FRESH DataFrame is built and timed — new plan => new RDDs, so no
-    // shuffle-stage reuse from the warmup run; internal .cache() pools are
-    // cleared in between and re-paid inside the timed window. The cold
-    // (first-execution) time is kept per query in the diagnostics line.
-    val rawResults = names.zipWithIndex.map { case (name, idx) =>
-      if (idx > 0 && idx % SessionChunk == 0) {
-        spark.stop()
-        spark = newSession()
-      }
-      val tc0 = System.nanoTime()
-      val errCold =
-        try { SparkEntry.queries(name)(spark, sfDir).count(); None }
-        catch { case t: Throwable => Some(t.getClass.getName) }
-      val cold = (System.nanoTime() - tc0) / 1e9
-      spark.catalog.clearCache()
-      System.gc()
-      val gc0 = gcMillis
-      val t0 = System.nanoTime()
-      val err = errCold.orElse {
-        try { SparkEntry.queries(name)(spark, sfDir).count(); None }
-        catch { case t: Throwable => Some(t.getClass.getName) }
-      }
-      val dt = (System.nanoTime() - t0) / 1e9
-      val gcDt = (gcMillis - gc0) / 1e3
-      // drop per-query cached pools, then let the ContextCleaner reclaim
-      // the query's broadcasts before the next timing starts
-      spark.catalog.clearCache()
-      System.gc()
-      (name, dt, gcDt, err, cold)
-    }
-    // Outlier defense: a long-lived suite can hand one query a 3-6 s
-    // GC/codegen bill that is suite state, not the query (round-5 artifact:
-    // q47 graded 7.74 s vs 1.77 s isolated; round-6: q95 read 11.7 s in a
-    // chunk where its COLD time was polluted too — 5.8 s isolated — so a
-    // trigger conditioned on the query's own cold time misses exactly the
-    // degraded-session case it exists for). Every heavy outlier — steady
-    // above max(2 s, 2× the suite median) — is re-timed in its OWN fresh
-    // session (same warmup-then-fresh-plan methodology) and the better
-    // number kept: best-of-two for the heavy tail, which is where session
-    // pollution lands. One session PER suspect, not one for all: the
-    // round-6 artifact re-timed 11 suspects sequentially in a single
-    // session, so the 11th inherited 10 queries of GC/codegen state — the
-    // exact effect the pass exists to remove (q28 graded 4.49 s vs 1.24 s
-    // isolated). Both numbers land in the diagnostics line so the
-    // selection is auditable.
-    val medianSteady = {
-      val s = rawResults.map(_._2)
-      if (s.isEmpty) 0.0 else median(s)
-    }
-    val outlierSuspects = rawResults.filter { case (_, dt, _, err, _) =>
-      err.isEmpty && dt > math.max(2.0, 2 * medianSteady)
-    }.map(_._1)
-    // per-query drift suspects vs the committed best's envelope AND the
-    // committed median (worst absolute drift first, capped to bound the
-    // pass's wall time)
-    def shortKey(name: String) = name.takeWhile(_ != '_')
-    val driftSuspects = rawResults.filter { case (name, dt, _, err, _) =>
-      err.isEmpty && prevQ.get(shortKey(name))
-        .exists { case (best, med) =>
-          dt > math.max(best * 1.15, best + 0.15) && dt > med }
-    }.sortBy { case (name, dt, _, _, _) => prevQ(shortKey(name))._1 - dt }
-      .take(24).map(_._1)
-    val suspects = (outlierSuspects ++ driftSuspects).distinct
-    // only a retime whose timed run actually COMPLETED may replace the
-    // suite number: a query that errors out fast in the fresh session
-    // (bad session state, OOM) must not substitute a bogus small dt
-    val retimes: Map[String, Double] =
-      suspects.flatMap { name =>
-        spark.stop()
-        spark = newSession()
-        try SparkEntry.queries(name)(spark, sfDir).count()
-        catch { case _: Throwable => }
-        spark.catalog.clearCache(); System.gc()
-        val t0 = System.nanoTime()
-        val ok =
-          try { SparkEntry.queries(name)(spark, sfDir).count(); true }
-          catch { case _: Throwable => false }
-        val dt = (System.nanoTime() - t0) / 1e9
-        if (ok) Some(name -> dt) else None
-      }.toMap
-    spark.stop()
-    val results = rawResults.map { case r @ (name, dt, gcDt, err, cold) =>
-      retimes.get(name).filter(_ < dt)
-        .map(v => (name, v, gcDt, err, cold)).getOrElse(r)
-    }
-    val suiteDt = rawResults.map(r => r._1 -> r._2).toMap
-    (results, retimes.map { case (k, v) => k -> (suiteDt(k), v) })
+  /** One query's measurement: the warm-up's seconds and fingerprint, and
+    * the timed runs' seconds (empty when the query failed). */
+  final case class Timing(cold: Double, runs: Seq[Double],
+      fingerprint: Option[Profile.Fingerprint], error: Option[String]) {
+    def median: Double = Bench.median(runs)
   }
 
-  /** Per-query steady seconds from committed bench artifacts at the same
-    * SF, keyed by SHORT name (`qNN`): (MINIMUM, MEDIAN) across rounds.
-    * The minimum is the best number this box has ever graded a query;
-    * the median is the per-query NOISE ENVELOPE — a historically jittery
-    * query's median sits well above its min, so the drift trigger stops
-    * re-timing it every round (round 14 re-timed 43/152 queries because
-    * every grade was compared against the all-time best, which no
-    * realistic pass matches across the whole suite). Sources: every
-    * `BENCH_r*.json` tail's compact `"qNN":sec` pairs (full names carry a
-    * `_` after the digits, so gc/cold maps can't match), plus the
-    * committed `bench_detail.json`'s full-name queries map. */
-  private def prevArtifactQueries(sfNum: String): Map[String, (Double, Double)] = {
-    def read(f: java.io.File): String =
-      try new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
-      catch { case _: Throwable => "" }
-    val sfRe = """\\?"sf\\?":([0-9.]+)""".r
-    def atSf(text: String): Boolean =
-      sfRe.findAllMatchIn(text).toSeq.lastOption.exists(_.group(1) == sfNum)
-    val dir = new java.io.File(".")
-    val all = Option(dir.listFiles()).getOrElse(Array.empty)
-    val shortRe = """\\?"(q\d+)\\?":([0-9.]+)""".r
-    val fromArtifacts = all.filter(_.getName.matches("BENCH_r\\d+\\.json"))
-      .toSeq.map(read).filter(atSf).flatMap(t =>
-        shortRe.findAllMatchIn(t).map(m => m.group(1) -> m.group(2).toDouble))
-    val fromDetail = all.filter(_.getName == "bench_detail.json").toSeq
-      .map(read).filter(atSf).flatMap { t =>
-        val qSec = """"queries":\{([^}]*)\}""".r.findFirstMatchIn(t).map(_.group(1))
-        val fullRe = """"(q\d+)[a-z0-9_]*":([0-9.]+)""".r
-        qSec.toSeq.flatMap(s =>
-          fullRe.findAllMatchIn(s).map(m => m.group(1) -> m.group(2).toDouble))
-      }
-    (fromArtifacts ++ fromDetail).groupBy(_._1)
-      .map { case (k, vs) =>
-        // true-midpoint median: the upper-middle pick inflated even-sized
-        // medians, loosening the drift-retime and full-rerun triggers
-        k -> (vs.map(_._2).min, median(vs.map(_._2)))
-      }
+  /** Times the query `build` makes under the protocol above. */
+  def measure(spark: SparkSession, build: () => DataFrame): Timing = {
+    def reset(): Unit = { spark.catalog.clearCache(); System.gc() }
+    def run(): (Double, Profile.Fingerprint) = {
+      val t0 = System.nanoTime()
+      val fp = Profile.sinkRun(build())
+      ((System.nanoTime() - t0) / 1e9, fp)
+    }
+    var cold = 0.0
+    try {
+      val (c, fp) = run()
+      cold = c
+      reset()
+      val timed = Seq.fill(TimedRuns) { val r = run(); reset(); r }
+      if (timed.forall(_._2 == fp)) Timing(cold, timed.map(_._1), Some(fp), None)
+      else Timing(cold, Nil, Some(fp), Some("FingerprintMismatch"))
+    } catch { case t: Throwable =>
+      reset()
+      Timing(cold, Nil, None, Some(t.getClass.getName))
+    }
+  }
+
+  /** Every query in `names`, in order, rebuilding the session every
+    * [[SessionChunk]] queries. */
+  def measureSuite(names: Seq[String], sfDir: String): Seq[(String, Timing)] = {
+    var spark = newSession()
+    try names.zipWithIndex.map { case (name, i) =>
+      if (i > 0 && i % SessionChunk == 0) { spark.stop(); spark = newSession() }
+      val s = spark
+      name -> measure(s, () => SparkEntry.queries(name)(s, sfDir))
+    } finally spark.stop()
   }
 
   /** Steady-state trainer serving bench — the PRODUCT metric: a deployed
@@ -502,20 +375,10 @@ object Bench {
       Some(f"""{"batches_per_sec":$bps%.3f,"triplets_per_sec":$tps%.1f,"run_spread":${disp(runs)}%.2f,"accepted":${res.accepted},"n_batches":${chosen.nb},"batch":$batchSize,"parallelism":$par,"loops":$loops,"sec":${chosen.sec}%.3f,"windows":${fmt(chosen.rates)},"window_spread":${disp(chosen.rates)}%.2f,"blocked_sec":${chosen.blockedSec}%.3f,"max_gap_sec":${chosen.maxGap}%.3f,"cal_bps":$calBps%.3f,"stagger_ms":$staggerMs$rejField,"ref128":{"batches_per_sec":$rBps%.3f,"triplets_per_sec":${rBps * 128}%.1f,"avg_bps":${r.avg}%.3f,"batch":128,"n_batches":${r.nb},"sec":${r.sec}%.3f,"windows":${fmt(r.rates)},"window_spread":${disp(r.rates)}%.2f,"blocked_sec":${r.blockedSec}%.3f,"max_gap_sec":${r.maxGap}%.3f}}""")
     } finally spark.stop()
   }
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // comma-separated substring filter for iterating on single queries
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.split(',').toSeq)
-    val names = SparkEntry.queries.keys.toSeq.sorted
-      .filter(n => only.forall(_.exists(n.contains)))
+    val names = SparkEntry.queries.keys.toSeq.sorted.filter(Verify.wanted)
     val sfNum = "sf([0-9.]+)".r.findFirstMatchIn(sfDir).map(_.group(1)).getOrElse("0")
-
-    // the steady-state serving bench rides the same artifact: always on
-    // the full suite run; on filtered runs only when a filter token
-    // matches "serving" (so `SPARK_GRAFT_BENCH_ONLY=serving` iterates on
-    // it alone)
-    val wantServing = only.forall(_.exists(tok => "serving".contains(tok)))
 
     // trainer-facing steady-state serving loop FIRST, in its own fresh
     // session: a 150-query suite leaves the shared JVM with GC/
@@ -525,7 +388,7 @@ object Bench {
     // session recycling absorb the (much milder) reverse direction
     // a serving-bench failure must not take the 150-query suite grade
     // down with it: record the exception as the serving value instead
-    val serving = if (!wantServing) None
+    val serving = if (!Verify.only.forall(_.contains("serving"))) None
       else try servingBench(sfDir)
       catch { case t: Throwable =>
         Some(s"""{"error":"${t.getClass.getName}: ${
@@ -533,96 +396,33 @@ object Bench {
             .replaceAll("[\"\\\\\\p{Cntrl}]", " ").take(160)}"}""")
       }
 
-    val prevQ = if (only.isEmpty) prevArtifactQueries(sfNum)
-      else Map.empty[String, (Double, Double)]
-    val (results1, retimes1) = measureSuite(names, sfDir, prevQ)
-    val firstTotal = results1.map(_._2).sum
-    // degradation guard (only when running the full suite — a filtered
-    // subset's total is not comparable to any committed artifact)
-    // drift-guard baseline: Σ of the per-query committed MEDIANS over the
-    // CURRENT suite (prevQ — the same reference the per-query retimes
-    // use). The Σ-of-all-time-minima baseline is ≤ any realistic single
-    // pass BY CONSTRUCTION (every query at its best-ever simultaneously),
-    // so once per-query noise accumulated it triggered the full-suite
-    // rerun every round, permanently doubling bench wall time; the
-    // median sum is what a typical healthy pass actually totals. The old
-    // whole-artifact total was parsed from the newest BENCH_r*.json tail
-    // whose truncation still kept the "metric":"total" prefix — by round
-    // 14 that was a five-round-old artifact with a different query set.
-    // Guard only when the committed artifacts cover (nearly) the whole
-    // current suite, and compare over the SAME query set on both sides
-    // (a round's new queries would otherwise count as pure "drift").
-    val sharedNames = names.filter(n => prevQ.contains(n.takeWhile(_ != '_'))).toSet
-    val prevTotal = if (only.isEmpty && sharedNames.size >= names.size * 9 / 10)
-      Some(sharedNames.toSeq.map(n => prevQ(n.takeWhile(_ != '_'))._2).sum)
-    else None
-    val sharedFirstTotal = results1
-      .filter(r => sharedNames.contains(r._1)).map(_._2).sum
-    val drifted = prevTotal.exists(p => sharedFirstTotal > p * 1.15)
-    val (results, retimesDiag, rerunTotal) =
-      if (!drifted) (results1, retimes1, None)
-      else {
-        val (results2, retimes2) = measureSuite(names, sfDir, prevQ)
-        val byName2 = results2.map(r => r._1 -> r).toMap
-        // per-query best-of-two-passes; errors keep the first pass's row
-        // (a pass-2 error must not erase a completed pass-1 timing)
-        val merged = results1.map { case r1 @ (name, dt1, _, err1, _) =>
-          byName2.get(name) match {
-            case Some(r2 @ (_, dt2, _, err2, _))
-              if err1.isEmpty && err2.isEmpty && dt2 < dt1 => r2
-            case _ => r1
-          }
-        }
-        (merged, retimes1 ++ retimes2, Some(results2.map(_._2).sum))
-      }
-
-    val qs = results.map { case (k, v, _, _, _) => s"\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-    val gcs = results.map { case (k, _, g, _, _) => s"\"" + k + "\":" + g }
-      .mkString("{", ",", "}")
-    val colds = results.map { case (k, _, _, _, c) => s"\"" + k + "\":" + c }
-      .mkString("{", ",", "}")
-    val errs = results.collect { case (k, _, _, Some(e), _) => s"\"" + k + "\":\"" + e + "\"" }
-      .mkString("{", ",", "}")
-    val total = results.map(_._2).sum
-    val gcTotal = results.map(_._3).sum
-    val coldTotal = results.map(_._5).sum
-    val failed = results.count(_._4.isDefined)
-    // Full per-query diagnostics (long names, gc, cold first-execution
-    // times, errors) — first, because the harness that collects this output
-    // keeps only the LAST ~2000 characters of stdout, and this line is
-    // several times that.
-    // both numbers per retimed query: the in-suite grade and the
-    // fresh-session re-time (whichever is smaller is what `queries` kept)
-    val retimedDiag = retimesDiag.map { case (k, (suite, fresh)) =>
-      s"\"" + k + "\":{\"suite\":" + suite + ",\"fresh\":" + fresh + "}"
-    }.mkString("{", ",", "}")
-    val servingField = serving.map(j => s""","serving":$j""").getOrElse("")
-    println(s"""{"metric":"total_diag","value":$total,"unit":"sec","queries":$qs,"gc":$gcs,"cold":$colds,"errors":$errs,"failed":$failed,"retimed":$retimedDiag$servingField,"sf":"$sfDir"}""")
+    val results = measureSuite(names, sfDir)
     def r3(v: Double): String = f"$v%.3f"
-    val qsShort = results.map { case (k, v, _, _, _) =>
-      "\"" + k.takeWhile(_ != '_') + "\":" + r3(v)
-    }.mkString("{", ",", "}")
-    val guard = prevTotal.map(p =>
-      s""","prev_total":${r3(p)},"first_total":${r3(firstTotal)}""" +
-        rerunTotal.map(rt => s""","rerun_total":${r3(rt)}""").getOrElse("")
-    ).getOrElse("")
-    // The harness that collects this output keeps only the LAST ~2000
-    // characters of stdout, and at 150+ queries ONE line carrying both
-    // the per-query map and the summary no longer fits (the round-13
-    // artifact's head was truncated and its `parsed` field came back
-    // null). So: (1) the full per-query detail also lands in
-    // bench_detail.json next to the artifacts — lossless, judge-readable;
-    // (2) the per-query compact map prints on its own line (its head may
-    // clip, keeping the newest-numbered queries); (3) a SHORT summary
-    // line prints LAST — always intact, always machine-parseable.
-    if (only.isEmpty) try {
-      val detail =
-        s"""{"metric":"total","value":${r3(total)},"unit":"sec","method":"steady-state; outlier + per-query-drift retimes fresh (best kept); full rerun on >15% suite drift vs prev artifact","cold_total_sec":${r3(coldTotal)},"queries":$qs,"gc":$gcs,"cold":$colds,"errors":$errs,"failed":$failed,"retimed":$retimedDiag$guard$servingField,"sf":$sfNum}"""
+    def obj(kvs: Seq[(String, String)]): String =
+      kvs.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
+    def time(t: Timing): String = if (t.error.isEmpty) r3(t.median) else "null"
+    val ok = results.map(_._2).filter(_.error.isEmpty)
+    val total = ok.map(_.median).sum
+    val coldTotal = results.map(_._2.cold).sum
+    val failed = results.size - ok.size
+    val perQuery = obj(results.map { case (k, t) =>
+      k -> (s"""{"median":${time(t)},"min":${t.runs.minOption.map(r3).getOrElse("null")}""" +
+        s""","max":${t.runs.maxOption.map(r3).getOrElse("null")},"cold":${r3(t.cold)}""" +
+        s""","fingerprint":${t.fingerprint.map("\"" + _.hex + "\"").getOrElse("null")}}""")
+    })
+    val errs = obj(results.collect { case (k, Timing(_, _, _, Some(e))) => k -> s""""$e"""" })
+    val servingField = serving.map(j => s""","serving":$j""").getOrElse("")
+    val method = s"noop sink; warm-up, then median of $TimedRuns fresh-plan runs"
+    def detail(metric: String) = s"""{"metric":"$metric","value":${r3(total)},"unit":"sec",""" +
+      s""""method":"$method","sink":"noop","runs":$TimedRuns,"cold_total_sec":${r3(coldTotal)},""" +
+      s""""queries":$perQuery,"errors":$errs,"failed":$failed$servingField,"sf":$sfNum}"""
+    println(detail("total_diag"))
+    if (Verify.only.isEmpty) try {
       java.nio.file.Files.write(java.nio.file.Paths.get("bench_detail.json"),
-        detail.getBytes("UTF-8"))
+        detail("total").getBytes("UTF-8"))
     } catch { case _: java.io.IOException => () }
-    println(s"""{"metric":"queries","queries":$qsShort}""")
-    println(s"""{"metric":"total","value":${r3(total)},"unit":"sec","method":"steady-state; outlier+drift retimes; per-query detail in bench_detail.json","cold_total_sec":${r3(coldTotal)},"gc_sec":${r3(gcTotal)},"failed":$failed,"retimed":${retimesDiag.size}$guard$servingField,"sf":$sfNum}""")
+    println(s"""{"metric":"queries","queries":${
+      obj(results.map { case (k, t) => k.takeWhile(_ != '_') -> time(t) })}}""")
+    println(s"""{"metric":"total","value":${r3(total)},"unit":"sec","method":"$method; per-query detail in bench_detail.json","cold_total_sec":${r3(coldTotal)},"failed":$failed$servingField,"sf":$sfNum}""")
   }
 }

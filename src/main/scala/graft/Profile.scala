@@ -8,14 +8,18 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.SparkContext
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.execution.FormattedMode
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.MapType
 
 /** The job profiler: one listener, one query runner and the plan dumper.
   *
-  * `SPARK_GRAFT_SF_DIR=<sf dir> sbt "runMain graft.Profile q58"` runs the
-  * query once through the `noop` sink to warm up, then once more, and
-  * prints the wall time, each job's time and description, the union of
+  * [[sinkRun]] is the one way a query is timed (Bench, ScaleSmoke and
+  * `graft.Profile <q>`). `SPARK_GRAFT_SF_DIR=<sf dir> sbt "runMain
+  * graft.Profile q58"` runs the query once through it to warm up, then
+  * once more, and prints the wall time, the result fingerprint, each
+  * job's time and description, the union of
   * the job intervals against the driver gaps between them, and the stages
   * by RDD scope with their task counts, and the generated classes
   * compiled during the timed run. Tokens resolve like `q58` →
@@ -40,6 +44,35 @@ object Profile {
   final case class Job(id: Int, startMs: Long, endMs: Long, description: String)
   final case class Stage(scope: String, ms: Long, tasks: Int)
   final case class Run[T](result: T, jobs: Seq[Job], stages: Seq[Stage], compiled: Long)
+
+  /** A result's fingerprint: the row count plus the sum, wrapped to 64
+    * bits, of one xxhash64 per row over every column in name order. This
+    * is `perfbench.Fingerprint.ofFrame`'s definition, so both harnesses
+    * mean the same thing. Row order and partitioning cannot move it; a
+    * changed, lost or duplicated row does. */
+  final case class Fingerprint(rows: Long, sum: Long) {
+    def hex: String = f"$rows%d:$sum%016x"
+  }
+
+  /** Runs `df` through the `noop` sink and returns its [[Fingerprint]],
+    * observed by that same job. The sink computes every output column,
+    * where `count()` lets column pruning delete most of a plan, and
+    * `observe` keeps the query's own `Sort`, where an aggregate over the
+    * query would let Catalyst drop it. */
+  def sinkRun(df: DataFrame): Fingerprint = {
+    val obs = Observation()
+    val cols = df.schema.fields.sortBy(_.name).map { f =>
+      val c = col(s"`${f.name}`")
+      // xxhash64 rejects maps, and entry order is no part of a map's value
+      if (f.dataType.isInstanceOf[MapType]) array_sort(map_entries(c)) else c
+    }
+    df.observe(obs, count(lit(1)).as("rows"),
+        sum(xxhash64(cols.toIndexedSeq: _*).cast("decimal(38,0)")).as("sum"))
+      .write.mode("overwrite").format("noop").save()
+    val m = obs.get
+    Fingerprint(m("rows").asInstanceOf[Long],
+      Option(m("sum").asInstanceOf[java.math.BigDecimal]).fold(0L)(_.toBigInteger.longValue))
+  }
 
   /** Classes Janino has compiled in this JVM so far: generated code that
     * missed Spark's codegen cache. */
@@ -153,17 +186,17 @@ object Profile {
     val sf = sfDir
     val spark = Sessions.local()
     spark.sparkContext.setLogLevel("WARN")
-    def run(): Unit = SparkEntry.queries(name)(spark, sf).write.mode("overwrite")
-      .format("noop").save()
+    def run(): Fingerprint = sinkRun(SparkEntry.queries(name)(spark, sf))
     try {
       run() // warm-up: codegen, parquet footers, JIT
       val r = jobsIn(spark.sparkContext, "graft.profile") {
-        val t0 = System.nanoTime(); run(); (System.nanoTime() - t0) / 1e9
+        val t0 = System.nanoTime(); val fp = run(); ((System.nanoTime() - t0) / 1e9, fp)
       }
       def s(ms: Long) = ms / 1000.0
       val conf = Seq("spark.master", "spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled")
       println(conf.map(k => s"$k=${spark.conf.get(k)}").mkString(s"$name (", ", ", ")"))
-      println(f"  wall ${r.result}%.2f s, jobs=${r.jobs.size}, compiled classes=${r.compiled}")
+      println(f"  wall ${r.result._1}%.2f s, fingerprint ${r.result._2.hex}, jobs=${r.jobs.size}, " +
+        s"compiled classes=${r.compiled}")
       r.jobs.sortBy(j => j.startMs - j.endMs).foreach { j =>
         println(f"  job ${j.id}%4d ${s(j.endMs - j.startMs)}%6.2f s  ${j.description.take(90)}")
       }

@@ -26,8 +26,10 @@ import org.apache.spark.sql.functions._
   *
   *   SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 sbt "runMain graft.ScaleSmoke"
   *
-  * Prints one JSON line: per-query small/big walls + ratios, the bound,
-  * and pass/fail. Recorded in COVERAGE.md (decade-up row).
+  * Each wall is the median of Bench's timed runs (`Bench.measure`: the
+  * `noop` sink after a warm-up). Prints one JSON line: per-query
+  * small/big walls + ratios, the bound, and pass/fail. Recorded in
+  * COVERAGE.md (decade-up row).
   */
 object ScaleSmoke {
 
@@ -65,20 +67,13 @@ object ScaleSmoke {
     spark.sparkContext.setLogLevel("WARN")
     try {
       generate(spark, sfDir, outDir, factor)
-      // same steady-state methodology as Bench: one untimed pass
-      // (codegen/footers), then a fresh plan timed
-      def time(name: String, dir: String): Double = {
-        SparkEntry.queries(name)(spark, dir).count()
-        spark.catalog.clearCache(); System.gc()
-        val t0 = System.nanoTime()
-        SparkEntry.queries(name)(spark, dir).count()
-        val dt = (System.nanoTime() - t0) / 1e9
-        spark.catalog.clearCache(); System.gc()
-        dt
-      }
       val rows = Family.map { name =>
-        val small = time(name, sfDir)
-        val big = time(name, outDir)
+        // Bench's protocol and sink; a failed query fails the smoke
+        val Seq(small, big) = Seq(sfDir, outDir).map { dir =>
+          val t = Bench.measure(spark, () => SparkEntry.queries(name)(spark, dir))
+          t.error.foreach(e => sys.error(s"$name on $dir: $e"))
+          t.median
+        }
         val ratio = big / math.max(small, 1e-9)
         println(f"SCALE $name%-32s small=$small%7.3f s  big=$big%7.3f s  ratio=$ratio%5.2f")
         (name, small, big, ratio)

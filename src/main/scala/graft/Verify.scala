@@ -3,16 +3,21 @@ import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
+
+  /** `SPARK_GRAFT_ONLY=q93,q22` restricts a run (Verify's dump and its
+    * oracle json, or Bench's suite) to a comma-separated subset, each
+    * token an exact query name or a short key (`q93`); unset, every query
+    * runs. */
+  val only: Option[Set[String]] = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
+
+  def wanted(name: String): Boolean =
+    only.forall(set => set.contains(name) || set.contains(name.takeWhile(_ != '_')))
+
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
     val spark = Sessions.local()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    // dev loop: SPARK_GRAFT_ONLY=q93,q22 restricts the dump (and the
-    // oracle json) to a comma-separated subset; driver never sets it
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
-    def wanted(name: String) =
-      only.forall(set => set.contains(name) || set.contains(name.takeWhile(_ != '_')))
     SparkEntry.queries.filter(kv => wanted(kv._1)).foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")

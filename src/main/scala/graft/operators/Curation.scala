@@ -331,8 +331,11 @@ object Curation {
     * composed plan (q111's staged funnel) passes `false`: there the
     * consumers' copies of the upstream pipeline deduplicate via exchange
     * reuse inside ONE execution, and a checkpoint both severs that reuse
-    * and pays an extra full materialization of the composed plan
-    * (measured 4.6× worse on q111; the default measured −25% on q108). */
+    * and pays an extra full materialization of the composed plan. Timed
+    * through Bench's protocol (noop sink, median of 3) at sf0.1 on 4
+    * cores, two rounds in one session: q108 took 1.28/0.78 s with the
+    * checkpoint and 1.52/1.66 s without; q111 took 12.3/9.1 s with it
+    * and 10.6/9.7 s without, a split inside the session's drift. */
   def budgetSelection(df: DataFrame, idCol: String, textCol: String,
       fracE6: Long, checkpointStats: Boolean = true): DataFrame = {
     // ONE quality scan for all three consumers (bands aggregate + the two

@@ -626,7 +626,7 @@ object DedupQueries extends QueryModule {
         // funnel itself — its copies across the selection's consumers
         // deduplicate via exchange reuse in ONE execution, where a stats
         // checkpoint severs the reuse and re-materializes the funnel
-        // (measured 4.6× worse; see budgetSelection scaladoc)
+        // (see budgetSelection scaladoc for the timings)
         val sel = Curation.budgetSelection(
             staged.filter(col("g_all") === 1L).select(col("doc_id"), col("text")),
             "doc_id", "text", SelFracE6, checkpointStats = false)
